@@ -33,7 +33,7 @@ from tslib_spark.functions import text as T
 from tslib_spark.functions.scalar import normalize_expr, rmse_agg, rmse_hidden
 from tslib_spark.kernels.rsc import control_weights, prepare_panel, rsc_fit
 from tslib_spark.kernels.svd_kernel import ModelConfig, fit_transform, forecast
-from tslib_spark.operators.dedup import exact_dedup, near_dup_minhash, simhash
+from tslib_spark.operators.dedup import exact_dedup, near_dup_minhash
 from tslib_spark.operators.downsample import downsample, tier_chain
 from tslib_spark.operators.gapfill import densify_grid, interpolate_linear, middle_fill
 from tslib_spark.operators.rollup import rollup

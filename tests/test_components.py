@@ -78,6 +78,12 @@ def test_nonconvergence_raises(spark):
         connected_components(pairs, max_iter=1)
 
 
+def test_empty_checkpoint_dir_rejected(spark):
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        connected_components(pairs, checkpoint_dir="")
+
+
 def test_dedup_keep_canonical(spark):
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(8)], "doc_id long, text string"

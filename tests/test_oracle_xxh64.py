@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from tslib_spark.operators.dedup import near_dup_minhash, simhash
+from tslib_spark.operators.dedup import near_dup_minhash, simhash_agg
 from tslib_spark.oracle.textdedup import near_dup_minhash_ref, simhash_ref
 from tslib_spark.oracle.xxh64 import Int32, spark_xxhash64
 
@@ -41,7 +41,7 @@ def test_dedup_reference_pipelines_bitexact(spark):
     pdf = docs.select("doc_id", "text").toPandas()
     doc_list = [(int(i), t) for i, t in pdf.itertuples(index=False)]
 
-    got_sim = simhash(docs.select("doc_id", "text"), "text").select("doc_id", "simhash").toPandas()
+    got_sim = simhash_agg(docs, "doc_id", "text").toPandas()
     want_sim = {i: simhash_ref(t) for i, t in doc_list}
     assert all(want_sim[int(r.doc_id)] == int(r.simhash) for r in got_sim.itertuples())
 

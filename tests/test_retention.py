@@ -45,6 +45,15 @@ def test_materialize_chain_and_readback(spark, store_root, minute_source):
     assert (cp["status"] == "done").all()
     assert (cp["checksum"] != 0).any()
     assert (cp["times_updated"] == 1).all()
+    # per-partition checksums and the whole-tier checksum share one row
+    # hash: the partition sums add up to the tier sum (both wrapped to int64)
+    wrap = lambda v: ((v + 2**63) % 2**64) - 2**63  # noqa: E731
+    for tier in ("minute", "week"):
+        stored = store.read_tier(tier)
+        parts = store._partition_checksums(store._with_part_key(stored, tier))
+        assert wrap(sum(c for _, c in parts.values())) == wrap(
+            tier_state_checksum(stored, KEYS)
+        )
 
 
 def test_resume_after_kill(spark, store_root, minute_source):
@@ -99,8 +108,11 @@ def test_retention_expires_and_is_terminal(spark, store_root, minute_source):
     store = TierStore(spark, store_root, KEYS)
     store.materialize_chain(minute_source)
     n_before = store.read_tier("minute").count()
-    expired = store.retention_pass("minute", expire_before="2024-01-08")
+    gens_before = store.checkpoint.generation_paths()
+    expired = store.retention_pass("minute", "2024-01-08", manifest_retain_last=100)
     assert len(expired) == 7
+    # all expiries land in ONE manifest write, not one per partition
+    assert len(store.checkpoint.generation_paths()) == len(gens_before) + 1
     remaining = store.read_tier("minute")
     assert remaining.count() < n_before
     assert remaining.select(F.min("bucket_ts")).collect()[0][0].strftime("%Y-%m-%d") >= "2024-01-08"

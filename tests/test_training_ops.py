@@ -12,7 +12,7 @@ from tslib_spark.functions import text as T
 from tslib_spark.operators.dedup import (
     exact_dedup,
     near_dup_minhash,
-    simhash,
+    simhash_agg,
     simhash_near_dups,
 )
 from tslib_spark.operators.multimodal import (
@@ -85,16 +85,16 @@ def test_lsh_bucket_cap_defuses_boilerplate_bucket(spark):
     assert (200, 201) in found
     assert not any(a < 120 and b < 120 for a, b in found)
 
-    from tslib_spark.operators.dedup import minhash_signature, shingles
+    from tslib_spark.operators.dedup import minhash_signature_agg, shingles
 
     sh = shingles(df.select("doc_id", "text"), "text", 2)
-    mh = minhash_signature(sh, num_hashes=64)
+    mh = minhash_signature_agg(sh, "doc_id", num_hashes=64)
     over = lsh_oversized_buckets(mh, bands=32, rows_per_band=2, max_bucket=50).toPandas()
     assert len(over) >= 1 and (over["bucket_count"] == 120).all()
 
 
 def test_simhash_hamming_close_for_near_dups(spark, docs):
-    sh = simhash(docs, "text").cache()
+    sh = simhash_agg(docs, "doc_id", "text").cache()
     dups = simhash_near_dups(sh, "doc_id", max_hamming=16, blocks=4).toPandas()
     # identical docs → hamming 0
     zero = dups[dups["hamming"] == 0]
@@ -110,11 +110,8 @@ def test_hyperplane_signature_arrow_bitidentical_to_expression(spark):
     float fold), across multiple bands and odd dims."""
     from pyspark.sql import functions as F
 
-    from tslib_spark.operators.similarity import (
-        hyperplane_signature,
-        hyperplane_signatures_arrow,
-        make_planes,
-    )
+    from tslib_spark.operators.similarity import hyperplane_signatures_arrow, make_planes
+    from tslib_spark.oracle.folds import hyperplane_signature
 
     rng = np.random.default_rng(77)
     dim, n_rows, n_bands = 23, 500, 3
@@ -220,19 +217,6 @@ def test_text_functions(spark):
     assert out.loc[1, "q"] > out.loc[3, "q"]
     assert out.loc[3, "punct"] > 0.2
     assert out.loc[3, "bpe"] >= 4
-
-
-def test_rolling_fingerprints_detect_shared_window(spark):
-    a = "one two three four five six seven eight nine ten"
-    b = "ZZZ two three four five six seven eight nine ten"  # shares 8-gram windows
-    df = spark.createDataFrame([(1, a), (2, b)], "id long, t string")
-    fps = df.select("id", F.explode(T.rolling_fingerprints(F.col("t"), 8)).alias("fp"))
-    shared = (
-        fps.alias("x")
-        .join(fps.alias("y"), (F.col("x.fp") == F.col("y.fp")) & (F.col("x.id") < F.col("y.id")))
-        .count()
-    )
-    assert shared >= 1
 
 
 def test_multimodal_plumbing(spark):

@@ -22,19 +22,25 @@ LANG_MARKERS = {
 }
 
 
+# Java regex \s: the characters split() and trim() below treat as space
+_WS_CHARS = " \t\n\x0b\f\r"
+
+
 def tokens(text: Column) -> Column:
-    """Whitespace tokenization (split on runs of whitespace)."""
-    return F.split(F.trim(text), "\\s+")
+    """Whitespace tokens: split on runs of Java ``\\s``, never an empty token.
+
+    Empty or whitespace-only text gives ``[]``; NULL stays NULL. Plain
+    codegen (no lambda), so callers can project it once and index into it.
+    """
+    t = F.trim(text, F.lit(_WS_CHARS))
+    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
+        F.split(t, f"[{_WS_CHARS}]+")
+    )
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace token count, consistent with tokens(): splits on runs of
-    any whitespace, so tabs/newlines/multi-space runs count one boundary.
-    (An earlier length-arithmetic form counted single ASCII spaces only and
-    disagreed with tokens()/mean_token_len on real text.)
-    """
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, "\\s+")))
+    """Number of ``tokens(text)``; 0 for empty or whitespace-only text."""
+    return F.size(tokens(text))
 
 
 def bpe_ish_token_count(text: Column) -> Column:
@@ -64,13 +70,6 @@ def digit_ratio(text: Column) -> Column:
     return n_digit.cast("double") / F.greatest(F.length(text), F.lit(1)).cast("double")
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = tokens(F.lower(text))
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
 def mean_token_len(text: Column) -> Column:
     toks = tokens(text)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -96,7 +95,7 @@ def lang_guess(text: Column) -> Column:
     Returns 'und' when nothing matches. Ties break by a fixed language
     order (en, de, fr, es, zh) — deterministic.
     """
-    toks = F.split(F.lower(text), "\\s+")
+    toks = tokens(F.lower(text))
     scores = []
     for lang in ["en", "de", "fr", "es", "zh"]:
         markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
@@ -112,13 +111,3 @@ def fingerprint(text: Column) -> Column:
     """64-bit exact-content fingerprint (xxhash64 of the raw bytes)."""
     return F.xxhash64(text)
 
-
-def rolling_fingerprints(text: Column, window_tokens: int = 8) -> Column:
-    """Winnowing-style rolling fingerprints: hash of every ``window_tokens``-
-    gram, for near-dup detection at sub-document granularity."""
-    toks = tokens(text)
-    n = F.size(toks)
-    starts = F.sequence(F.lit(1), F.greatest(n - F.lit(window_tokens - 1), F.lit(1)))
-    return F.transform(
-        starts, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, window_tokens)))
-    )

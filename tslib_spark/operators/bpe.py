@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tslib_spark.functions.text import tokens
+
 __all__ = ["bpe_train", "bpe_encode", "END_OF_WORD"]
 
 END_OF_WORD = "</w>"
@@ -40,9 +42,8 @@ END_OF_WORD = "</w>"
 
 def _word_freq(df: DataFrame, text_col: str, lowercase: bool, max_words: int | None) -> DataFrame:
     text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    toks = F.filter(F.split(F.trim(text), "\\s+"), lambda t: F.length(t) > 0)
     words = (
-        df.select(F.explode(toks).alias("word"))
+        df.select(F.explode(tokens(text)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )

@@ -28,7 +28,10 @@ truncated, NOT resilient to executor loss), or pass a reliable
 ``checkpoint_dir`` for fault-tolerant iteration on a real cluster. This
 materialization is inherent to iterative convergence testing, not hidden:
 the function runs one small action per round (edge-set fingerprint) to
-detect the fixpoint.
+detect the fixpoint. Invariant: a full action follows every lazy
+checkpoint — the local checkpoint is marked lazily and that fingerprint
+collect is what materializes it, so no round reads an unmaterialized
+checkpoint.
 
 Reference parity note: the reference engine has no graph operator — this
 extends its dedup surface the way its pipeline docs assume a downstream
@@ -130,6 +133,8 @@ def connected_components(
     materialized (see module docstring) and fixpoint-tested via an
     edge-set fingerprint; raises on non-convergence within ``max_iter``.
     """
+    if checkpoint_dir == "":
+        raise ValueError("checkpoint_dir must be a directory path or None, not ''")
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -139,7 +144,7 @@ def connected_components(
         # the job after the first action); localCheckpoint is marked lazily
         # so the fingerprint collect that always follows doubles as the
         # materializing action — one job per round instead of two
-        if checkpoint_dir:
+        if checkpoint_dir is not None:
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=False)
 

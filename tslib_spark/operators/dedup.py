@@ -5,16 +5,18 @@ Four families, all shuffle-conscious:
 - **Exact**: hash-groupBy on content fingerprint. One shuffle on a 64-bit
   key; at 10^12 docs the shuffle carries (fingerprint, min_id, count) after
   map-side combine — tiny.
-- **MinHash + LSH**: shingle → per-shingle hashes → signature (array_min per
-  hash seed, all JVM expressions, zero shuffle) → band buckets → self-join
-  within buckets only. The band join is the only shuffle, on (band, hash) —
-  the classic sub-quadratic near-dup path.
+- **MinHash + LSH**: shingle → per-shingle hashes → signature (codegen
+  min-aggregate per hash seed, no Python) → band buckets → self-join
+  within buckets only, on (band, hash) — the classic sub-quadratic
+  near-dup path.
 - **SimHash**: 64-bit majority-of-token-hash-bits signature; near-dups =
   small Hamming distance within LSH-style bit-block buckets.
 - **Exact n-gram Jaccard**: the verifier for candidate pairs (array
   intersect/union on shingle sets).
 
-Embedding-cosine near-dup lives in similarity.py.
+Embedding-cosine near-dup lives in similarity.py. The higher-order fold
+forms of the signatures, kept as test references, live in
+``tslib_spark/oracle/folds.py``.
 """
 
 from __future__ import annotations
@@ -43,15 +45,14 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(
-    df: DataFrame, text_col: str, n: int = 3, out_col: str = "shingles", hashed: bool = True
-) -> DataFrame:
-    """Distinct word n-gram set per doc — pure array expressions, no explode.
+def shingles(df: DataFrame, text_col: str, n: int = 3, out_col: str = "shingles") -> DataFrame:
+    """Distinct word n-gram set per doc as 64-bit shingle hashes — pure
+    array expressions, no explode.
 
-    ``hashed=True`` (default) stores 64-bit shingle hashes instead of the
-    gram strings: downstream signature/verify joins then move 8-byte longs
-    instead of multi-word strings — a large shuffle-volume cut at corpus
-    scale, with negligible collision probability for exact-Jaccard use.
+    Hashes instead of gram strings: downstream signature/verify joins move
+    8-byte longs instead of multi-word strings — a large shuffle-volume cut
+    at corpus scale, with negligible collision probability for
+    exact-Jaccard use.
     """
     # Materialize the token array in its own projection first: an inline
     # ``split`` is re-evaluated for EVERY transform element (O(n²) regex
@@ -61,37 +62,8 @@ def shingles(
     toked = df.withColumn("_sh_toks", tokens(F.col(text_col)))
     toks = F.col("_sh_toks")
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    if hashed:
-        grams = F.transform(
-            starts, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n)))
-        )
-    else:
-        grams = F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+    grams = F.transform(starts, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))))
     return toked.withColumn(out_col, F.array_distinct(grams)).drop("_sh_toks")
-
-
-def minhash_signature(
-    df: DataFrame, shingle_col: str = "shingles", num_hashes: int = 64, seed: int = 42,
-    out_col: str = "minhash",
-) -> DataFrame:
-    """num_hashes-wide MinHash signature: min over xxhash64(shingle, seed_i).
-
-    Entirely JVM-side column expressions — the signature costs no shuffle
-    and no Python.
-    """
-    # single pass over the shingle array: fold into a num_hashes-wide array
-    # of running minima (vs. num_hashes separate transforms = num_hashes
-    # passes — 10x+ slower on long docs)
-    seeds = F.sequence(F.lit(seed), F.lit(seed + num_hashes - 1))
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
-    sig = F.aggregate(
-        F.col(shingle_col),
-        init,
-        lambda acc, s: F.zip_with(
-            acc, F.transform(seeds, lambda i: F.xxhash64(s, i)), lambda a, b: F.least(a, b)
-        ),
-    )
-    return df.withColumn(out_col, sig)
 
 
 def minhash_signature_agg(
@@ -102,23 +74,25 @@ def minhash_signature_agg(
     seed: int = 42,
     out_col: str = "minhash",
 ) -> DataFrame:
-    """(id, minhash) via explode + codegen min-aggregate — value-identical
-    to :func:`minhash_signature` (pytest-pinned), several times faster.
+    """(id, minhash): min over ``xxhash64(shingle, seed_i)`` per seed, via
+    explode + codegen min-aggregate. Value-identical to the higher-order
+    fold reference ``tslib_spark.oracle.folds.minhash_signature``
+    (pytest-pinned), several times faster.
 
-    The higher-order fold in ``minhash_signature`` runs interpreted lambda
-    machinery (3 array allocations per shingle per row); here each shingle
-    row evaluates ``num_hashes`` codegen ``xxhash64`` + ``min`` aggregate
-    expressions. A doc's shingles live in one row, so map-side partial
-    aggregation collapses everything before the exchange — the shuffle
-    carries one (id, num_hashes × long) row per doc per partition.
+    The fold runs interpreted lambda machinery (3 array allocations per
+    shingle per row); here each shingle row evaluates ``num_hashes``
+    codegen ``xxhash64`` + ``min`` aggregate expressions. A doc's shingles
+    live in one row, so map-side partial aggregation collapses everything
+    before the exchange — the shuffle carries one (id, num_hashes × long)
+    row per doc per partition.
 
-    Hash-input parity with the fold path: the fold hashes
+    Hash-input parity with the fold: the fold hashes
     ``(shingle, seed_i)`` where ``seed_i`` is an element of
     ``sequence(lit(seed), ...)`` — IntegerType — so the literal here must
     stay an int32 literal too (xxhash64 hashes int and long differently).
     Docs whose shingle array is NULL (null text) keep a NULL signature via
-    the left join, exactly like the fold path. (A doc with an EMPTY shingle
-    array would get NULL here vs the fold path's max-long fill — ``shingles``
+    the left join, exactly like the fold. (A doc with an EMPTY shingle
+    array would get NULL here vs the fold's max-long fill — ``shingles``
     never produces an empty array, so the pipeline can't hit that case.)
     """
     exploded = df.select(F.col(id_col), F.explode(shingle_col).alias("_s"))
@@ -246,36 +220,22 @@ def near_dup_minhash(
     threshold: float = 0.8,
     seed: int = 42,
     max_bucket: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band → verify.
 
     The shingle set feeds three plan branches (signature + both verify
-    sides), so with ``materialize=True`` (default) it is persisted once and
-    the verified pairs are EAGERLY computed to executor storage
-    (``localCheckpoint``) before the shingle cache is released. That is an
-    action, not a lazy transform: the full pair set is pinned to executor
-    disk and its lineage is cut (no recovery past this point if executors
-    are lost) — the right trade for a dedup sweep whose output is consumed
-    repeatedly, and the cost is visible here instead of hidden.
-
-    ``materialize=False`` returns a fully lazy, lineage-preserving plan
-    with no persist and no executor-storage footprint; the shingle subtree
-    is recomputed per branch (Catalyst may still reuse the exchange). Use
-    it when composing into a larger plan or writing straight to a sink.
+    sides), so it is persisted once and the verified pairs are EAGERLY
+    computed to executor storage (``localCheckpoint``) before the shingle
+    cache is released. That is an action, not a lazy transform: the full
+    pair set is pinned to executor disk and its lineage is cut (no recovery
+    past this point if executors are lost) — the right trade for a dedup
+    sweep whose output is consumed repeatedly, and the cost is visible here
+    instead of hidden.
 
     ``max_bucket`` caps LSH bucket size against adversarial skew (see
     lsh_candidate_pairs)."""
     rows_per_band = num_hashes // bands
-    projected = df.select(id_col, text_col)
-    if not materialize:
-        sh = shingles(projected, text_col, n)
-        mh = minhash_signature_agg(sh, id_col, num_hashes=num_hashes, seed=seed)
-        cands = lsh_candidate_pairs(
-            mh, id_col, bands=bands, rows_per_band=rows_per_band, max_bucket=max_bucket
-        )
-        return jaccard_verify(cands, sh, id_col, threshold=threshold)
-    sh = shingles(projected, text_col, n).persist()
+    sh = shingles(df.select(id_col, text_col), text_col, n).persist()
     try:
         mh = minhash_signature_agg(sh, id_col, num_hashes=num_hashes, seed=seed)
         cands = lsh_candidate_pairs(
@@ -288,56 +248,19 @@ def near_dup_minhash(
     return out
 
 
-def simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
-    """64-bit SimHash: bit b = majority vote of token-hash bit b.
-
-    Implemented as 64 JVM aggregate expressions over the token array —
-    no shuffle, no Python. Weight = token frequency (aggregate over all
-    occurrences, not the distinct set).
-    """
-    # One pass over the token array folding a 64-wide vote vector, then one
-    # pass packing sign bits (vs. 64 separate aggregates = 64 passes over
-    # the tokens). SQL-expression form: the Python F.shiftright wrapper
-    # only takes a literal shift amount, while the SQL function accepts a
-    # column — inside higher-order lambdas we need the latter.
-    sim = F.expr(
-        f"""
-        aggregate(
-          zip_with(
-            aggregate(
-              split(trim({text_col}), '\\\\s+'),
-              array_repeat(0, 64),
-              (acc, t) -> zip_with(
-                acc,
-                transform(sequence(0, 63),
-                          b -> cast(shiftright(xxhash64(t), b) & 1L as int) * 2 - 1),
-                (a, v) -> a + v)),
-            sequence(0, 63),
-            (v, b) -> struct(v as v, b as b)),
-          cast(0 as bigint),
-          (acc, x) -> acc + CASE
-              WHEN x.v > 0 AND x.b = 63 THEN cast({-(2**63)} as bigint)
-              WHEN x.v > 0 THEN shiftleft(cast(1 as bigint), x.b)
-              ELSE cast(0 as bigint) END)
-        """
-    )
-    return df.withColumn(out_col, sim)
-
-
 def simhash_agg(
     df: DataFrame, id_col: str, text_col: str, out_col: str = "simhash"
 ) -> DataFrame:
-    """(id, simhash) via explode + 64 codegen vote aggregates — value-
-    identical to :func:`simhash` (pytest-pinned), several times faster.
+    """(id, simhash): 64-bit SimHash, bit b = majority vote of bit b over
+    the hashes of every token occurrence (frequency-weighted).
 
-    The expression form folds a 64-wide vote array per TOKEN through
-    interpreted lambda machinery (a fresh 64-element array per token); here
-    each exploded token row evaluates 64 codegen shift/mask/sum aggregate
-    expressions, and map-side partial aggregation collapses a doc's votes
-    before the exchange (one (id, 64 × long) row per doc per partition).
-    Integer vote sums are exactly associative, and the bit-packing CASE
-    arithmetic is replicated verbatim, so outputs match bit-for-bit.
-    NULL text keeps a NULL simhash via the left join, like the fold path.
+    Explode + 64 codegen vote aggregates: each token row evaluates 64
+    shift/mask/sum expressions, and map-side partial aggregation collapses
+    a doc's votes before the exchange (one (id, 64 × long) row per doc per
+    partition). Value-identical to the higher-order fold reference
+    ``tslib_spark.oracle.folds.simhash`` (pytest-pinned), which allocates a
+    fresh 64-element vote array per token through interpreted lambdas.
+    A doc with no tokens has no votes and gets 0; NULL text stays NULL.
     """
     toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
     ex = toked.select(F.col(id_col), F.explode("_toks").alias("_t"))
@@ -360,7 +283,11 @@ def simhash_agg(
     for t in terms[1:]:
         packed_expr = packed_expr + t
     packed = votes.select(F.col(id_col), packed_expr.alias(out_col))
-    return df.select(id_col).join(packed, id_col, "left")
+    docs = df.select(F.col(id_col), F.col(text_col).isNull().alias("_null"))
+    return docs.join(packed, id_col, "left").select(
+        id_col,
+        F.when(~F.col("_null"), F.coalesce(F.col(out_col), F.lit(0).cast("long"))).alias(out_col),
+    )
 
 
 def simhash_near_dups(

@@ -12,7 +12,7 @@ never stored, because float division is where bit-drift would creep in.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tslib_spark.operators.rollup import STATE_COLS
@@ -64,14 +64,12 @@ def with_derived(tier_df: DataFrame) -> DataFrame:
     )
 
 
-def tier_state_checksum(tier_df: DataFrame, keys: list[str]) -> int:
-    """Order-insensitive checksum of a tier's full state.
-
-    Sum of per-row xxhash64 over the canonical string form — used by the
-    parity tests and the lineage table. Decimal state is rendered at fixed
-    scale so the checksum is representation-stable.
-    """
-    row_hash = F.xxhash64(
+def state_row_hash(keys: list[str]) -> Column:
+    """Per-row xxhash64 over the canonical string form of a tier-state row —
+    the one row hash behind every tier checksum (parity tests, lineage).
+    Decimal state is rendered at fixed scale so the hash is
+    representation-stable; changing it invalidates stored checkpoints."""
+    return F.xxhash64(
         *[F.col(k).cast("string") for k in keys],
         F.col("bucket_ts").cast("string"),
         F.col("cnt").cast("string"),
@@ -79,8 +77,17 @@ def tier_state_checksum(tier_df: DataFrame, keys: list[str]) -> int:
         F.col("val_min").cast("string"),
         F.col("val_max").cast("string"),
     )
-    out = tier_df.select(F.sum(row_hash.cast("decimal(38,0)")).alias("chk")).collect()[0][0]
+
+
+def tier_state_checksum(tier_df: DataFrame, keys: list[str]) -> int:
+    """Order-insensitive checksum of a tier's full state: the sum of
+    ``state_row_hash`` over all rows (unbounded, as a decimal)."""
+    row_hash = state_row_hash(keys).cast("decimal(38,0)")
+    out = tier_df.select(F.sum(row_hash).alias("chk")).collect()[0][0]
     return int(out) if out is not None else 0
 
 
-__all__ = ["TIERS", "downsample", "tier_chain", "with_derived", "tier_state_checksum", "STATE_COLS"]
+__all__ = [
+    "TIERS", "downsample", "tier_chain", "with_derived", "state_row_hash",
+    "tier_state_checksum", "STATE_COLS",
+]

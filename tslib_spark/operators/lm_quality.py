@@ -38,6 +38,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tslib_spark.functions.text import tokens
+
 __all__ = [
     "ngram_lm_train",
     "lm_score",
@@ -51,12 +53,6 @@ __all__ = [
 _I64_MIN = -(1 << 63)
 _TWO63 = float(1 << 63)
 _TWO64 = float(1 << 64)
-
-
-def _toks(text: Column, lowercase: bool) -> Column:
-    """Whitespace tokens, empties dropped (split("") yields [""] otherwise)."""
-    t = F.lower(text) if lowercase else text
-    return F.filter(F.split(F.trim(t), "\\s+"), lambda p: F.length(p) > 0)
 
 
 def _gram_at(toks: Column, i: Column, order: int) -> Column:
@@ -107,7 +103,8 @@ def ngram_lm_train(
         raise ValueError(f"order must be 1..3, got {order}")
     # materialize the token array once per row first — an inline split is
     # re-evaluated per transform element (O(n²) regex splits per doc, r7)
-    toked = df.select(_toks(F.col(text_col), lowercase).alias("_toks"))
+    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+    toked = df.select(tokens(text).alias("_toks"))
     toks = F.col("_toks")
     pieces = []
     for k in range(1, order + 1):
@@ -132,7 +129,6 @@ def lm_score(
     alpha: float = 0.4,
     unk_prob: float | None = None,
     lowercase: bool = True,
-    broadcast_model: bool = False,
 ) -> DataFrame:
     """Per-document stupid-backoff score against a trained n-gram table.
 
@@ -163,7 +159,8 @@ def lm_score(
     # key so it can never match; collisions would need two corpus grams at
     # the same 64-bit value — negligible, and the string path remains the
     # pytest oracle cross-check.
-    toked = docs.select(F.col(id_col), _toks(F.col(text_col), lowercase).alias("_toks"))
+    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+    toked = docs.select(F.col(id_col), tokens(text).alias("_toks"))
     toks = F.col("_toks")
     gram_struct = F.transform(
         _positions(toks),
@@ -186,8 +183,6 @@ def lm_score(
         side = counts[k].select(
             F.xxhash64("gram").alias(f"g{k}"), F.col("count").alias(f"c{k}")
         )
-        if broadcast_model:
-            side = F.broadcast(side)
         pos = pos.join(side, f"g{k}", "left")
 
     w = Window.partitionBy(id_col).orderBy("pos")
@@ -247,7 +242,7 @@ def hashed_ngram_buckets(
     Pure codegen: xxhash64(seed, gram) pmod buckets."""
     if n < 1 or n > 3:
         raise ValueError(f"n must be 1..3, got {n}")
-    return _buckets_from_toks(_toks(text, lowercase), buckets, n, seed)
+    return _buckets_from_toks(tokens(F.lower(text) if lowercase else text), buckets, n, seed)
 
 
 def _buckets_from_toks(toks: Column, buckets: int, n: int, seed: int) -> Column:
@@ -271,7 +266,8 @@ def _buckets_from_toks(toks: Column, buckets: int, n: int, seed: int) -> Column:
 
 
 def _bucket_counts(df: DataFrame, text_col: str, buckets: int, n: int, seed: int, lowercase: bool) -> DataFrame:
-    toked = df.select(_toks(F.col(text_col), lowercase).alias("_toks"))
+    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+    toked = df.select(tokens(text).alias("_toks"))
     feats = _buckets_from_toks(F.col("_toks"), buckets, n, seed)
     return (
         toked.select(F.explode(feats).alias("bucket"))
@@ -335,7 +331,8 @@ def dsir_weights(
     ``buckets`` rows and always broadcast. Documents with no features keep
     weight 0.0.
     """
-    toked = df.select(F.col(id_col), _toks(F.col(text_col), lowercase).alias("_toks"))
+    text = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+    toked = df.select(F.col(id_col), tokens(text).alias("_toks"))
     feats = _buckets_from_toks(F.col("_toks"), buckets, n, seed)
     summed = (
         toked.select(F.col(id_col), F.explode(feats).alias("bucket"))

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tslib_spark.functions.text import token_count, tokens
+from tslib_spark.operators.substring import _window_hashes
 
 __all__ = ["dup_token_frac", "ngram_repetition", "repetition_signals"]
 
@@ -52,12 +53,7 @@ def _ngram_stats(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     hash collision (~L²/2⁶⁴ per doc — negligible, and verified against the
     gram-string oracle at the contract scale factors)."""
     toked = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-    total = F.size("_toks")
-    starts = F.sequence(F.lit(1), total - F.lit(n - 1))
-    gram_hashes = F.when(
-        total >= n, F.transform(starts, lambda i: F.xxhash64(F.slice("_toks", i, n)))
-    ).otherwise(F.array().cast("array<long>"))
-    grams = toked.select(F.col(id_col), F.explode(gram_hashes).alias("ngram"))
+    grams = toked.select(F.col(id_col), F.explode(_window_hashes("_toks", n)).alias("ngram"))
     hist = grams.groupBy(id_col, "ngram").agg(F.count(F.lit(1)).alias("cnt"))
     return hist.groupBy(id_col).agg(
         F.sum("cnt").alias("ngram_total"),

@@ -28,7 +28,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tslib_spark.operators.downsample import downsample
+from tslib_spark.operators.downsample import downsample, state_row_hash
 from tslib_spark.plans.lineage import CheckpointStore
 
 # partition granularity per tier: fine tiers partition daily, coarse weekly
@@ -128,19 +128,11 @@ class TierStore:
 
     def _partition_checksums(self, df_with_pk: DataFrame) -> dict[str, tuple[int, int]]:
         """{part_key: (rows, checksum)} — order-insensitive decimal hash sum."""
-        row_hash = F.xxhash64(
-            *[F.col(k).cast("string") for k in self.keys],
-            F.col("bucket_ts").cast("string"),
-            F.col("cnt").cast("string"),
-            F.col("val_sum").cast("string"),
-            F.col("val_min").cast("string"),
-            F.col("val_max").cast("string"),
-        )
         rows = (
             df_with_pk.groupBy("part_key")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(row_hash.cast("decimal(38,0)")).alias("chk"),
+                F.sum(state_row_hash(self.keys).cast("decimal(38,0)")).alias("chk"),
             )
             .collect()
         )
@@ -309,6 +301,11 @@ class TierStore:
         pass can't be recomputed, so they are integrity-checked against the
         checksum recorded in the checkpoint when they were materialized.
 
+        All expiries land in one manifest write, after every drop: an
+        'expired' row always means the bytes are gone. A pass killed between
+        the drops and that write leaves dropped partitions recorded as
+        'done', and the parity gate then blocks the next pass over them.
+
         After the parity-gated expiry commits, superseded metadata
         generations are pruned down to ``manifest_retain_last`` via the
         backend's ``expire_snapshots`` (Iceberg snapshot-expiry semantics;
@@ -353,12 +350,12 @@ class TierStore:
                         f"longer matches its recorded checksum"
                     )
 
-        expired = []
         for pk in candidates:
             self.backend.drop_partition(self.spark, tier, pk)
-            self.checkpoint.mark(tier, pk, "expired", 0, 0, 0)
-            expired.append(pk)
+        self.checkpoint.mark_many(
+            [{"tier": tier, "partition_key": pk, "status": "expired"} for pk in candidates]
+        )
         self.backend.expire_snapshots(
             self.spark, [tier], _time.time(), manifest_retain_last
         )
-        return expired
+        return candidates

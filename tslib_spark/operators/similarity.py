@@ -51,52 +51,17 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(vec_col, planes: np.ndarray):
-    """Bit signature: sign of <v, plane_j> per plane, packed into a long.
-
-    Pure-expression reference path: the production callers use
-    ``hyperplane_signatures_arrow`` (vectorized, bit-identical —
-    pytest-pinned against this function), because the higher-order
-    aggregate here runs O(planes × dim) *interpreted* lambda ops per row.
-    Kept as the independent cross-check and for one-off column use.
-
-    ``planes`` is a (n_planes, dim) numpy array shipped as ONE flat
-    ArrayType literal (a single Catalyst Literal node) — not ``n_planes ×
-    dim`` scalar literals, which at dim 768 × 16 planes would be a ~12k-node
-    expression tree that blows up analysis time and plan size before any
-    data moves. The per-plane dot product slices the flat literal inside a
-    higher-order aggregate; everything stays JVM-side.
-    """
-    n_planes, dim = planes.shape
-    flat = F.lit([float(x) for x in planes.ravel()])
-    # shiftleft()'s Python wrapper takes only a literal shift, so the
-    # per-bit weights ride along as a second array literal
-    powers = F.lit([1 << j for j in range(n_planes)])
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(n_planes - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, j: acc
-        + F.when(
-            F.aggregate(
-                F.zip_with(vec_col, F.slice(flat, j * dim + 1, dim), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            )
-            >= 0,
-            F.element_at(powers, j + 1),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-
-
 def make_planes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
     return np.random.default_rng(seed).normal(size=(n_planes, dim))
 
 
 def hyperplane_signatures_arrow(planes_per_band: list[np.ndarray]):
-    """Arrow batch path for hyperplane signatures: one pandas_udf computing
-    ALL bands' signatures per row, returned as ``array<long>``.
+    """Hyperplane signatures as one pandas_udf computing ALL bands'
+    signatures per row, returned as ``array<long>``: bit j of band b is
+    ``<v, plane_j> >= 0`` for that band's planes.
 
-    The expression path (``hyperplane_signature``) evaluates
+    The Catalyst-expression statement of the same signature (the test
+    reference ``tslib_spark.oracle.folds.hyperplane_signature``) evaluates
     O(bands × planes × dim) *interpreted* higher-order-lambda ops per row —
     at 768-dim production embeddings that is ~25k lambda evaluations per
     row, the single biggest CPU cost in the near-dup/kNN family. Here the
@@ -109,7 +74,7 @@ def hyperplane_signatures_arrow(planes_per_band: list[np.ndarray]):
     sign of a near-zero dot) — it folds over the dim axis in index order,
     vectorized across rows and planes. Every elementwise numpy op is the
     same IEEE-754 double multiply/add the JVM performs, so signatures are
-    bit-identical to the expression path (pytest-pinned)."""
+    bit-identical to the expression fold (pytest-pinned)."""
     from pyspark.sql.functions import pandas_udf
 
     bands = [np.ascontiguousarray(p, dtype=np.float64) for p in planes_per_band]
@@ -190,10 +155,9 @@ def ann_lsh_topk(
     k: int = 10,
     n_planes: int = 12,
     seed: int = 42,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k: scan only rows whose hyperplane bucket matches the
-    query's (plus Hamming-1 neighbor buckets when ``multiprobe``)."""
+    query's or is one of its Hamming-1 neighbors (multiprobe)."""
     planes = make_planes(len(query), n_planes, seed)
     vec = F.col(vec_col).cast("array<double>")
     sig_udf = hyperplane_signatures_arrow([planes])
@@ -204,7 +168,7 @@ def ann_lsh_topk(
     for j in range(n_planes):
         if float(planes[j] @ qv) >= 0:
             qsig |= 1 << j
-    probes = [qsig] + ([qsig ^ (1 << j) for j in range(n_planes)] if multiprobe else [])
+    probes = [qsig] + [qsig ^ (1 << j) for j in range(n_planes)]
     cand = with_sig.filter(F.col("_sig").isin(probes))
     return (
         cand.select(F.col(id_col), cosine_to_query(vec, query).alias("cosine"))
@@ -237,7 +201,7 @@ def cap_bucket_size(
     return kept, over
 
 
-def _banded_candidates(
+def _scored_candidates(
     df: DataFrame,
     vec_col: str,
     id_col: str,
@@ -246,34 +210,32 @@ def _banded_candidates(
     seed: int,
     n_bands: int,
     max_bucket: int | None,
-    materialize: bool,
 ) -> DataFrame:
-    """Deduped undirected candidate pairs (id_a < id_b) from the banded
-    hyperplane tables — the shared candidate stage of the near-dup/kNN
-    family.
+    """(id_a, id_b, cosine) for every deduped undirected candidate pair
+    (id_a < id_b) of the banded hyperplane tables — the shared candidate
+    and scoring stage of the near-dup/kNN family.
 
-    ``materialize=True`` pins the capped (id, band, sig) frame to executor
-    storage (``localCheckpoint`` — an eager action, lineage cut): it feeds
-    the bucket-cap aggregate AND both sides of the self-join, so a lazy
-    plan re-runs the signature UDF + explode up to six times (r7
-    measurement). The frame is 3 longs per (row × band) — executor-disk
-    cheap even at 10^9 rows. ``materialize=False`` keeps the fully lazy,
-    lineage-preserving plan."""
+    The banded (id, band, sig) frame is pinned to executor storage
+    (``localCheckpoint`` — an eager action, lineage cut): it feeds the
+    bucket-cap aggregate AND both sides of the self-join, so a lazy plan
+    re-runs the signature UDF + explode up to six times (r7 measurement).
+    The frame is 3 longs per (row × band) — executor-disk cheap even at
+    10^9 rows. Candidates are deduped BEFORE vectors are fetched, so the
+    k-band union never recomputes a cosine; vectors then rejoin by id (the
+    banded exchange carries only 8-byte ids + signatures, never the
+    embeddings)."""
     vec = F.col(vec_col).cast("array<double>")
     sig_udf = hyperplane_signatures_arrow(
         [make_planes(dim, n_planes, seed + j) for j in range(n_bands)]
     )
     banded = df.select(
         F.col(id_col).alias("_id"), F.posexplode(sig_udf(vec)).alias("_band", "_sig")
-    )
-    if materialize:
-        banded = banded.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     if max_bucket is not None:
         banded, _ = cap_bucket_size(banded, ["_band", "_sig"], max_bucket)
-        if materialize:
-            banded = banded.localCheckpoint(eager=True)
+        banded = banded.localCheckpoint(eager=True)
     l, r = banded.alias("l"), banded.alias("r")
-    return (
+    cand = (
         l.join(
             r,
             (F.col("l._band") == F.col("r._band"))
@@ -283,6 +245,10 @@ def _banded_candidates(
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
         .distinct()
     )
+    sides = df.select(F.col(id_col).alias("_id"), vec.alias("_v"), _norm(vec).alias("_n"))
+    a = sides.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na"))
+    b = sides.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
+    return _score_pairs_arrow(cand.join(a, "id_a").join(b, "id_b"), dim)
 
 
 def cosine_near_dup_pairs(
@@ -295,7 +261,6 @@ def cosine_near_dup_pairs(
     seed: int = 42,
     n_bands: int = 1,
     max_bucket: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """All embedding pairs with cosine ≥ threshold, LSH-bucketed.
 
@@ -306,29 +271,21 @@ def cosine_near_dup_pairs(
     probability per table is (1 - θ/π)^n_planes, so multiple bands are
     required for recall ≥ 0.9 — same machinery as MinHash banding.
 
-    Candidates are deduped on (id_a, id_b) BEFORE vectors are fetched, so
-    the k-band union never recomputes a cosine; vectors rejoin by id (the
-    banded exchange carries only 8-byte ids + signatures, never the
-    embeddings — at 10^9 × 768-dim that is the difference between shuffling
-    ids and shuffling the corpus).
+    Candidates are deduped on (id_a, id_b) BEFORE vectors are fetched and
+    the banded exchange carries only ids + signatures (see
+    ``_scored_candidates``) — at 10^9 × 768-dim that is the difference
+    between shuffling ids and shuffling the corpus.
 
     ``max_bucket`` guards the per-bucket self-join against adversarial
     skew (see cap_bucket_size). ``dim`` is explicit: probing it with
     ``df.first()`` would hide a full Spark job inside what reads as a lazy
-    transform. ``materialize=True`` (default) EAGERLY pins the banded
-    id/signature frame to executor storage so the signature UDF runs once
-    instead of once per plan branch (see ``_banded_candidates``; same
-    trade and default as ``near_dup_minhash``); pass ``False`` for a fully
-    lazy, lineage-preserving plan.
+    transform. The banded id/signature frame is EAGERLY pinned to executor
+    storage so the signature UDF runs once instead of once per plan branch
+    (same trade as ``near_dup_minhash``).
     """
-    vec = F.col(vec_col).cast("array<double>")
-    cand = _banded_candidates(
-        df, vec_col, id_col, dim, n_planes, seed, n_bands, max_bucket, materialize
+    scored = _scored_candidates(
+        df, vec_col, id_col, dim, n_planes, seed, n_bands, max_bucket
     )
-    sides = df.select(F.col(id_col).alias("_id"), vec.alias("_v"), _norm(vec).alias("_n"))
-    a = sides.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na"))
-    b = sides.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
-    scored = _score_pairs_arrow(cand.join(a, "id_a").join(b, "id_b"), dim)
     return scored.filter(F.col("cosine") >= threshold)
 
 
@@ -465,7 +422,6 @@ def ivf_topk(
 def pairwise_topk_per_row(
     df: DataFrame, vec_col: str, id_col: str, dim: int, k: int = 5, n_planes: int = 8,
     seed: int = 42, n_bands: int = 1, max_bucket: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """For each row, its k most-similar neighbors among its LSH-bucket
     peers — the batched kNN-graph builder (used for clustering/dedup
@@ -482,14 +438,9 @@ def pairwise_topk_per_row(
     at 10^9 × 768-dim the id-only exchange is the difference between
     shuffling ids and shuffling the corpus per band.
     """
-    vec = F.col(vec_col).cast("array<double>")
-    cand = _banded_candidates(
-        df, vec_col, id_col, dim, n_planes, seed, n_bands, max_bucket, materialize
+    scored = _scored_candidates(
+        df, vec_col, id_col, dim, n_planes, seed, n_bands, max_bucket
     )
-    sides = df.select(F.col(id_col).alias("_id"), vec.alias("_v"), _norm(vec).alias("_n"))
-    a = sides.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na"))
-    b = sides.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
-    scored = _score_pairs_arrow(cand.join(a, "id_a").join(b, "id_b"), dim)
     directed = scored.unionByName(
         scored.select(
             F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"), "cosine"

@@ -17,17 +17,20 @@ import re
 from tslib_spark.oracle.xxh64 import Int32, spark_xxhash64
 
 _LONG_MAX = 2**63 - 1
-_WS = re.compile(r"\s+")
+# Java regex \s (ASCII-only); Python's \s would also match Unicode spaces
+_WS_CHARS = " \t\n\x0b\f\r"
+_WS = re.compile(f"[{_WS_CHARS}]+")
 
 
 def tokens_ref(text: str) -> list[str]:
-    """split(trim(text), '\\s+') — Java regex \\s is ASCII-only; these
-    fixtures are ASCII so Python's re matches."""
-    return _WS.split(text.strip())
+    """functions.text.tokens: split on runs of Java \\s whitespace, never an
+    empty token; empty or whitespace-only text gives []."""
+    stripped = text.strip(_WS_CHARS)
+    return _WS.split(stripped) if stripped else []
 
 
 def shingles_ref(text: str, n: int = 3) -> list[int]:
-    """Distinct hashed word n-grams, mirroring dedup.shingles(hashed=True):
+    """Distinct hashed word n-grams, mirroring dedup.shingles:
     starts 1..max(len-n+1, 1); tail slices shorter than n join what's
     there (Spark slice semantics)."""
     toks = tokens_ref(text)
@@ -99,7 +102,8 @@ def near_dup_minhash_ref(
 
 def simhash_ref(text: str) -> int:
     """64-bit SimHash: per-bit majority vote over token hashes (frequency-
-    weighted — every occurrence votes), mirroring dedup.simhash."""
+    weighted — every occurrence votes), mirroring dedup.simhash_agg; 0 for
+    text with no tokens."""
     votes = [0] * 64
     for t in tokens_ref(text):
         h = spark_xxhash64(t) & ((1 << 64) - 1)

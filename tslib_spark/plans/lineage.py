@@ -33,16 +33,12 @@ COLUMNS = [
 
 
 class CheckpointStore:
-    def __init__(self, path: str, max_generations: int | None = None):
-        """``max_generations``: optional cap on retained ``.gen-*`` snapshot
-        files (oldest pruned on write). Default ``None`` keeps every
-        generation until an ``expire_snapshots`` pass prunes them — long-
-        running materialize-only deployments that never run
-        ``retention_pass``/``expire_snapshots`` should set a cap (or call
-        expiry periodically): each ``mark()`` snapshots the full manifest,
-        so unbounded generations cost O(P²) bytes over P partitions."""
+    def __init__(self, path: str):
+        """Each write snapshots the full manifest as a ``.gen-*`` file, so
+        callers batch their rows into one ``mark_many`` per pass: one write
+        per partition costs O(P²) generation bytes over P partitions.
+        ``expire_snapshots`` (sources/catalog.py) prunes old generations."""
         self.path = path
-        self.max_generations = max_generations
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def read(self) -> pd.DataFrame:
@@ -80,13 +76,6 @@ class CheckpointStore:
 
                 shutil.copy2(self.path, gen)
         os.replace(tmp, self.path)
-        if self.max_generations is not None:
-            gens = self.generation_paths()
-            for old in gens[: max(0, len(gens) - self.max_generations)]:
-                try:
-                    os.remove(old)
-                except OSError:
-                    pass
 
     def generation_paths(self) -> list[str]:
         """Superseded manifest generations, oldest first."""
@@ -108,28 +97,23 @@ class CheckpointStore:
         rows_out: int,
         checksum: int,
     ) -> None:
-        df = self.read()
-        mask = (df["tier"] == tier) & (df["partition_key"] == str(partition_key))
-        prev_updates = int(df.loc[mask, "times_updated"].max()) if mask.any() else 0
-        df = df[~mask]
-        new_row = pd.DataFrame(
+        """One-row ``mark_many``."""
+        self.mark_many(
             [
                 {
                     "tier": tier,
-                    "partition_key": str(partition_key),
+                    "partition_key": partition_key,
                     "status": status,
-                    "rows_in": int(rows_in),
-                    "rows_out": int(rows_out),
-                    "checksum": int(checksum),
-                    "times_updated": prev_updates + 1,
-                    "updated_at": time.time(),
+                    "rows_in": rows_in,
+                    "rows_out": rows_out,
+                    "checksum": checksum,
                 }
             ]
         )
-        self._write(new_row if df.empty else pd.concat([df, new_row], ignore_index=True))
 
     def mark_many(self, rows: list[dict]) -> None:
-        """Batch variant of mark() — one read/rewrite for many partitions."""
+        """Record many (tier, partition_key) rows in one read/rewrite; a
+        row replaces that key's previous row and bumps ``times_updated``."""
         df = self.read()
         out_rows = []
         for r in rows:
