@@ -278,3 +278,190 @@ def test_migrate_v1_state_chunks_dataframe(spark):
     for c in ("ts_blob", "cnt_blob", "sum_blob", "min_blob", "max_blob"):
         assert bytes(got[c]) == row[c], c
     assert got["_sid"] == 7 and got["n_points"] == 5
+
+
+# ---------------- batch decode ----------------
+
+_F64 = st.floats(allow_nan=True, allow_infinity=True, width=64)
+_SPECIAL = st.sampled_from([float("nan"), -0.0, 0.0, float("inf"), float("-inf"), 1.5])
+_I61 = st.integers(min_value=-(2**61), max_value=2**61)
+
+VALUE_SERIES = st.one_of(
+    st.just([]),
+    st.lists(_F64, min_size=1, max_size=2),
+    st.builds(lambda v, n: [v] * n, _F64, st.integers(1, 40)),  # constant
+    st.lists(_SPECIAL, min_size=1, max_size=30),
+    st.lists(_F64, min_size=3, max_size=60),
+)
+TS_SERIES = st.one_of(
+    st.just([]),
+    st.lists(_I61, min_size=1, max_size=2),
+    st.builds(  # regular grid
+        lambda t0, step, n: [t0 + step * i for i in range(n)],
+        st.integers(-(2**40), 2**40), st.integers(-(2**20), 2**20), st.integers(1, 40),
+    ),
+    st.lists(st.integers(0, 3), min_size=1, max_size=60).map(  # small dods
+        lambda g: list(np.cumsum(g) * 60)
+    ),
+    st.lists(_I61, min_size=3, max_size=60),  # 64-bit delta-of-deltas
+)
+
+
+def _multi_roundtrip(series, dtype, encode_multi, encode_one, decode_multi, as_bits):
+    """Encode the non-empty series with one ``encode_*_multi`` call (empty
+    ones with the single-series encoder, as stored), batch-decode the whole
+    list and compare bit-exactly."""
+    arrs = [np.asarray(s, dtype=dtype) for s in series]
+    full = [a for a in arrs if a.size]
+    starts = np.cumsum([0] + [a.size for a in full[:-1]]).astype(np.int64)
+    encoded = iter(encode_multi(np.concatenate(full), starts) if full else [])
+    blobs = [next(encoded) if a.size else encode_one(a) for a in arrs]
+    got, lens = decode_multi(blobs)
+    np.testing.assert_array_equal(lens, [a.size for a in arrs])
+    want = np.concatenate(arrs) if arrs else np.empty(0, dtype)
+    np.testing.assert_array_equal(as_bits(got), as_bits(want))
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(VALUE_SERIES, min_size=0, max_size=12))
+def test_values_multi_decode_roundtrip_property(series):
+    from tslib_spark.codec.gorilla import decode_values_multi, encode_values_multi
+
+    _multi_roundtrip(
+        series, np.float64, encode_values_multi, encode_values, decode_values_multi,
+        lambda a: a.view(np.uint64),
+    )
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(TS_SERIES, min_size=0, max_size=12))
+def test_timestamps_multi_decode_roundtrip_property(series):
+    from tslib_spark.codec.gorilla import decode_timestamps_multi, encode_timestamps_multi
+
+    _multi_roundtrip(
+        series, np.int64, encode_timestamps_multi, encode_timestamps,
+        decode_timestamps_multi, lambda a: a,
+    )
+
+
+def test_multi_decode_edge_blobs():
+    """The empty values blob (b""), the bare-header empty timestamp blob and
+    1- and 2-point timestamp blobs decode inside a batch."""
+    from tslib_spark.codec.gorilla import decode_timestamps_multi, decode_values_multi
+
+    ts = [[], [7], [5, -3], [], [0, 60, 120, 200]]
+    blobs = [encode_timestamps(np.asarray(t, dtype=np.int64)) for t in ts]
+    assert len(blobs[0]) == 4  # bare header
+    got, lens = decode_timestamps_multi(blobs)
+    assert lens.tolist() == [0, 1, 2, 0, 4]
+    assert got.tolist() == [7, 5, -3, 0, 60, 120, 200]
+
+    vblobs = [b"", encode_values(np.array([2.5])), b"", encode_values(np.array([1.0, -0.0]))]
+    got, lens = decode_values_multi(vblobs)
+    assert lens.tolist() == [0, 1, 0, 2]
+    np.testing.assert_array_equal(
+        got.view(np.uint64), np.array([2.5, 1.0, -0.0]).view(np.uint64)
+    )
+    assert decode_values_multi([])[0].size == 0
+    assert decode_timestamps_multi([])[1].size == 0
+
+
+def test_multi_decode_rejects_v1_blob_mid_batch():
+    from tslib_spark.codec.gorilla import decode_timestamps_multi, decode_values_multi
+
+    vals = [encode_values(np.array([1.0, 2.0, 2.0])) for _ in range(3)]
+    vals[1] = _strip_version(vals[1])
+    with pytest.raises(ValueError, match="version"):
+        decode_values_multi(vals)
+    ts = [encode_timestamps(np.array([0, 60, 90], dtype=np.int64)) for _ in range(3)]
+    ts[1] = _strip_version(ts[1])
+    with pytest.raises(ValueError, match="version"):
+        decode_timestamps_multi(ts)
+
+
+def test_multi_decode_rejects_truncated_blob():
+    """A blob shorter than its header and sidecar say must raise, not read
+    its neighbour's bytes."""
+    from tslib_spark.codec.gorilla import decode_timestamps_multi, decode_values_multi
+
+    good = encode_values(np.array([1.0, 3.0, -2.0]))
+    with pytest.raises(ValueError, match="corrupt"):
+        decode_values_multi([good[:-1], good])
+    tgood = encode_timestamps(np.array([0, 60, 61, 500], dtype=np.int64))
+    with pytest.raises(ValueError, match="corrupt"):
+        decode_timestamps_multi([tgood[:-1], tgood])
+
+
+# ---------------- state chunks ----------------
+
+STATE_KEYS = ["url", "lang"]
+
+
+@pytest.fixture(scope="module")
+def minute_tier(spark):
+    from tslib_spark.datagen import generate_pages
+    from tslib_spark.operators import rollup_pages
+
+    pages = generate_pages(spark, n_events=4000, n_urls=60, n_minutes=3 * 1440, seed=3)
+    return rollup_pages(pages).cache()
+
+
+def _chunk_rows(df):
+    return sorted(
+        (r["url"], r["lang"], r["chunk_id"], r["n_points"], r["ts_start"],
+         *(bytes(r[b]) for b in ("ts_blob", "cnt_blob", "sum_blob", "min_blob", "max_blob")))
+        for r in df.collect()
+    )
+
+
+def test_state_chunk_encode_independent_of_batch_size(spark, minute_tier):
+    """The streaming encode carries a (sid, window) run across Arrow
+    batches: 7-row batches give the same chunk rows as the default, one
+    row per (keys, chunk_id), and the decoded tier is the input tier."""
+    from tslib_spark.codec.statechunks import decode_state_chunks, encode_state_chunks
+    from tslib_spark.operators.downsample import tier_state_checksum
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = _chunk_rows(encode_state_chunks(minute_tier, STATE_KEYS))
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        small_df = encode_state_chunks(minute_tier, STATE_KEYS)
+        small = _chunk_rows(small_df)
+        back = decode_state_chunks(small_df, STATE_KEYS)
+        assert tier_state_checksum(back, STATE_KEYS) == tier_state_checksum(
+            minute_tier, STATE_KEYS
+        )
+    finally:
+        spark.conf.set(conf, old)
+    assert small == default
+    assert len({r[:3] for r in default}) == len(default)
+    assert max(r[3] for r in default) > 7  # some run does span batches
+    assert sum(r[3] for r in default) == minute_tier.count()
+
+
+def test_decode_state_chunks_rejects_point_count_mismatch(spark):
+    """A +1 in one row and a -1 in another must not cancel out."""
+    from tslib_spark.codec.statechunks import decode_state_chunks
+
+    def row(chunk_id, n, cnt_n, n_points=None):
+        minutes = np.arange(n, dtype=np.int64) + chunk_id * 1440
+        ones = np.ones(n)
+        return {
+            "url": "u", "lang": "en", "chunk_id": chunk_id,
+            "n_points": n if n_points is None else n_points, "ts_start": int(minutes[0]),
+            "ts_blob": encode_timestamps(minutes),
+            "cnt_blob": encode_timestamps(np.ones(cnt_n, dtype=np.int64)),
+            "sum_blob": encode_timestamps(ones.astype(np.int64)),
+            "min_blob": encode_values(ones),
+            "max_blob": encode_values(ones),
+        }
+
+    import pandas as pd
+
+    ok = spark.createDataFrame(pd.DataFrame([row(0, 3, 3), row(1, 4, 4)]))
+    assert decode_state_chunks(ok, ["url", "lang"]).count() == 7
+    for rows in ([row(0, 3, 4), row(1, 4, 3)], [row(0, 3, 3, n_points=2)]):
+        bad = spark.createDataFrame(pd.DataFrame(rows))
+        with pytest.raises(Exception, match="corrupt state chunk"):
+            decode_state_chunks(bad, ["url", "lang"]).collect()

@@ -140,3 +140,21 @@ def test_mrsc_two_metrics(spark):
     for mi, name in enumerate(names):
         sub = pred[pred["metric"] == name].sort_values("year")["prediction"].to_numpy()
         assert linalg.rmse(sub, metrics[mi][2][pre:]) < 0.5
+
+
+def test_prepare_panel_ranks_without_single_partition(spark):
+    """The time rank needs no unpartitioned window: the executed plan has
+    no SinglePartition exchange, and ranks are still 0..T-1 in time order
+    (input unsorted, gaps in the time axis)."""
+    years = [2001, 1990, 1995, 2020, 1990, 2001]
+    pdf = pd.DataFrame(
+        {"unit": [f"u{i % 2}" for i in range(len(years))], "year": years,
+         "value": np.arange(len(years), dtype=float)}
+    )
+    prepared = prepare_panel(spark.createDataFrame(pdf), "unit", "year", "value")
+    plan = prepared._jdf.queryExecution().executedPlan().toString()
+    assert "SinglePartition" not in plan, plan
+    got = prepared.toPandas()
+    rank_of = {1990: 0, 1995: 1, 2001: 2, 2020: 3}
+    want = sorted((u, rank_of[y], v) for u, y, v in pdf.itertuples(index=False))
+    assert sorted(got[["series_key", "bucket_idx", "value"]].itertuples(index=False, name=None)) == want

@@ -7,10 +7,11 @@ tier per the north star ("raw 1-minute buckets compressed with Gorilla XOR
 value encoding + delta-of-delta timestamps inside Arrow-backed binary
 columns").
 
-Encode/decode are grouped Arrow kernels (one Python crossing per series
-group); chunks are capped at CHUNK_SIZE points so a head-url series becomes
-many bounded rows rather than one unbounded blob — the same skew-safety
-argument as the kernel group-size assertion.
+Encode is a grouped Arrow kernel over hash buckets of (series, window);
+decode is one batch decode per blob column per Arrow batch. Chunks are
+capped at CHUNK_SIZE points so a head-url series becomes many bounded
+rows rather than one unbounded blob — the same skew-safety argument as
+the kernel group-size assertion.
 """
 
 from __future__ import annotations
@@ -22,8 +23,8 @@ from pyspark.sql import functions as F
 
 from tslib_spark.codec.gorilla import (
     CHUNK_SIZE,
-    decode_timestamps,
-    decode_values,
+    decode_timestamps_multi,
+    decode_values_multi,
     encode_timestamps_multi,
     encode_values_multi,
 )
@@ -192,19 +193,16 @@ def decode_chunks(
     slim = chunks.select(sid.alias("_sid"), "ts_blob", "val_blob")
 
     def _decode(iterator):
-        # column-wise loop over the blob arrays (never pdf.iterrows — that
-        # materializes a pandas Series per chunk row); the sid column is
-        # np.repeat-broadcast by decoded lengths, all vectorized.
+        # one batch decode per blob column per Arrow batch; the sid column
+        # is np.repeat-broadcast by the decoded lengths
         for pdf in iterator:
-            if not len(pdf):
-                yield pd.DataFrame(columns=["_sid", ts_col, value_col])
-                continue
-            ts_all = [decode_timestamps(bytes(b)) for b in pdf["ts_blob"].to_numpy()]
-            val_all = [decode_values(bytes(b)) for b in pdf["val_blob"].to_numpy()]
-            lens = np.fromiter((t.size for t in ts_all), dtype=np.int64, count=len(ts_all))
+            ts, lens = decode_timestamps_multi(pdf["ts_blob"].to_numpy())
+            vals, n_vals = decode_values_multi(pdf["val_blob"].to_numpy())
+            if (n_vals != lens).any():
+                raise ValueError("corrupt chunk: ts_blob and val_blob point counts differ")
             out = pd.DataFrame({"_sid": np.repeat(pdf["_sid"].to_numpy(), lens)})
-            out[ts_col] = np.concatenate(ts_all) if ts_all else np.empty(0, np.int64)
-            out[value_col] = np.concatenate(val_all) if val_all else np.empty(0, np.float64)
+            out[ts_col] = ts
+            out[value_col] = vals
             yield out
 
     points = slim.mapInPandas(_decode, schema=schema)

@@ -50,12 +50,15 @@ the ~1 bit/point cost of those cases is preserved; decode reconstructs
 them arithmetically. Non-degenerate streams pay bitmap (1 bit/point) +
 entries (6 or 2 bits per non-trivial point), a few % of payload size.
 
-Decode is then two fully-vectorized steps: code positions from a cumsum
-of sidecar-derived widths, payloads via 9-byte ``_gather64`` gathers,
-then ``np.bitwise_xor.accumulate`` (values) / double ``np.cumsum``
-(delta-of-delta timestamps). Everything runs inside Arrow kernels over
-bounded chunks (≤ CHUNK_SIZE points); there is no per-point Python loop
-anywhere in the codec.
+Decode is batched: ``decode_values_multi`` / ``decode_timestamps_multi``
+take a whole list of blobs (an Arrow batch's column) and concatenate
+them, read every header and its version bits at once, and turn sidecar
+bitmap ranks, code positions, delta-of-delta sums and the XOR chain into
+per-blob (segmented) ``cumsum`` / ``bitwise_xor.accumulate`` over the
+concatenated points, with 9-byte ``_gather64`` reads for the payloads.
+The cost is a few numpy calls per batch, not per blob; the one-blob
+``decode_values`` / ``decode_timestamps`` are calls of the same path.
+There is no per-point or per-blob Python loop anywhere in the decoder.
 """
 
 from __future__ import annotations
@@ -325,83 +328,6 @@ def encode_timestamps_multi(ts: np.ndarray, starts: np.ndarray) -> list[bytes]:
     ]
 
 
-def _gather64(pbytes: np.ndarray, off: np.ndarray) -> np.ndarray:
-    """Vectorized read of 64 bits at each bit offset in ``off`` (MSB-first).
-
-    Gathers 9 bytes per offset (a 64-bit payload at bit-in-byte offset r
-    spans at most 9 bytes) and aligns; ``pbytes`` must be padded so
-    ``(off >> 3) + 8`` is in range.
-    """
-    pb = pbytes.astype(np.uint64)
-    k = (off >> 3).astype(np.int64)
-    r = (off & 7).astype(np.uint64)
-    w = pb[k]
-    for j in range(1, 8):
-        w = (w << _U64(8)) | pb[k + j]
-    # r == 0 → tail byte shifted out entirely (uint64 >> 8 of a byte = 0)
-    return (w << r) | (pb[k + 8] >> (_U64(8) - r))
-
-
-def _padded(payload: bytes) -> np.ndarray:
-    """Zero-padded byte array for ``_gather64`` (9-byte reads at any valid
-    bit offset stay in range)."""
-    return np.frombuffer(payload + b"\x00" * 12, dtype=np.uint8)
-
-
-def _unpack_entries(buf: bytes, count: int, ebits: int) -> np.ndarray:
-    """Read ``count`` MSB-first fixed-width entries from packed bytes."""
-    if count == 0:
-        return np.zeros(0, dtype=np.int64)
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), count=count * ebits)
-    weights = (1 << np.arange(ebits - 1, -1, -1)).astype(np.int64)
-    return bits.reshape(count, ebits).astype(np.int64) @ weights
-
-
-def decode_values(buf: bytes) -> np.ndarray:
-    if not buf:
-        return np.empty(0, dtype=np.float64)
-    hdr = int(np.frombuffer(buf[:4], dtype=np.uint32)[0])
-    _check_version(hdr)
-    n = hdr & _N_MASK
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-
-    if not hdr >> 31:
-        # degenerate: every xor code is the 1-bit repeat → constant series
-        # (the common case for gap-filled / boilerplate-flat tiers)
-        v0 = _gather64(_padded(buf[4:]), np.zeros(1, np.int64)).view(np.float64)[0]
-        return np.full(n, v0)
-
-    # sidecar → per-point code widths → positions by cumsum; all numpy
-    m = n - 1
-    bm_bytes = (m + 7) // 8
-    bitmap = np.unpackbits(
-        np.frombuffer(buf[4 : 4 + bm_bytes], dtype=np.uint8), count=m
-    ).astype(bool)
-    nz = np.flatnonzero(bitmap) + 1  # point indices with a header code
-    k = nz.size
-    ent_bytes = (k * 6 + 7) // 8
-    mlen6 = _unpack_entries(buf[4 + bm_bytes : 4 + bm_bytes + ent_bytes], k, 6)
-    mlen = np.where(mlen6 == 0, 64, mlen6).astype(np.uint64)
-
-    widths = np.ones(n, dtype=np.int64)
-    widths[0] = 64
-    widths[nz] = 12 + mlen.astype(np.int64)
-    pos = np.zeros(n, dtype=np.int64)
-    np.cumsum(widths[:-1], out=pos[1:])
-
-    pbytes = _padded(buf[4 + bm_bytes + ent_bytes :])
-    heads = _gather64(pbytes, pos[nz])
-    lead = (heads >> _U64(58)) & _U64(31)
-    pay = _gather64(pbytes, pos[nz] + 12)
-    meaningful = pay >> (_U64(64) - mlen)
-
-    xor = np.zeros(n, dtype=np.uint64)
-    xor[0] = _gather64(pbytes, np.zeros(1, np.int64))[0]
-    xor[nz] = meaningful << (_U64(64) - lead - mlen)
-    return np.bitwise_xor.accumulate(xor).view(np.float64)
-
-
 def _zigzag(x: np.ndarray) -> np.ndarray:
     return ((x << 1) ^ (x >> 63)).astype(np.uint64)
 
@@ -409,61 +335,172 @@ def _zigzag(x: np.ndarray) -> np.ndarray:
 # dod bucket class → (code width, zigzag payload width)
 _TS_WIDTH = np.array([9, 15, 24, 68], dtype=np.int64)
 _TS_ZW = np.array([7, 12, 20, 64], dtype=np.int64)
+_PAD = b"\x00" * 16  # keeps every 9-byte ``_gather64`` read in range
+
+
+def _gather64(data: np.ndarray, off: np.ndarray) -> np.ndarray:
+    """Vectorized read of 64 bits at each bit offset in ``off`` (MSB-first).
+
+    One gather of the 8 bytes at ``off >> 3`` as a big-endian word through
+    an unaligned stride-1 view, plus the 9th byte for the bit-in-byte
+    shift; ``data`` must be padded so ``(off >> 3) + 8`` is in range.
+    """
+    words = np.ndarray((data.size - 8,), dtype=">u8", buffer=data, strides=(1,))
+    k = off >> 3
+    r = (off & 7).astype(np.uint64)
+    # r == 0 → tail byte shifted out entirely (uint64 >> 8 of a byte = 0)
+    return (words[k].astype(np.uint64) << r) | (
+        data[k + 8].astype(np.uint64) >> (_U64(8) - r)
+    )
+
+
+class _Batch:
+    """A list of blobs laid out for one vectorized decode.
+
+    ``data`` is every blob concatenated (padded), ``off`` each blob's byte
+    offset, ``n`` its point count; per point, ``blob`` is the owning blob
+    and ``j`` the index within it; ``start`` is each blob's first point.
+    Raises the version error if ANY blob carries bad version bits."""
+
+    def __init__(self, blobs) -> None:
+        self.size = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+        self.data = np.frombuffer(b"".join(blobs) + _PAD, dtype=np.uint8)
+        self.off = np.zeros(self.size.size, dtype=np.int64)
+        np.cumsum(self.size[:-1], out=self.off[1:])
+        self.has_hdr = self.size > 0  # b"" is the empty values blob
+        if (self.size[self.has_hdr] < 4).any():
+            raise ValueError("truncated Gorilla blob (shorter than its 4-byte header)")
+        words = np.ndarray(
+            (self.data.size - 3,), dtype=np.uint32, buffer=self.data, strides=(1,)
+        )
+        hdr = np.zeros(self.size.size, dtype=np.uint32)
+        hdr[self.has_hdr] = words[self.off[self.has_hdr]]
+        bad = self.has_hdr & ((hdr & np.uint32(_VER_MASK)) != _VER_BITS)
+        if bad.any():
+            _check_version(int(hdr[np.argmax(bad)]))
+        self.n = (hdr & np.uint32(_N_MASK)).astype(np.int64)
+        self.sidecar = (hdr >> np.uint32(31)).astype(bool)
+        self.start = np.zeros(self.n.size + 1, dtype=np.int64)
+        np.cumsum(self.n, out=self.start[1:])
+        self.blob = np.repeat(np.arange(self.n.size), self.n)
+        self.j = np.arange(self.start[-1]) - self.start[self.blob]
+
+    def cumsum(self, x: np.ndarray) -> np.ndarray:
+        """Inclusive cumsum restarting at every blob (int64 wraps mod 2^64
+        exactly like a per-blob cumsum, so subtracting the prefix is exact)."""
+        c = np.zeros(x.size + 1, dtype=x.dtype)
+        np.cumsum(x, out=c[1:])
+        return c[1:] - c[self.start[:-1]][self.blob]
+
+    def sidecar_codes(self, head: int, ebits: int) -> tuple[np.ndarray, ...]:
+        """Per point: the sidecar bitmap bit (non-trivial code) and its
+        ``ebits``-wide entry (0 where the bit is clear); per blob: the byte
+        where its payload starts. The bitmap covers points ``head..n-1``
+        of sidecar blobs."""
+        m = np.where(self.sidecar, self.n - head, 0)
+        bm_bytes = (m + 7) // 8
+        dom = self.sidecar[self.blob] & (self.j >= head)
+        q = self.j[dom] - head
+        bits = self.data[self.off[self.blob[dom]] + 4 + (q >> 3)] >> (7 - (q & 7))
+        flag = np.zeros(self.j.size, dtype=bool)
+        flag[dom] = (bits & 1).astype(bool)
+        # rank of each flagged point among its blob's flagged points
+        fc = np.zeros(flag.size + 1, dtype=np.int64)
+        np.cumsum(flag, out=fc[1:])
+        k = fc[self.start[1:]] - fc[self.start[:-1]]
+        ent_at = 8 * (self.off + 4 + bm_bytes)
+        rank = fc[1:][flag] - 1 - fc[self.start[:-1]][self.blob[flag]]
+        ent = np.zeros(flag.size, dtype=np.int64)
+        ent[flag] = (
+            _gather64(self.data, ent_at[self.blob[flag]] + ebits * rank)
+            >> _U64(64 - ebits)
+        ).astype(np.int64)
+        payload = self.off + 4 + np.where(self.sidecar, bm_bytes + (k * ebits + 7) // 8, 0)
+        return flag, ent, payload
+
+    def positions(self, width: np.ndarray, payload: np.ndarray) -> np.ndarray:
+        """Absolute bit offset of every code from per-point code widths;
+        checks that each blob is exactly as long as its codes need."""
+        end = self.cumsum(width)
+        bits = np.zeros(self.n.size, dtype=np.int64)
+        last = self.n > 0
+        bits[last] = end[self.start[1:][last] - 1]
+        need = np.where(self.has_hdr, payload - self.off + (bits + 7) // 8, 0)
+        if (need != self.size).any():
+            i = int(np.argmax(need != self.size))
+            raise ValueError(
+                f"corrupt Gorilla blob: {self.size[i]} bytes, its header "
+                f"({self.n[i]} points) and sidecar need {need[i]}"
+            )
+        return 8 * payload[self.blob] + end - width
+
+
+def decode_values_multi(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a list of values blobs in one vectorized pass; returns the
+    concatenated float64 points and each blob's point count.
+
+    Code widths come from the sidecars (1 bit for a repeat, 12 + mlen for
+    a header code, 64 for each raw first value), code positions from
+    their per-blob cumsum, and the values from a per-blob XOR accumulate.
+    Constant-series blobs carry no sidecar and need no special case: all
+    their xor codes are the 1-bit repeat."""
+    b = _Batch(blobs)
+    flag, ent, payload = b.sidecar_codes(head=1, ebits=6)
+    mlen = np.where(ent[flag] == 0, 64, ent[flag]).astype(np.uint64)
+    width = np.where(b.j == 0, 64, 1)
+    width[flag] = 12 + mlen.astype(np.int64)
+    pos = b.positions(width, payload)
+
+    first = b.j == 0
+    xor = np.zeros(b.j.size, dtype=np.uint64)
+    xor[first] = _gather64(b.data, pos[first])
+    at = pos[flag]
+    lead = (_gather64(b.data, at) >> _U64(58)) & _U64(31)
+    meaningful = _gather64(b.data, at + 12) >> (_U64(64) - mlen)
+    xor[flag] = meaningful << (_U64(64) - lead - mlen)
+    acc = np.zeros(xor.size + 1, dtype=np.uint64)
+    np.bitwise_xor.accumulate(xor, out=acc[1:])
+    values = acc[1:] ^ acc[b.start[:-1]][b.blob]
+    return values.view(np.float64), b.n
+
+
+def decode_timestamps_multi(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a list of timestamp blobs in one vectorized pass; returns the
+    concatenated int64 points and each blob's point count.
+
+    The raw t0 and first delta, and every sidecar-flagged delta-of-delta,
+    are gathered at positions from the per-blob cumsum of code widths;
+    deltas and then timestamps are two per-blob cumsums. Regular-grid
+    blobs carry no sidecar: every dod is 0."""
+    b = _Batch(blobs)
+    flag, cls, payload = b.sidecar_codes(head=2, ebits=2)
+    cls = cls[flag]
+    width = np.where(b.j < 2, 64, 1)
+    width[flag] = _TS_WIDTH[cls]
+    pos = b.positions(width, payload)
+
+    raw = np.zeros(b.j.size, dtype=np.int64)
+    heads = b.j < 2
+    raw[heads] = _gather64(b.data, pos[heads]).view(np.int64)
+    zw = _TS_ZW[cls]
+    w = _gather64(b.data, pos[flag] + (_TS_WIDTH[cls] - zw))
+    z = w >> ((_U64(64) - zw.astype(np.uint64)) & _U64(63))
+    raw[flag] = (z >> _U64(1)).view(np.int64) ^ -(z & _U64(1)).view(np.int64)
+
+    # raw holds t0 at j = 0, delta0 at j = 1 and the dods after it:
+    # delta_j = delta0 + cumsum(dod), t_j = t0 + cumsum(delta)
+    first = b.j == 0
+    deltas = b.cumsum(np.where(first, 0, raw))
+    deltas[first] = raw[first]
+    return b.cumsum(deltas), b.n
+
+
+def decode_values(buf: bytes) -> np.ndarray:
+    return decode_values_multi([buf])[0]
 
 
 def decode_timestamps(buf: bytes) -> np.ndarray:
-    hdr = int(np.frombuffer(buf[:4], dtype=np.uint32)[0])
-    _check_version(hdr)
-    n = hdr & _N_MASK
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-
-    if not hdr >> 31:
-        # degenerate: every dod is 0 → regular grid (the 1-minute-tier
-        # common case: SURVEY §2.12's ~1 bit/point grid)
-        pbytes = _padded(buf[4:])
-        t0 = int(_gather64(pbytes, np.zeros(1, np.int64)).view(np.int64)[0])
-        if n == 1:
-            return np.array([t0], np.int64)
-        delta0 = int(_gather64(pbytes, np.full(1, 64, np.int64)).view(np.int64)[0])
-        return t0 + delta0 * np.arange(n, dtype=np.int64)
-
-    m = n - 2  # flag implies at least one non-zero dod → n ≥ 3
-    bm_bytes = (m + 7) // 8
-    bitmap = np.unpackbits(
-        np.frombuffer(buf[4 : 4 + bm_bytes], dtype=np.uint8), count=m
-    ).astype(bool)
-    nz = np.flatnonzero(bitmap)
-    k = nz.size
-    ent_bytes = (k * 2 + 7) // 8
-    cls = _unpack_entries(buf[4 + bm_bytes : 4 + bm_bytes + ent_bytes], k, 2)
-
-    widths = np.ones(m, dtype=np.int64)
-    widths[nz] = _TS_WIDTH[cls]
-    pos = np.full(m, 128, dtype=np.int64)
-    if m > 1:
-        pos[1:] += np.cumsum(widths[:-1])
-
-    pbytes = _padded(buf[4 + bm_bytes + ent_bytes :])
-    head = _gather64(pbytes, np.array([0, 64], np.int64)).view(np.int64)
-    t0, delta0 = int(head[0]), int(head[1])
-
-    zw = _TS_ZW[cls]
-    w = _gather64(pbytes, pos[nz] + (_TS_WIDTH[cls] - zw))
-    zval = w >> ((_U64(64) - zw.astype(np.uint64)) & _U64(63))
-    dod = np.zeros(m, dtype=np.int64)
-    dod[nz] = (zval >> _U64(1)).view(np.int64) ^ -(zval & _U64(1)).view(np.int64)
-
-    # delta_i = delta0 + cumsum(dod); out_i = t0 + cumsum(delta)
-    deltas = np.empty(n - 1, dtype=np.int64)
-    deltas[0] = delta0
-    np.cumsum(dod, out=deltas[1:])
-    deltas[1:] += delta0
-    out = np.empty(n, dtype=np.int64)
-    out[0] = t0
-    np.cumsum(deltas, out=out[1:])
-    out[1:] += t0
-    return out
+    return decode_timestamps_multi([buf])[0]
 
 
 def migrate_v1_blob(buf: bytes, kind: str) -> bytes:

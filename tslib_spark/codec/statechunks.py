@@ -17,9 +17,21 @@ metric rides the codec that is lossless for its type:
 
 Chunk windows align to the retention partition granularity: chunk_id =
 floor(unix_minute / window_minutes), so every chunk falls inside exactly
-one part_key and head-series chunks spread across kernel tasks (same skew
-argument as codec/chunks.py). The shuffle and Arrow crossing carry an
-8-byte sid; key strings rejoin via a broadcast dictionary.
+one part_key. The shuffle and Arrow crossing carry an 8-byte sid; key
+strings rejoin via a broadcast dictionary.
+
+Encode is one streaming pass per sorted partition: rows are hash
+partitioned on (sid, window) and sorted by (sid, window, minute), and the
+kernel encodes every complete (sid, window) run of an Arrow batch with one
+``encode_*_multi`` call per column, carrying only the trailing run into
+the next batch. Minutes are unique per series, so the carry holds at most
+one window of points (1,440 for day windows, 10,080 for week windows)
+whatever the batch size. Skew: the largest unit of work is one
+(sid, window) run, so a head series spreads its windows over the
+shuffle partitions and no task holds a fixed fraction of the tier.
+
+Decode costs five batch calls per Arrow batch (``decode_*_multi``, one
+per blob column), not five calls per chunk row.
 """
 
 from __future__ import annotations
@@ -30,8 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tslib_spark.codec.gorilla import (
-    decode_timestamps,
-    decode_values,
+    decode_timestamps_multi,
+    decode_values_multi,
     encode_timestamps_multi,
     encode_values_multi,
 )
@@ -60,11 +72,54 @@ def _sum_scaled(pdf: pd.DataFrame) -> np.ndarray:
     return raw.astype(np.int64, copy=False)
 
 
+def _encode_runs(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+    """Encode the sorted rows of ``pdf`` as one chunk row per run; ``starts``
+    are the first row of each (sid, window) run."""
+    sid = pdf["_sid"].to_numpy()
+    minutes = pdf["_minute"].to_numpy(dtype=np.int64)
+    return pd.DataFrame(
+        {
+            "_sid": sid[starts],
+            "chunk_id": pdf["_win"].to_numpy()[starts].astype(np.int64),
+            "n_points": np.diff(np.append(starts, len(pdf))).astype(np.int32),
+            "ts_start": minutes[starts],
+            "ts_blob": encode_timestamps_multi(minutes, starts),
+            "cnt_blob": encode_timestamps_multi(pdf["cnt"].to_numpy(dtype=np.int64), starts),
+            "sum_blob": encode_timestamps_multi(_sum_scaled(pdf), starts),
+            "min_blob": encode_values_multi(pdf["val_min"].to_numpy(dtype=np.float64), starts),
+            "max_blob": encode_values_multi(pdf["val_max"].to_numpy(dtype=np.float64), starts),
+        }
+    )
+
+
+def _encode_sorted(batches):
+    """mapInPandas kernel over a partition sorted by (sid, window, minute):
+    encodes each batch's complete runs and carries the trailing run, which
+    may continue in the next batch, until the partition ends."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if not len(pdf):
+            continue
+        sid = pdf["_sid"].to_numpy()
+        win = pdf["_win"].to_numpy()
+        changed = np.zeros(len(pdf), dtype=bool)
+        changed[0] = True
+        changed[1:] = (sid[1:] != sid[:-1]) | (win[1:] != win[:-1])
+        starts = np.flatnonzero(changed)
+        last = int(starts[-1])
+        if last:
+            yield _encode_runs(pdf.iloc[:last], starts[:-1])
+        carry = pdf.iloc[last:].reset_index(drop=True)
+    if carry is not None and len(carry):
+        yield _encode_runs(carry, np.zeros(1, dtype=np.int64))
+
+
 def encode_state_chunks(
     tier: DataFrame,
     keys: list[str],
     window_minutes: int = DAY_MINUTES,
-    kernel_buckets: int = 256,
     window_offset_minutes: int = 0,
 ) -> DataFrame:
     """Tier-state rows → compressed chunk rows, one per (series, window).
@@ -76,43 +131,6 @@ def encode_state_chunks(
         "_sid long, chunk_id long, n_points int, ts_start long, "
         + ", ".join(f"{b} binary" for b in _STATE_BLOBS)
     )
-
-    def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["_sid", "_minute"], ignore_index=True)
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(
-                columns=["_sid", "chunk_id", "n_points", "ts_start", *_STATE_BLOBS]
-            )
-        sid = pdf["_sid"].to_numpy()
-        win = pdf["_win"].to_numpy()
-        changed = np.zeros(n, dtype=bool)
-        changed[0] = True
-        changed[1:] = (sid[1:] != sid[:-1]) | (win[1:] != win[:-1])
-        starts = np.flatnonzero(changed)
-
-        minutes = pdf["_minute"].to_numpy(dtype=np.int64)
-        out = pd.DataFrame(
-            {
-                "_sid": sid[starts],
-                "chunk_id": win[starts].astype(np.int64),
-                "n_points": np.diff(np.append(starts, n)).astype(np.int32),
-                "ts_start": minutes[starts],
-                "ts_blob": encode_timestamps_multi(minutes, starts),
-                "cnt_blob": encode_timestamps_multi(
-                    pdf["cnt"].to_numpy(dtype=np.int64), starts
-                ),
-                "sum_blob": encode_timestamps_multi(_sum_scaled(pdf), starts),
-                "min_blob": encode_values_multi(
-                    pdf["val_min"].to_numpy(dtype=np.float64), starts
-                ),
-                "max_blob": encode_values_multi(
-                    pdf["val_max"].to_numpy(dtype=np.float64), starts
-                ),
-            }
-        )
-        return out
-
     minute = (F.unix_timestamp("bucket_ts") / 60).cast("long")
     win = F.floor((minute + F.lit(window_offset_minutes)) / F.lit(window_minutes))
     sid = F.xxhash64(*[F.col(k).cast("string") for k in keys])
@@ -127,9 +145,12 @@ def encode_state_chunks(
         scaled.cast("long").alias("_sum_scaled"),
         F.col("val_min").cast("double"),
         F.col("val_max").cast("double"),
-        F.pmod(F.xxhash64(sid, win), F.lit(kernel_buckets)).alias("_bucket"),
     )
-    chunks = tidy.groupBy("_bucket").applyInPandas(_encode, schema=schema)
+    chunks = (
+        tidy.repartition("_sid", "_win")
+        .sortWithinPartitions("_sid", "_win", "_minute")
+        .mapInPandas(_encode_sorted, schema=schema)
+    )
     sid_dict = tier.select(*[F.col(k).cast("string") for k in keys]).distinct().withColumn(
         "_sid", sid
     )
@@ -153,23 +174,28 @@ def decode_state_chunks(chunks: DataFrame, keys: list[str]) -> DataFrame:
 
     def _decode(iterator):
         for pdf in iterator:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    columns=[*keys, "bucket_ts", "cnt", "_sum_scaled", "val_min", "val_max"]
-                )
-                continue
-            minutes = [decode_timestamps(bytes(b)) for b in pdf["ts_blob"].to_numpy()]
-            cnts = [decode_timestamps(bytes(b)) for b in pdf["cnt_blob"].to_numpy()]
-            sums = [decode_timestamps(bytes(b)) for b in pdf["sum_blob"].to_numpy()]
-            mins = [decode_values(bytes(b)) for b in pdf["min_blob"].to_numpy()]
-            maxs = [decode_values(bytes(b)) for b in pdf["max_blob"].to_numpy()]
-            lens = np.fromiter((m.size for m in minutes), dtype=np.int64, count=len(minutes))
+            minutes, lens = decode_timestamps_multi(pdf["ts_blob"].to_numpy())
+            cnts, n_cnt = decode_timestamps_multi(pdf["cnt_blob"].to_numpy())
+            sums, n_sum = decode_timestamps_multi(pdf["sum_blob"].to_numpy())
+            mins, n_min = decode_values_multi(pdf["min_blob"].to_numpy())
+            maxs, n_max = decode_values_multi(pdf["max_blob"].to_numpy())
+            # a +1 in one row and a -1 in another would cancel in the
+            # concatenated arrays and shift every later point: check per row
+            n_points = pdf["n_points"].to_numpy()
+            for n_other in (n_cnt, n_sum, n_min, n_max, n_points):
+                if (n_other != lens).any():
+                    i = int(np.argmax(n_other != lens))
+                    raise ValueError(
+                        f"corrupt state chunk (chunk_id {pdf['chunk_id'].iloc[i]}): "
+                        f"n_points {n_points[i]}, blob point counts "
+                        f"{[int(c[i]) for c in (lens, n_cnt, n_sum, n_min, n_max)]}"
+                    )
             out = pd.DataFrame({k: np.repeat(pdf[k].to_numpy(), lens) for k in keys})
-            out["bucket_ts"] = pd.to_datetime(np.concatenate(minutes) * 60, unit="s")
-            out["cnt"] = np.concatenate(cnts)
-            out["_sum_scaled"] = np.concatenate(sums)
-            out["val_min"] = np.concatenate(mins)
-            out["val_max"] = np.concatenate(maxs)
+            out["bucket_ts"] = pd.to_datetime(minutes * 60, unit="s")
+            out["cnt"] = cnts
+            out["_sum_scaled"] = sums
+            out["val_min"] = mins
+            out["val_max"] = maxs
             yield out
 
     from decimal import Decimal

@@ -20,15 +20,25 @@ never unscales outputs, multisyntheticControl.py:96-104).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from tslib_spark.kernels.svd_kernel import ModelConfig, fit_transform
 
 
 def _time_rank(times_df: DataFrame, time_col: str) -> DataFrame:
-    w = Window.orderBy(time_col)
-    return times_df.select(time_col).distinct().withColumn("_t_rank", F.row_number().over(w) - 1)
+    """``(time, _t_rank)``: the 0-based rank of each distinct time, in
+    Spark's sort order. The distinct time axis is small, so it is sorted
+    and numbered on the driver; a row_number window over the whole axis
+    would be an unpartitioned Window, pulling it through one partition."""
+    times = times_df.select(time_col).distinct().orderBy(time_col).collect()
+    schema = StructType(
+        [times_df.schema[time_col], StructField("_t_rank", IntegerType(), False)]
+    )
+    return times_df.sparkSession.createDataFrame(
+        [(row[0], rank) for rank, row in enumerate(times)], schema
+    )
 
 
 def prepare_panel(
