@@ -17,11 +17,12 @@ from tslib_spark.datagen.series import multi_ts_fixture, single_ts_fixture
 from tslib_spark.kernels import linalg
 from tslib_spark.kernels.svd_kernel import (
     ModelConfig,
+    _fit_group,
+    _forecast_group,
     fit_transform,
     forecast,
-    forecast_sql,
-    forecast_sql_multi,
 )
+from tslib_spark.streaming.incremental import _fit_state_group, fit_state, update_state
 
 
 # ---------- independent oracle (reference semantics, direct numpy) ----------
@@ -143,6 +144,84 @@ def test_incremental_updates_track_full_svd():
     )
 
 
+# ------------------- one model core (pandas-level kernels) -------------------
+
+def noisy_pdf(keys, n_points, seed=0, nan_frac=0.2):
+    rng = np.random.default_rng(seed)
+    series = {}
+    for key in keys:
+        v = np.sin(np.arange(n_points) / 5 + rng.random()) + rng.normal(0, 0.1, n_points)
+        v[rng.random(n_points) < nan_frac] = np.nan
+        series[key] = v
+    return tidy_pdf(series)
+
+
+CORE_CONFIGS = pytest.mark.parametrize(
+    "donors,past_only",
+    [((), True), ((), False), (("d1", "d2"), True), (("d1", "d2"), False)],
+    ids=["target-past", "target-current", "donors-past", "donors-current"],
+)
+
+
+@CORE_CONFIGS
+def test_fit_state_weights_are_fit_transform_weights(donors, past_only):
+    cfg = ModelConfig(
+        target_key="t", N=8, M=12, k=3, donor_keys=donors, include_past_only=past_only
+    )
+    pdf = noisy_pdf([*donors, "t"], 8 * 12)
+    fit = _fit_group(pdf, cfg)
+    want = fit[fit["kind"] == "weight"].sort_values("idx")["value"].to_numpy()
+    got = np.asarray(_fit_state_group(pdf, cfg)["weights"].iloc[0])
+    np.testing.assert_allclose(got, want, rtol=0, atol=1e-12)
+
+
+@CORE_CONFIGS
+def test_absent_bucket_is_a_null_bucket(donors, past_only):
+    cfg = ModelConfig(
+        target_key="t", N=8, M=10, k=3, donor_keys=donors, include_past_only=past_only
+    )
+    pdf = noisy_pdf([*donors, "t"], 96, seed=1, nan_frac=0.1)
+    weights = _fit_group(pdf[pdf["bucket_idx"] < 80], cfg).query("kind == 'weight'")[["group_id", "idx", "value"]]
+    # a target row in the horizon, and a donor row (the target's without
+    # donors) both in the horizon and in the fitted page matrix
+    other = donors[-1] if donors else "t"
+    gone = {("t", 83), (other, 85), (other, 40)}
+    hit = [(k, i) in gone for k, i in zip(pdf["series_key"], pdf["bucket_idx"])]
+    nulled = pdf.assign(value=pdf["value"].mask(hit))
+    dropped = pdf[~np.asarray(hit)]
+
+    pd.testing.assert_frame_equal(
+        _fit_group(dropped[dropped["bucket_idx"] < 80], cfg),
+        _fit_group(nulled[nulled["bucket_idx"] < 80], cfg),
+    )
+    want = _forecast_group(nulled, weights, cfg, train_end_idx=80)
+    assert list(want["idx"]) == list(range(80, 96))
+    pd.testing.assert_frame_equal(_forecast_group(dropped, weights, cfg, train_end_idx=80), want)
+
+
+def test_duplicate_bucket_raises():
+    cfg = ModelConfig(target_key="t", N=8, M=12, k=3, donor_keys=("d1",))
+    pdf = noisy_pdf(["d1", "t"], 96)
+    dup = pd.concat([pdf, pdf[(pdf["series_key"] == "d1") & (pdf["bucket_idx"] == 90)]])
+    with pytest.raises(ValueError, match="'g0'"):
+        _fit_group(dup, cfg)
+    weights = _fit_group(pdf, cfg).query("kind == 'weight'")[["group_id", "idx", "value"]]
+    with pytest.raises(ValueError, match="'g0'"):
+        _forecast_group(dup, weights, cfg, train_end_idx=80)
+
+
+def test_invalid_model_configs_raise(spark):
+    with pytest.raises(ValueError, match="'hsvt'"):
+        ModelConfig(target_key="t", N=8, M=12, k=3, method="hsvt")
+    df = spark.createDataFrame(noisy_pdf(["t"], 96))
+    als = ModelConfig(target_key="t", N=8, M=12, k=3, method="als")
+    with pytest.raises(ValueError, match="'als'"):
+        fit_state(df, als)
+    state = fit_state(df, ModelConfig(target_key="t", N=8, M=12, k=3))
+    with pytest.raises(ValueError, match="'fold'"):
+        update_state(state, df.select("group_id", "bucket_idx", "value"), method="fold")
+
+
 # ------------------------- Spark kernel parity ----------------------------
 
 @pytest.fixture(scope="module")
@@ -204,21 +283,6 @@ def test_single_ts_forecast_parity(spark, fx_single):
     rmse_fc = linalg.rmse(got["forecast"].to_numpy(), fx["mean_test"])
     assert rmse_fc < 0.25
 
-    # the pure-SQL path agrees with the kernel path
-    from pyspark.sql import functions as F
-
-    weights_df = (
-        state.groupBy("group_id")
-        .agg(F.sort_array(F.collect_list(F.struct("idx", "value"))).alias("w"))
-        .select("group_id", F.col("w.value").alias("weights"))
-    )
-    got_sql = (
-        forecast_sql(actuals.withColumn("group_id", F.lit("g0")), weights_df, N, train_pts)
-        .toPandas()
-        .sort_values("idx")
-    )
-    np.testing.assert_allclose(got_sql["forecast"].to_numpy(), got["forecast"].to_numpy(), atol=1e-9)
-
 
 def test_multi_ts_parity(spark, fx_multi):
     fx = fx_multi
@@ -266,26 +330,6 @@ def test_multi_ts_parity(spark, fx_multi):
     np.testing.assert_allclose(got["forecast"].to_numpy(), oracle_preds, atol=1e-6)
     assert linalg.rmse(got["forecast"].to_numpy(), fx["mean_test"]) < 0.25
 
-    # pure-SQL donor path agrees with the kernel path (no Python at all)
-    from pyspark.sql import functions as F
-
-    from tslib_spark.kernels.svd_kernel import forecast_sql_multi
-
-    weights_df = (
-        fit.filter("kind='weight'")
-        .groupBy("group_id")
-        .agg(F.sort_array(F.collect_list(F.struct("idx", "value"))).alias("w"))
-        .select("group_id", F.col("w.value").alias("weights"))
-    )
-    got_sql = (
-        forecast_sql_multi(actuals, weights_df, cfg, train_end_idx=train_pts)
-        .toPandas()
-        .sort_values("idx")
-    )
-    np.testing.assert_allclose(
-        got_sql["forecast"].to_numpy(), got["forecast"].to_numpy(), atol=1e-9
-    )
-
 
 def test_multiple_groups_parallel(spark, fx_single):
     """Many independent series-groups in one kernel pass — the scale shape."""
@@ -307,10 +351,10 @@ def test_multiple_groups_parallel(spark, fx_single):
     np.testing.assert_array_equal(first, last)
 
 
-def test_forecast_sql_multi_include_current(spark, fx_multi):
+def test_forecast_include_current_matches_oracle(spark, fx_multi):
     """include_past_only=False: donor windows include the current point
     (the reference's predict() when donors are observed at forecast time).
-    SQL path == kernel path with identical synthetic weights."""
+    Kernel == per-step oracle loop with identical synthetic weights."""
     fx = fx_multi
     N, M1 = fx["N"], fx["M1"]
     donors = ["t2", "t3"]
@@ -326,28 +370,20 @@ def test_forecast_sql_multi_include_current(spark, fx_multi):
     actuals = spark.createDataFrame(tidy_pdf(full))
     n_w = len(donors) * N + (N - 1)
     wvec = (np.arange(n_w, dtype=np.float64) % 5 - 2) / 10.0
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from tslib_spark.kernels.svd_kernel import forecast, forecast_sql_multi
-
     state = spark.createDataFrame(
         pd.DataFrame({"group_id": "g0", "kind": "weight", "series_key": "t1",
                       "idx": range(n_w), "value": wvec})
     )
-    got_kernel = (
-        forecast(actuals, state, cfg, train_end_idx=train_pts).toPandas().sort_values("idx")
+    got = forecast(actuals, state, cfg, train_end_idx=train_pts).toPandas().sort_values("idx")
+    want = oracle_rolling_forecast(
+        wvec,
+        fx["series_train"]["t1"][-(N - 1) :],
+        fx["series_test"]["t1"],
+        N,
+        donors_train={d: fx["series_train"][d][-N:] for d in donors},
+        donors_test={d: fx["series_test"][d] for d in donors},
+        donor_keys=donors,
+        include_past_only=False,
     )
-    weights_df = spark.createDataFrame(
-        pd.DataFrame({"group_id": ["g0"], "weights": [wvec.tolist()]})
-    )
-    got_sql = (
-        forecast_sql_multi(actuals, weights_df, cfg, train_end_idx=train_pts)
-        .toPandas()
-        .sort_values("idx")
-    )
-    assert len(got_sql) == len(got_kernel) > 0
-    np.testing.assert_allclose(
-        got_sql["forecast"].to_numpy(), got_kernel["forecast"].to_numpy(), atol=1e-9
-    )
+    assert len(got) == len(want) > 0
+    np.testing.assert_allclose(got["forecast"].to_numpy(), want, atol=1e-9)

@@ -101,48 +101,52 @@ def past_only_submatrix(matrix: np.ndarray, n_series: int, N: int) -> np.ndarray
     return np.vstack(rows) if rows else np.empty((0, matrix.shape[1]))
 
 
-def compute_weights(
-    denoised: np.ndarray,
-    last_row_observations: np.ndarray,
-    n_donors: int,
-    N: int,
-    k: int,
-    p: float,
-    include_past_only: bool = True,
-    method: str = "svd",
+def regression_design(
+    matrix: np.ndarray, n_donors: int, N: int, include_past_only: bool = True
 ) -> np.ndarray:
-    """Forecast-weight regression (tsSVDModel.py:54-93 / tsALSModel.py:33-63).
+    """The rows the forecast weights regress on (tsSVDModel.py:74-87).
 
-    SVD path: re-SVD the (past-only) submatrix, weights = pinv(M')^T @ lastRow.
-    ALS path: direct numpy pinv of the submatrix.
+    Past-only: every series' first N-1 rows. Otherwise donors may include
+    the current point: every donor row plus the target's first N-1 (for
+    RSC's N=1, just the donor rows).
     """
-    n_series = n_donors + 1
     if include_past_only:
-        design = past_only_submatrix(denoised, n_series, N)
-    else:
-        design = denoised[: n_donors * N + N - 1, :]
-
-    if method == "als":
-        pinv = np.linalg.pinv(design)
-    else:
-        sk, Uk, Vk = svd_topk(design, k)
-        pinv = pinv_from_svd(sk, Uk, Vk, p)
-    return pinv.T @ last_row_observations
+        return past_only_submatrix(matrix, n_donors + 1, N)
+    return matrix[: n_donors * N + N - 1, :]
 
 
-def assemble_lag_vector(
-    donor_tails: dict[str, np.ndarray],
-    target_tail: np.ndarray,
-    donor_keys: list[str],
-    N: int,
-    include_past_only: bool = True,
+def svd_weights(
+    skw: np.ndarray, Ukw: np.ndarray, Vkw: np.ndarray, p: float, last_row: np.ndarray
 ) -> np.ndarray:
-    """Build the regression input for one forecast step (tsSVDModel.py:273-281):
-    donors first (their most recent N-1 or N points), target's N-1 last."""
-    need = N - 1 if include_past_only else N
-    parts = [np.asarray(donor_tails[k], dtype=np.float64)[-need:] for k in donor_keys]
-    parts.append(np.asarray(target_tail, dtype=np.float64)[-(N - 1) :])
-    return np.concatenate(parts) if parts else np.asarray(target_tail)[-(N - 1) :]
+    """SVD-path forecast weights from the design's truncated SVD:
+    pinv(design)^T @ lastRow (tsSVDModel.py:89-93)."""
+    return pinv_from_svd(skw, Ukw, Vkw, p).T @ last_row
+
+
+def hsvt_fit(
+    filled: np.ndarray, n_donors: int, N: int, k: int, p: float, include_past_only: bool = True
+):
+    """The HSVT model fit of a filled, stacked page matrix (tsSVDModel.py:54-93).
+
+    Denoise by rank-k reconstruction, then regress the last row on the
+    denoised design. Returns ``((sk, Uk, Vk), (skw, Ukw, Vkw), denoised,
+    weights)``: the matrix factors, the design factors, the reconstruction
+    and the forecast weights.
+    """
+    sk, Uk, Vk = svd_topk(filled, k)
+    denoised = reconstruct(sk, Uk, Vk, p)
+    skw, Ukw, Vkw = svd_topk(regression_design(denoised, n_donors, N, include_past_only), k)
+    weights = svd_weights(skw, Ukw, Vkw, p, filled[-1, :])
+    return (sk, Uk, Vk), (skw, Ukw, Vkw), denoised, weights
+
+
+def als_weights(
+    denoised: np.ndarray, last_row: np.ndarray, n_donors: int, N: int, include_past_only: bool = True
+) -> np.ndarray:
+    """ALS-path forecast weights: a direct numpy pinv of the design
+    (tsALSModel.py:33-63)."""
+    design = regression_design(denoised, n_donors, N, include_past_only)
+    return np.linalg.pinv(design).T @ last_row
 
 
 def rolling_forecast(

@@ -8,16 +8,17 @@ with SQL NULL for missing observations. Spark plans the scan/filter/shuffle
 Arrow boundary once per group and runs small-matrix BLAS.
 
 Correctness traps handled here (SURVEY.md §7):
-- Spark gives NO intra-group row order into applyInPandas → every kernel
-  sorts by bucket_idx first.
+- Spark gives NO intra-group row order into applyInPandas, and a row
+  position is not a time once a bucket can be missing → every kernel
+  places each series on the group's contiguous bucket_idx range, so an
+  absent bucket is a NULL one and a duplicate bucket fails loudly.
 - SVD sign indeterminacy → only reconstructions are ever emitted/compared,
   never factors.
 - Group size is asserted (donors+target × N*M points) so a malformed head
   group fails loudly instead of OOMing an executor.
 
 Per BASELINE.json input_hint there is no per-row Python anywhere: kernels
-are vectorized numpy over Arrow batches; the dot products in the SQL
-forecast path are JVM-side (zip_with/aggregate).
+are vectorized numpy over Arrow batches.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tslib_spark.kernels import linalg
@@ -49,55 +50,75 @@ class ModelConfig:
     method: str = "svd"  # 'svd' (HSVT) or 'als' (weighted ridge ALS)
     als_seed: int = 0
 
+    def __post_init__(self):
+        if self.method not in ("svd", "als"):
+            raise ValueError(f"method must be 'svd' or 'als', got {self.method!r}")
 
-def _prep_group(pdf: pd.DataFrame, cfg: ModelConfig):
-    """Sort, split by key, validate lengths; returns ({key: values}, {key: idx})."""
-    keys = list(cfg.donor_keys) + [cfg.target_key]
-    series, idxs = {}, {}
-    T = cfg.N * cfg.M
-    for key in keys:
-        sub = pdf[pdf["series_key"] == key].sort_values("bucket_idx")
-        if len(sub) < T:
+
+def _series_grid(pdf: pd.DataFrame, keys: list[str]):
+    """Each of ``keys`` on the contiguous bucket_idx range its rows span
+    together, NaN where a bucket is NULL or absent. Returns
+    (bucket_idx range, {key: values})."""
+    key_col = pdf["series_key"].to_numpy()
+    pos = pdf["bucket_idx"].to_numpy(dtype=np.int64)
+    val = pdf["value"].to_numpy(dtype=np.float64)
+    masks = [key_col == key for key in keys]
+    used = pos[np.logical_or.reduce(masks)]
+    lo = int(used.min()) if used.size else 0
+    grid = np.arange(lo, int(used.max()) + 1 if used.size else 0, dtype=np.int64)
+    series = {}
+    for key, mask in zip(keys, masks):
+        at = pos[mask] - lo
+        if np.unique(at).size < at.size:
             raise ValueError(
                 f"series {key!r} in group {pdf['group_id'].iloc[0]!r} has "
-                f"{len(sub)} points; model needs N*M = {T}"
+                "duplicate bucket_idx rows"
             )
-        series[key] = sub["value"].to_numpy(dtype=np.float64)[-T:]
-        idxs[key] = sub["bucket_idx"].to_numpy(dtype=np.int64)[-T:]
-    return series, idxs
+        series[key] = np.full(grid.size, np.nan)
+        series[key][at] = val[mask]
+    return grid, series
+
+
+def _prep_group(pdf: pd.DataFrame, cfg: ModelConfig):
+    """The model's series on the group's last N*M buckets; returns
+    ({key: values}, bucket_idx)."""
+    grid, series = _series_grid(pdf, list(cfg.donor_keys) + [cfg.target_key])
+    T = cfg.N * cfg.M
+    if grid.size < T:
+        raise ValueError(
+            f"group {pdf['group_id'].iloc[0]!r} spans {grid.size} buckets; "
+            f"model needs N*M = {T}"
+        )
+    return {key: v[-T:] for key, v in series.items()}, grid[-T:]
+
+
+def _filled_matrix(series: dict[str, np.ndarray], cfg: ModelConfig) -> np.ndarray:
+    """Middle-fill and stack the page matrices. The fill is GLOBAL across
+    all series of the group (reference computes nanmax/nanmin over the
+    whole keyToSeriesDF, tsSVDModel.py:142-148)."""
+    mid = linalg.middle_value(np.concatenate(list(series.values())))
+    filled = {k: np.where(np.isnan(v), mid, v) for k, v in series.items()}
+    return linalg.stack_series(filled, cfg.target_key, list(cfg.donor_keys), cfg.N, cfg.M)
 
 
 def _fit_group(pdf: pd.DataFrame, cfg: ModelConfig) -> pd.DataFrame:
-    series, idxs = _prep_group(pdf, cfg)
+    series, idx = _prep_group(pdf, cfg)
     gid = pdf["group_id"].iloc[0]
-    n_series = len(cfg.donor_keys) + 1
+    donors = list(cfg.donor_keys)
 
     if cfg.method == "als":
-        raw = linalg.stack_series(series, cfg.target_key, list(cfg.donor_keys), cfg.N, cfg.M)
+        raw = linalg.stack_series(series, cfg.target_key, donors, cfg.N, cfg.M)
         denoised, last_row = linalg.als_fit_matrix(raw, cfg.k, seed=cfg.als_seed)
-        weights = linalg.compute_weights(
-            denoised, last_row, len(cfg.donor_keys), cfg.N, cfg.k, cfg.p,
-            cfg.include_past_only, method="als",
-        )
+        weights = linalg.als_weights(denoised, last_row, len(donors), cfg.N, cfg.include_past_only)
     else:
-        # middle-value fill is GLOBAL across all series of the group
-        # (reference computes nanmax/nanmin over the whole keyToSeriesDF,
-        # tsSVDModel.py:142-148)
-        allv = np.concatenate(list(series.values()))
-        mid = linalg.middle_value(allv)
-        filled = {k: np.where(np.isnan(v), mid, v) for k, v in series.items()}
-        raw = linalg.stack_series(filled, cfg.target_key, list(cfg.donor_keys), cfg.N, cfg.M)
-        last_row = raw[-1, :].copy()
-        denoised = linalg.hsvt(raw, cfg.k, cfg.p)
-        weights = linalg.compute_weights(
-            denoised, last_row, len(cfg.donor_keys), cfg.N, cfg.k, cfg.p,
-            cfg.include_past_only, method="svd",
+        _, _, denoised, weights = linalg.hsvt_fit(
+            _filled_matrix(series, cfg), len(donors), cfg.N, cfg.k, cfg.p, cfg.include_past_only
         )
 
     # columnar assembly — whole-array concatenates + np.repeat key
     # broadcast (the decode_chunks pattern, codec/chunks.py): no per-point
     # Python list churn between the BLAS output and the Arrow batch
-    ordered = list(cfg.donor_keys) + [cfg.target_key]
+    ordered = donors + [cfg.target_key]
     T = cfg.N * cfg.M
     out_val = np.concatenate(
         [
@@ -107,7 +128,7 @@ def _fit_group(pdf: pd.DataFrame, cfg: ModelConfig) -> pd.DataFrame:
         + [weights]
     )
     out_idx = np.concatenate(
-        [idxs[key] for key in ordered] + [np.arange(weights.size, dtype=np.int64)]
+        [idx] * len(ordered) + [np.arange(weights.size, dtype=np.int64)]
     )
     sizes = [T] * len(ordered) + [weights.size]
     out_key = np.repeat(np.array(ordered + [cfg.target_key], dtype=object), sizes)
@@ -126,41 +147,26 @@ def _fit_group(pdf: pd.DataFrame, cfg: ModelConfig) -> pd.DataFrame:
     )
 
 
-def fit_transform(df: DataFrame, cfg: ModelConfig, group_col: str = "group_id") -> DataFrame:
-    """Fit the matrix-estimation model per group; emit imputed rows + weights.
-
-    Input: tidy (group_col, series_key, bucket_idx, value/NULL).
-    Output rows: kind='imputed' (series_key, idx=bucket_idx, value) and
-    kind='weight' (idx=weight position, value=weight).
-    One shuffle (hash on group_col), one Arrow round-trip per group.
-    """
-    tidy = df.select(
-        F.col(group_col).cast("string").alias("group_id"),
+def _tidy(df: DataFrame) -> DataFrame:
+    return df.select(
+        F.col("group_id").cast("string"),
         F.col("series_key").cast("string"),
         F.col("bucket_idx").cast("long"),
         F.col("value").cast("double"),
     )
-    return tidy.groupBy("group_id").applyInPandas(
+
+
+def fit_transform(df: DataFrame, cfg: ModelConfig) -> DataFrame:
+    """Fit the matrix-estimation model per group; emit imputed rows + weights.
+
+    Input: tidy (group_id, series_key, bucket_idx, value/NULL); an absent
+    bucket counts as a NULL one.
+    Output rows: kind='imputed' (series_key, idx=bucket_idx, value) and
+    kind='weight' (idx=weight position, value=weight).
+    One shuffle (hash on group_id), one Arrow round-trip per group.
+    """
+    return _tidy(df).groupBy("group_id").applyInPandas(
         lambda pdf: _fit_group(pdf, cfg), schema=FIT_OUTPUT_SCHEMA
-    )
-
-
-def impute(df: DataFrame, cfg: ModelConfig, group_col: str = "group_id") -> DataFrame:
-    """Imputed/denoised tidy rows only (denoisedDF semantics, tsSVDModel.py:96-110)."""
-    fit = fit_transform(df, cfg, group_col)
-    return fit.filter(F.col("kind") == "imputed").select(
-        "group_id", "series_key", F.col("idx").alias("bucket_idx"), F.col("value").alias("value_imputed")
-    )
-
-
-def fit_weights(df: DataFrame, cfg: ModelConfig, group_col: str = "group_id") -> DataFrame:
-    """Model-state table: one row per group with the regression weight vector."""
-    fit = fit_transform(df, cfg, group_col)
-    return (
-        fit.filter(F.col("kind") == "weight")
-        .groupBy("group_id")
-        .agg(F.sort_array(F.collect_list(F.struct("idx", "value"))).alias("w"))
-        .select("group_id", F.col("w.value").alias("weights"))
     )
 
 
@@ -173,31 +179,18 @@ def _forecast_group(actuals: pd.DataFrame, state: pd.DataFrame, cfg: ModelConfig
     # Gaps in the realized actuals are middle-filled (the reference's rule
     # for NaNs in incoming data, tsSVDModel.py:196-203); its predict()
     # assumes complete vectors, which crawl series are not.
-    allv = actuals["value"].to_numpy(dtype=np.float64)
-    mid = linalg.middle_value(allv)
-
-    def split(key):
-        sub = actuals[actuals["series_key"] == key].sort_values("bucket_idx")
-        vals = sub["value"].to_numpy(dtype=np.float64)
-        vals = np.where(np.isnan(vals), mid, vals)
-        idx = sub["bucket_idx"].to_numpy(dtype=np.int64)
-        train_mask = idx < train_end_idx
-        return vals[train_mask], vals[~train_mask], idx[~train_mask]
-
-    tgt_train, tgt_test, test_idx = split(cfg.target_key)
-    donor_train = {}
-    donor_test = {}
-    for k in cfg.donor_keys:
-        tr, te, _ = split(k)
-        donor_train[k] = tr
-        donor_test[k] = te
+    mid = linalg.middle_value(actuals["value"].to_numpy(dtype=np.float64))
+    grid, series = _series_grid(actuals, list(cfg.donor_keys) + [cfg.target_key])
+    filled = {k: np.where(np.isnan(v), mid, v) for k, v in series.items()}
+    train = grid < train_end_idx
 
     preds = linalg.rolling_forecast(
-        weights, tgt_train, tgt_test, cfg.N,
-        donor_train_tails=donor_train, donor_test_actuals=donor_test,
+        weights, filled[cfg.target_key][train], filled[cfg.target_key][~train], cfg.N,
+        donor_train_tails={k: filled[k][train] for k in cfg.donor_keys},
+        donor_test_actuals={k: filled[k][~train] for k in cfg.donor_keys},
         donor_keys=list(cfg.donor_keys), include_past_only=cfg.include_past_only,
     )
-    return pd.DataFrame({"group_id": gid, "idx": test_idx, "forecast": preds})
+    return pd.DataFrame({"group_id": gid, "idx": grid[~train], "forecast": preds})
 
 
 def forecast(
@@ -205,123 +198,17 @@ def forecast(
     weights_state: DataFrame,
     cfg: ModelConfig,
     train_end_idx: int,
-    group_col: str = "group_id",
 ) -> DataFrame:
     """Rolling forecast per group via cogrouped kernels.
 
     ``actuals`` holds observed values for train tail + test horizon (the
-    reference forecasts from realized values, not prior predictions);
-    ``weights_state`` is fit_transform's kind='weight' rows. One co-shuffle
+    reference forecasts from realized values, not prior predictions; an
+    absent bucket counts as a NULL one); ``weights_state`` is
+    fit_transform's kind='weight' rows. One co-shuffle
     on group_id, one kernel call per group for the whole horizon — versus
     the reference's per-step driver loop (M2 round trips).
     """
-    tidy = actuals.select(
-        F.col(group_col).cast("string").alias("group_id"),
-        F.col("series_key").cast("string"),
-        F.col("bucket_idx").cast("long"),
-        F.col("value").cast("double"),
-    )
     state = weights_state.select("group_id", "idx", "value")
-    return tidy.groupby("group_id").cogroup(state.groupby("group_id")).applyInPandas(
+    return _tidy(actuals).groupby("group_id").cogroup(state.groupby("group_id")).applyInPandas(
         lambda a, s: _forecast_group(a, s, cfg, train_end_idx), schema=FORECAST_OUTPUT_SCHEMA
-    )
-
-
-def forecast_sql(
-    actuals: DataFrame,
-    weights_df: DataFrame,
-    N: int,
-    train_end_idx: int,
-    group_col: str = "group_id",
-) -> DataFrame:
-    """Donor-free forecast as pure JVM SQL — the scale path for wide fan-out.
-
-    Lag vectors come from a window ``collect_list`` over the last N-1 actual
-    points; the dot product is ``aggregate(zip_with(...))`` — whole-stage
-    codegen, no Python. ``weights_df`` is (group_id, weights array<double>)
-    and is broadcast (model state is tiny next to the series table).
-    """
-    w = Window.partitionBy(group_col).orderBy("bucket_idx").rowsBetween(-(N - 1), -1)
-    lagged = actuals.withColumn("lags", F.collect_list("value").over(w))
-    test = lagged.filter(F.col("bucket_idx") >= F.lit(train_end_idx)).filter(
-        F.size("lags") == N - 1
-    )
-    joined = test.join(F.broadcast(weights_df), group_col)
-    dot = F.aggregate(
-        F.zip_with("lags", "weights", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return joined.select(
-        F.col(group_col).alias("group_id"),
-        F.col("bucket_idx").alias("idx"),
-        dot.alias("forecast"),
-    )
-
-
-def forecast_sql_multi(
-    actuals: DataFrame,
-    weights_df: DataFrame,
-    cfg: ModelConfig,
-    train_end_idx: int,
-    group_col: str = "group_id",
-) -> DataFrame:
-    """Donor forecast as pure JVM SQL — removes Python from wide-horizon
-    multi-series forecasting (the kernel path's semantics, relationally).
-
-    Per (group, series) running windows build the lag arrays (donors may
-    include the current point when ``include_past_only`` is False, exactly
-    the reference's predict() design); one groupBy per (group, bucket)
-    flattens them donor-major + target-last into the regression vector,
-    and the dot against the broadcast weights is aggregate(zip_with(...))
-    — whole-stage codegen end to end. NaN gaps middle-fill from the
-    group's global (max+min)/2, matching the kernel (linalg.middle_value).
-    """
-    N = cfg.N
-    order = [*cfg.donor_keys, cfg.target_key]
-    order_arr = F.array(*[F.lit(s) for s in order])
-    is_target = F.col("series_key") == F.lit(cfg.target_key)
-
-    gw = Window.partitionBy(group_col)
-    # NaN-aware global middle: max/min over non-NaN values only (Spark's
-    # max would otherwise rank NaN above every number)
-    not_nan = F.when(~F.isnan(F.col("value")), F.col("value"))
-    mid = (F.max(not_nan).over(gw) + F.min(not_nan).over(gw)) / 2.0
-    filled = actuals.withColumn(
-        "value",
-        F.when(F.col("value").isNull() | F.isnan("value"), mid).otherwise(F.col("value")),
-    )
-
-    sw = Window.partitionBy(group_col, "series_key").orderBy("bucket_idx")
-    past = sw.rowsBetween(-(N - 1), -1)
-    incl = sw.rowsBetween(-(N - 1), 0)
-    donor_frame = past if cfg.include_past_only else incl
-    lagged = filled.withColumn(
-        "lags",
-        F.when(is_target, F.collect_list("value").over(past)).otherwise(
-            F.collect_list("value").over(donor_frame)
-        ),
-    ).withColumn("ord", F.array_position(order_arr, F.col("series_key")))
-
-    need_t = N - 1
-    need_d = N - 1 if cfg.include_past_only else N
-    test = lagged.filter(F.col("bucket_idx") >= F.lit(train_end_idx)).filter(
-        F.size("lags") == F.when(is_target, F.lit(need_t)).otherwise(F.lit(need_d))
-    )
-    vec = (
-        test.groupBy(group_col, "bucket_idx")
-        .agg(F.array_sort(F.collect_list(F.struct("ord", "lags"))).alias("parts"))
-        .withColumn("x", F.flatten(F.col("parts.lags")))
-        .filter(F.size("x") == len(cfg.donor_keys) * need_d + need_t)
-    )
-    joined = vec.join(F.broadcast(weights_df), group_col)
-    dot = F.aggregate(
-        F.zip_with("x", "weights", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return joined.select(
-        F.col(group_col).alias("group_id"),
-        F.col("bucket_idx").alias("idx"),
-        dot.alias("forecast"),
     )

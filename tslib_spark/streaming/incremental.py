@@ -1,5 +1,9 @@
 """Incremental model maintenance: the reference's updateSVD path on Spark.
 
+The initial state is the batch model's own fit: ``fit_state`` runs the
+same HSVT fit as ``fit_transform`` (``linalg.hsvt_fit``) and stores its
+factors, so ``fit_state`` weights are ``fit_transform``'s weights.
+
 Semantics (tsSVDModel.updateSVD, /root/reference/src/models/tsSVDModel.py:
 194-232): a new block D of len divisible by N arrives; NaNs are filled with
 D's own middle value (0.0 if all-NaN); D reshapes to N×p; both the full SVD
@@ -30,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tslib_spark.kernels import linalg
-from tslib_spark.kernels.svd_kernel import ModelConfig
+from tslib_spark.kernels.svd_kernel import ModelConfig, _filled_matrix, _prep_group, _tidy
 
 STATE_SCHEMA = (
     "group_id string, n int, m int, k int, kw int, p double, n_series int, "
@@ -40,21 +44,20 @@ STATE_SCHEMA = (
     "imputed_new array<double>"
 )
 
-
-def _state_row(gid, cfg, n_series, uk, sk, vk, ukw, skw, vkw, last_row, weights, times_updated, imputed_new):
+def _state_row(gid, N, p, n_series, uk, sk, vk, ukw, skw, vkw, last_row, weights, times_updated, imputed_new):
     return pd.DataFrame(
         [
             {
                 "group_id": gid,
-                "n": cfg.N,
-                "m": vk.shape[0] // 1,
+                "n": N,
+                "m": vk.shape[0],
                 "k": int(sk.size),
                 # the weights SVD comes from the past-only design matrix
                 # (fewer rows), so its effective rank can be smaller than k
                 # when cfg.k exceeds the design's row count — reshape
                 # ukw/vkw with kw, never k
                 "kw": int(skw.size),
-                "p": cfg.p,
+                "p": p,
                 "n_series": n_series,
                 "uk": uk.flatten().tolist(),
                 "sk": sk.tolist(),
@@ -71,39 +74,41 @@ def _state_row(gid, cfg, n_series, uk, sk, vk, ukw, skw, vkw, last_row, weights,
     )
 
 
+def _read_factors(s: pd.Series):
+    """(uk, sk, vk), (ukw, skw, vkw) of one state row, reshaped."""
+    k, kw = int(s["k"]), int(s["kw"])
+    return (
+        (
+            np.asarray(s["uk"], dtype=float).reshape(-1, k),
+            np.asarray(s["sk"], dtype=float),
+            np.asarray(s["vk"], dtype=float).reshape(-1, k),
+        ),
+        (
+            np.asarray(s["ukw"], dtype=float).reshape(-1, kw),
+            np.asarray(s["skw"], dtype=float),
+            np.asarray(s["vkw"], dtype=float).reshape(-1, kw),
+        ),
+    )
+
+
 def _fit_state_group(pdf: pd.DataFrame, cfg: ModelConfig) -> pd.DataFrame:
     """Initial fit emitting factors (not reconstructions) as state."""
-    keys = list(cfg.donor_keys) + [cfg.target_key]
-    T = cfg.N * cfg.M
-    series = {}
-    for key in keys:
-        sub = pdf[pdf["series_key"] == key].sort_values("bucket_idx")
-        series[key] = sub["value"].to_numpy(dtype=np.float64)[-T:]
-    allv = np.concatenate(list(series.values()))
-    mid = linalg.middle_value(allv)
-    filled = {k: np.where(np.isnan(v), mid, v) for k, v in series.items()}
-    mat = linalg.stack_series(filled, cfg.target_key, list(cfg.donor_keys), cfg.N, cfg.M)
-    last_row = mat[-1, :].copy()
-
-    sk, uk, vk = linalg.svd_topk(mat, cfg.k)
-    n_series = len(keys)
-    design = linalg.past_only_submatrix(mat, n_series, cfg.N) if cfg.include_past_only else mat[: (n_series - 1) * cfg.N + cfg.N - 1, :]
-    skw, ukw, vkw = linalg.svd_topk(design, cfg.k)
-    weights = linalg.pinv_from_svd(skw, ukw, vkw, cfg.p).T @ last_row
+    series, _ = _prep_group(pdf, cfg)
+    mat = _filled_matrix(series, cfg)
+    (sk, uk, vk), (skw, ukw, vkw), _, weights = linalg.hsvt_fit(
+        mat, len(cfg.donor_keys), cfg.N, cfg.k, cfg.p, cfg.include_past_only
+    )
     return _state_row(
-        pdf["group_id"].iloc[0], cfg, n_series, uk, sk, vk, ukw, skw, vkw,
-        last_row, weights, 0, [],
+        pdf["group_id"].iloc[0], cfg.N, cfg.p, len(series), uk, sk, vk, ukw, skw, vkw,
+        mat[-1, :], weights, 0, [],
     )
 
 
-def fit_state(df: DataFrame, cfg: ModelConfig, group_col: str = "group_id") -> DataFrame:
-    tidy = df.select(
-        F.col(group_col).cast("string").alias("group_id"),
-        "series_key",
-        F.col("bucket_idx").cast("long"),
-        F.col("value").cast("double"),
-    )
-    return tidy.groupBy("group_id").applyInPandas(
+def fit_state(df: DataFrame, cfg: ModelConfig) -> DataFrame:
+    """Fit the HSVT model per group and keep its factors as state rows."""
+    if cfg.method != "svd":
+        raise ValueError(f"fit_state fits HSVT only; got method {cfg.method!r}")
+    return _tidy(df).groupBy("group_id").applyInPandas(
         lambda pdf: _fit_state_group(pdf, cfg), schema=STATE_SCHEMA
     )
 
@@ -117,14 +122,8 @@ def _update_group(new_data: pd.DataFrame, state: pd.DataFrame, method: str) -> p
         out["imputed_new"] = [[]]
         return out
     s = state.iloc[0]
-    N, k, kw = int(s["n"]), int(s["k"]), int(s["kw"])
-    p, n_series = float(s["p"]), int(s["n_series"])
-    uk = np.asarray(s["uk"], dtype=float).reshape(-1, k)
-    sk = np.asarray(s["sk"], dtype=float)
-    vk = np.asarray(s["vk"], dtype=float).reshape(-1, k)
-    ukw = np.asarray(s["ukw"], dtype=float).reshape(-1, kw)
-    skw = np.asarray(s["skw"], dtype=float)
-    vkw = np.asarray(s["vkw"], dtype=float).reshape(-1, kw)
+    N, p = int(s["n"]), float(s["p"])
+    (uk, sk, vk), (ukw, skw, vkw) = _read_factors(s)
     last_row = np.asarray(s["last_row"], dtype=float)
 
     D = new_data.sort_values("bucket_idx")["value"].to_numpy(dtype=np.float64)
@@ -142,39 +141,36 @@ def _update_group(new_data: pd.DataFrame, state: pd.DataFrame, method: str) -> p
     if D.shape[1] > D.shape[0]:
         raise ValueError("at most N new columns per update (reference contract)")
 
-    if method == "brand":
-        uk, sk, vk = linalg.update_svd_brand(D, uk, sk, vk)
-        ukw, skw, vkw = linalg.update_svd_brand(D[:-1, :], ukw, skw, vkw)
-    else:
-        uk, sk, vk = linalg.update_svd_folding_in(D, uk, sk, vk)
-        ukw, skw, vkw = linalg.update_svd_folding_in(D[:-1, :], ukw, skw, vkw)
+    update = linalg.update_svd_brand if method == "brand" else linalg.update_svd_folding_in
+    uk, sk, vk = update(D, uk, sk, vk)
+    # the block is the target's alone, so its design rows are its first N-1
+    ukw, skw, vkw = update(linalg.regression_design(D, 0, N), ukw, skw, vkw)
 
     last_row = np.append(last_row, D[-1, :])
-    weights = linalg.pinv_from_svd(skw, ukw, vkw, p).T @ last_row
+    weights = linalg.svd_weights(skw, ukw, vkw, p, last_row)
 
     # denoisedDFNew: reconstruct only the newly folded-in columns
     p_new = D.shape[1]
     imputed_new = linalg.reconstruct(sk, uk, vk[-p_new:, :], p).flatten("F").tolist()
 
-    cfg = ModelConfig(target_key="", N=N, M=vk.shape[0], k=k, p=p)
     return _state_row(
-        s["group_id"], cfg, n_series, uk, sk, vk, ukw, skw, vkw,
+        s["group_id"], N, p, int(s["n_series"]), uk, sk, vk, ukw, skw, vkw,
         last_row, weights, int(s["times_updated"]) + 1, imputed_new,
     )
 
 
-def update_state(
-    state: DataFrame, new_data: DataFrame, method: str = "folding-in",
-    group_col: str = "group_id",
-) -> DataFrame:
+def update_state(state: DataFrame, new_data: DataFrame, method: str = "folding-in") -> DataFrame:
     """One incremental micro-batch: cogroup (new block, state) per group.
 
     ``new_data``: tidy rows of the target series' new buckets (len divisible
-    by N, ≤ N*N points). Returns the updated state rows, with the denoised
-    values of the new buckets in ``imputed_new``.
+    by N, ≤ N*N points). ``method`` is 'folding-in' or 'brand'. Returns the
+    updated state rows, with the denoised values of the new buckets in
+    ``imputed_new``.
     """
+    if method not in ("folding-in", "brand"):
+        raise ValueError(f"method must be 'folding-in' or 'brand', got {method!r}")
     tidy = new_data.select(
-        F.col(group_col).cast("string").alias("group_id"),
+        F.col("group_id").cast("string"),
         F.col("bucket_idx").cast("long"),
         F.col("value").cast("double"),
     )
@@ -190,10 +186,7 @@ def impute_from_state(state: DataFrame) -> DataFrame:
 
     def _explode(pdf: pd.DataFrame) -> pd.DataFrame:
         s = pdf.iloc[0]
-        k = int(s["k"])
-        uk = np.asarray(s["uk"], dtype=float).reshape(-1, k)
-        sk = np.asarray(s["sk"], dtype=float)
-        vk = np.asarray(s["vk"], dtype=float).reshape(-1, k)
+        (uk, sk, vk), _ = _read_factors(s)
         mat = linalg.reconstruct(sk, uk, vk, float(s["p"]))
         n_rows, n_cols = mat.shape
         N = int(s["n"])
