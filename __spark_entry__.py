@@ -751,12 +751,7 @@ def _q_gorilla_roundtrip(spark, sf_dir):
         F.col("event_id").alias("bucket_idx"),
         F.col("value"),
     )
-    chunks = encode_chunks(tidy, ["series_key"])
-    # key_dict from the source scan: without it, the decode-side sid
-    # dictionary subtree would re-run the (still-lazy) encode kernels
-    return decode_chunks(
-        chunks, ["series_key"], key_dict=tidy.select("series_key").distinct()
-    )
+    return decode_chunks(encode_chunks(tidy, ["series_key"]), ["series_key"])
 
 
 def _q_als_impute(spark, sf_dir):

@@ -2,7 +2,7 @@
 
 Splits scan → 1-minute rollup → window-salted Gorilla encode into:
   jvm   — scan + rollup shuffle + sum agg (no Python anywhere);
-  full  — the complete scale_job (adds the applyInPandas encode kernels).
+  full  — the complete scale_job (adds the mapInPandas encode kernel).
 
 The encode-phase time is full - jvm (the phases share the scan+shuffle
 prefix). Per-phase lo/hi ratios show WHICH stage stops scaling on a shared

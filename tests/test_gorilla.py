@@ -465,3 +465,68 @@ def test_decode_state_chunks_rejects_point_count_mismatch(spark):
         bad = spark.createDataFrame(pd.DataFrame(rows))
         with pytest.raises(Exception, match="corrupt state chunk"):
             decode_state_chunks(bad, ["url", "lang"]).collect()
+
+    # a generic chunk row whose blobs agree with each other but not with
+    # its n_points
+    from tslib_spark.codec.chunks import decode_chunks
+
+    generic = {
+        "k": "u", "chunk_id": 0, "n_points": 2, "ts_start": 0,
+        "ts_blob": encode_timestamps(np.arange(3, dtype=np.int64)),
+        "val_blob": encode_values(np.ones(3)),
+    }
+    bad = spark.createDataFrame(pd.DataFrame([generic]))
+    with pytest.raises(Exception, match="corrupt chunk"):
+        decode_chunks(bad, ["k"]).collect()
+
+
+def test_chunk_encode_independent_of_batch_size_with_spill(spark):
+    """The generic encode carries a (sid, window) run across Arrow batches
+    too, and splits a run longer than chunk_size (duplicate timestamps in
+    one window) into chunks with ordinals 0..k: 7-row batches give the same
+    chunk rows as the default, and decode returns the input multiset."""
+    import pandas as pd
+
+    from tslib_spark.codec.chunks import ORDINAL_BITS, decode_chunks, encode_chunks
+
+    chunk_size = 64
+    rng = np.random.default_rng(5)
+    idx = np.cumsum(rng.integers(1, 4, 300)).astype(np.int64)
+    dup = np.concatenate([np.sort(rng.integers(0, 10, 200)), np.arange(64, 74)])
+    pdf = pd.concat(
+        [
+            pd.DataFrame({"k": "a", "bucket_idx": idx, "value": np.round(rng.normal(size=300), 3)}),
+            # tied timestamps share a value, so the chunk bytes do not depend
+            # on the (unspecified) order of ties
+            pd.DataFrame({"k": "spill", "bucket_idx": dup, "value": dup * 0.5}),
+        ],
+        ignore_index=True,
+    )
+    df = spark.createDataFrame(pdf)
+
+    def rows(chunks):
+        return sorted(
+            (r["k"], r["chunk_id"], r["n_points"], r["ts_start"], bytes(r["ts_blob"]),
+             bytes(r["val_blob"]))
+            for r in chunks.collect()
+        )
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = rows(encode_chunks(df, ["k"], chunk_size=chunk_size))
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        small_df = encode_chunks(df, ["k"], chunk_size=chunk_size)
+        small = rows(small_df)
+        back = decode_chunks(small_df, ["k"]).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    assert small == default
+    spill = [(r[1] >> ORDINAL_BITS, r[1] & ((1 << ORDINAL_BITS) - 1), r[2])
+             for r in default if r[0] == "spill"]
+    assert spill == [(0, 0, 64), (0, 1, 64), (0, 2, 64), (0, 3, 8), (1, 0, 10)]
+    assert all(r[2] <= chunk_size for r in default)
+    order = ["k", "bucket_idx", "value"]
+    got = back[order].sort_values(order, ignore_index=True)
+    want = pdf[order].sort_values(order, ignore_index=True)
+    pd.testing.assert_frame_equal(got, want)

@@ -1,7 +1,13 @@
-"""Guard: ``codec/gorilla.py`` is the only module that calls the one-blob
-decoders. Everywhere else decodes a whole Arrow batch column with
-``decode_values_multi`` / ``decode_timestamps_multi``; a per-blob decode in
-a Python loop costs a call per chunk row."""
+"""Guard: one Gorilla chunk codec.
+
+- ``codec/gorilla.py`` is the only module that calls the one-blob
+  decoders. Everywhere else decodes a whole Arrow batch column; a
+  per-blob decode in a Python loop costs a call per chunk row.
+- ``codec/chunks.py`` (the shared chunk kernels) and ``codec/gorilla.py``
+  are the only modules that call the batch decoders ``decode_*_multi``,
+  so every chunk layout goes through the one checked decode.
+- No ``codec/`` module calls ``applyInPandas``: chunk encode is the
+  sorted-stream ``mapInPandas`` kernel of ``codec/chunks.py``."""
 
 from __future__ import annotations
 
@@ -9,19 +15,24 @@ import ast
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "tslib_spark"
-ALLOWED = {PKG / "codec" / "gorilla.py"}
+CODEC = PKG / "codec"
 PER_BLOB = {"decode_timestamps", "decode_values"}
+MULTI = {"decode_timestamps_multi", "decode_values_multi"}
 
 
-def _per_blob_calls(path: pathlib.Path) -> list[int]:
-    hits = []
+def _uses(path: pathlib.Path, names: set[str]) -> list[int]:
+    """Lines that call or otherwise name ``names`` (a decoder handed
+    around in a table is still a call site)."""
+    hits = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
-        if isinstance(node, ast.Call):
-            fn = node.func
-            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
-            if name in PER_BLOB:
-                hits.append(node.lineno)
+        name = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+        if name in names:
+            hits.add(node.lineno)
     return sorted(hits)
+
+
+def _offenders(paths, find) -> dict[str, list[int]]:
+    return {str(p.relative_to(PKG)): lines for p in sorted(paths) if (lines := find(p))}
 
 
 def test_guard_detects_a_per_blob_call(tmp_path):
@@ -32,14 +43,30 @@ def test_guard_detects_a_per_blob_call(tmp_path):
         "a = [decode_values(b) for b in blobs]\n"
         "b = gorilla.decode_timestamps(blob)\n"
         "c = gorilla.decode_values_multi(blobs)\n"
+        "d = {'double': gorilla.decode_values_multi}\n"
+        "e = df.groupBy('g').applyInPandas(f, schema=s)\n"
     )
-    assert _per_blob_calls(bad) == [3, 4]
+    assert _uses(bad, PER_BLOB) == [3, 4]
+    assert _uses(bad, MULTI) == [5, 6]
+    assert _uses(bad, {"applyInPandas"}) == [7]
 
 
 def test_only_gorilla_calls_per_blob_decoders():
-    offenders = {
-        str(p.relative_to(PKG)): lines
-        for p in sorted(PKG.rglob("*.py"))
-        if p not in ALLOWED and (lines := _per_blob_calls(p))
-    }
+    offenders = _offenders(
+        (p for p in PKG.rglob("*.py") if p != CODEC / "gorilla.py"),
+        lambda p: _uses(p, PER_BLOB),
+    )
     assert not offenders, f"decode a batch with decode_*_multi instead: {offenders}"
+
+
+def test_only_the_chunk_kernels_call_batch_decoders():
+    allowed = {CODEC / "chunks.py", CODEC / "gorilla.py"}
+    offenders = _offenders(
+        (p for p in PKG.rglob("*.py") if p not in allowed), lambda p: _uses(p, MULTI)
+    )
+    assert not offenders, f"decode chunks with codec.chunks.decode_blobs: {offenders}"
+
+
+def test_no_apply_in_pandas_in_codec():
+    offenders = _offenders(CODEC.rglob("*.py"), lambda p: _uses(p, {"applyInPandas"}))
+    assert not offenders, f"encode chunks with codec.chunks.encode_runs: {offenders}"

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,6 +34,7 @@ from tslib_spark.plans.lineage import CheckpointStore
 
 # partition granularity per tier: fine tiers partition daily, coarse weekly
 PART_TRUNC = {"minute": "day", "hour": "day", "day": "week", "week": "week"}
+SPAN_DAYS = {"day": 1, "week": 7}
 
 
 class TierStore:
@@ -88,10 +90,8 @@ class TierStore:
         At 100 TB a day's read touches one part_key directory and decodes
         only that day's chunks, not the corpus.
         """
-        import pandas as pd
-
         raw = self.backend.read(self.spark, tier)
-        span_days = {"day": 1, "week": 7}[PART_TRUNC[tier]]
+        span_days = SPAN_DAYS[PART_TRUNC[tier]]
         if start_ts is not None:
             pk_lo = (
                 pd.Timestamp(start_ts) - pd.Timedelta(days=span_days)
@@ -119,6 +119,17 @@ class TierStore:
         if end_ts is not None:
             out = out.filter(F.col("bucket_ts") < F.lit(pd.Timestamp(end_ts)))
         return out
+
+    def read_partitions(self, tier: str, pks) -> DataFrame:
+        """The stored rows of partitions ``pks`` of ``tier``, ``part_key``
+        attached: the partition filter sits on the scan, so only those
+        partitions are read and, for compressed tiers, decoded."""
+        raw = self.backend.read(self.spark, tier).filter(F.col("part_key").isin(list(pks)))
+        if tier not in self.compressed_tiers:
+            return raw
+        from tslib_spark.codec.statechunks import decode_state_chunks
+
+        return self._with_part_key(decode_state_chunks(raw.drop("part_key"), self.keys), tier)
 
     # ---------------- checksums ----------------
     def _with_part_key(self, df: DataFrame, tier: str) -> DataFrame:
@@ -210,18 +221,7 @@ class TierStore:
         )
         # checksum what actually landed (decoded read-back for compressed
         # tiers — the checksum certifies the decodable bytes on disk)
-        landed_raw = self.backend.read(self.spark, tier).filter(
-            F.col("part_key").isin(pks)
-        )
-        if tier in self.compressed_tiers:
-            from tslib_spark.codec.statechunks import decode_state_chunks
-
-            landed = self._with_part_key(
-                decode_state_chunks(landed_raw.drop("part_key"), self.keys), tier
-            )
-        else:
-            landed = landed_raw
-        sums = self._partition_checksums(landed)
+        sums = self._partition_checksums(self.read_partitions(tier, pks))
         self.checkpoint.mark_many(
             [
                 {
@@ -261,15 +261,21 @@ class TierStore:
     def verify_tier_parity(self, fine: str, coarse: str, coarse_pks=None) -> bool:
         """Recompute ``coarse`` from stored ``fine`` and compare checksums
         partition-by-partition against the stored coarse tier; optionally
-        restricted to ``coarse_pks`` (a collection of partition keys)."""
-        recomputed = self._with_part_key(
-            downsample(self.read_tier(fine), coarse, self.keys), coarse
-        )
-        stored = self._with_part_key(self.read_tier(coarse), coarse)
+        restricted to ``coarse_pks`` (a collection of partition keys), in
+        which case only the fine range covering them is read."""
+        if coarse_pks is None:
+            fine_rows = self.read_tier(fine)
+            stored = self._with_part_key(self.read_tier(coarse), coarse)
+        else:
+            pks = sorted(coarse_pks)
+            if not pks:
+                return True
+            end = pd.Timestamp(pks[-1]) + pd.Timedelta(days=SPAN_DAYS[PART_TRUNC[coarse]])
+            fine_rows = self.read_tier(fine, pks[0], end)
+            stored = self.read_partitions(coarse, pks)
+        recomputed = self._with_part_key(downsample(fine_rows, coarse, self.keys), coarse)
         if coarse_pks is not None:
-            pks = list(coarse_pks)
             recomputed = recomputed.filter(F.col("part_key").isin(pks))
-            stored = stored.filter(F.col("part_key").isin(pks))
         return self._partition_checksums(recomputed) == self._partition_checksums(stored)
 
     def expire_snapshots(
@@ -337,14 +343,11 @@ class TierStore:
                 f"for partitions {recomputable}"
             )
         if integrity_only:
-            got = self._partition_checksums(
-                self._with_part_key(self.read_tier(coarse), coarse).filter(
-                    F.col("part_key").isin(integrity_only)
-                )
-            )
+            got = self._partition_checksums(self.read_partitions(coarse, integrity_only))
+            recorded = cp[(cp["tier"] == coarse) & (cp["status"] == "done")]
+            want = dict(zip(recorded["partition_key"].astype(str), recorded["checksum"]))
             for pk in integrity_only:
-                want = self.checkpoint.checksum_of(coarse, pk)
-                if want is None or got.get(pk, (0, None))[1] != want:
+                if pk not in want or got.get(pk, (0, None))[1] != int(want[pk]):
                     raise RuntimeError(
                         f"retention blocked: stored {coarse} partition {pk} no "
                         f"longer matches its recorded checksum"

@@ -134,12 +134,3 @@ class CheckpointStore:
             )
         new = pd.DataFrame(out_rows)
         self._write(new if df.empty else pd.concat([df, new], ignore_index=True))
-
-    def checksum_of(self, tier: str, partition_key: str) -> int | None:
-        df = self.read()
-        sel = df[
-            (df["tier"] == tier)
-            & (df["partition_key"] == str(partition_key))
-            & (df["status"] == "done")
-        ]
-        return int(sel["checksum"].iloc[0]) if len(sel) else None

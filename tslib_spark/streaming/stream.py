@@ -122,9 +122,7 @@ def ingest_to_store(
             # (keys, bucket_ts) can only be this batch's own earlier
             # replayed write — replacing is idempotent under foreachBatch's
             # at-least-once contract, where re-summing would double-count
-            prev = store._with_part_key(store.read_tier("minute"), "minute").filter(
-                F.col("part_key").isin(touched)
-            ).drop("part_key")
+            prev = store.read_partitions("minute", touched).drop("part_key")
             keep = prev.join(
                 batch_df.select(*keys, "bucket_ts"), [*keys, "bucket_ts"], "left_anti"
             )
