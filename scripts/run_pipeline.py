@@ -16,7 +16,8 @@ The job: read pages → byte-identity text extraction audit → 1-minute
 rollup → materialize 1m/1h/1d/1w tiers (checkpointed, resumable) →
 Gorilla-compress the minute tier → verify tier parity → retention pass.
 Exit code 0 only if every stage (incl. the identity audit and parity
-gate) holds.
+gate) holds. The JSON report gives each stage's wall seconds in
+``stage_secs``.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ import argparse
 import json
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, ".")  # repo-root invocation; --py-files covers cluster mode
 
@@ -50,17 +52,26 @@ def main() -> int:
 
     spark: SparkSession = get_spark("tslib_spark-pipeline", master=args.master)
     t0 = time.time()
-    report: dict = {}
+    report: dict = {"stage_secs": {}}
+
+    @contextmanager
+    def stage(name: str):
+        start = time.time()
+        yield
+        report["stage_secs"][name] = round(time.time() - start, 2)
 
     if args.synthesize:
         from tslib_spark.datagen.crawl import generate_pages
 
-        generate_pages(spark, n_events=args.synthesize).write.mode("overwrite").parquet(args.pages)
+        with stage("synthesize"):
+            pages_df = generate_pages(spark, n_events=args.synthesize)
+            pages_df.write.mode("overwrite").parquet(args.pages)
 
     pages = read_pages(spark, args.pages)
 
     # 1. byte-identity audit
-    bad = verify_text_identity(extract_text(pages)).count()
+    with stage("text_identity"):
+        bad = verify_text_identity(extract_text(pages)).count()
     report["text_identity_violations"] = bad
     if bad:
         print(json.dumps({"status": "failed", "stage": "text_identity", **report}))
@@ -73,21 +84,25 @@ def main() -> int:
     # tier chain, parity gate, and retention below
     store = TierStore(spark, args.store, ["url", "lang"], compressed_tiers={"minute"})
     minute = rollup_pages(pages)
-    written = store.materialize_chain(minute)
+    with stage("materialize_chain"):
+        written = store.materialize_chain(minute)
     report["partitions_written"] = {k: len(v) for k, v in written.items()}
-    report["minute_rows"] = store.read_tier("minute").count()
+    with stage("minute_readback"):
+        report["minute_rows"] = store.read_tier("minute").count()
 
     # 3. compression accounting from the stored chunk blobs
-    chunks = spark.read.parquet(store.tier_path("minute"))
-    blob_cols = ["ts_blob", "cnt_blob", "sum_blob", "min_blob", "max_blob"]
-    stats = chunks.select(
-        F.sum("n_points").alias("pts"),
-        F.sum(sum(F.length(c) for c in blob_cols)).alias("bytes"),
-    ).collect()[0]
+    with stage("compression_stats"):
+        chunks = spark.read.parquet(store.tier_path("minute"))
+        blob_cols = ["ts_blob", "cnt_blob", "sum_blob", "min_blob", "max_blob"]
+        stats = chunks.select(
+            F.sum("n_points").alias("pts"),
+            F.sum(sum(F.length(c) for c in blob_cols)).alias("bytes"),
+        ).collect()[0]
     report["compression_ratio"] = round(stats["pts"] * 40 / stats["bytes"], 2)
 
     # 4. parity gate + retention
-    report["parity_minute_hour"] = store.verify_tier_parity("minute", "hour")
+    with stage("parity"):
+        report["parity_minute_hour"] = store.verify_tier_parity("minute", "hour")
     if not report["parity_minute_hour"]:
         print(json.dumps({"status": "failed", "stage": "parity", **report}))
         return 3
@@ -103,7 +118,8 @@ def main() -> int:
         done = sorted(store.checkpoint.done_partitions(tier))
         if len(done) > keep:
             cutoff = done[-keep]
-            report[f"expired_{tier}_partitions"] = len(store.retention_pass(tier, cutoff))
+            with stage(f"retention_{tier}"):
+                report[f"expired_{tier}_partitions"] = len(store.retention_pass(tier, cutoff))
 
     report["status"] = "ok"
     report["wall_secs"] = round(time.time() - t0, 1)

@@ -7,7 +7,11 @@
   are the only modules that call the batch decoders ``decode_*_multi``,
   so every chunk layout goes through the one checked decode.
 - No ``codec/`` module calls ``applyInPandas``: chunk encode is the
-  sorted-stream ``mapInPandas`` kernel of ``codec/chunks.py``."""
+  sorted-stream ``mapInPandas`` kernel of ``codec/chunks.py``.
+- No ``codec/`` module joins keys back onto chunk rows: no key dictionary
+  (``distinct`` plus a ``broadcast`` join) and no pandas ``merge`` or
+  ``rename`` per batch. The keys ride the encode shuffle, and each chunk
+  row takes them from the row its chunk starts at."""
 
 from __future__ import annotations
 
@@ -18,6 +22,7 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "tslib_spark"
 CODEC = PKG / "codec"
 PER_BLOB = {"decode_timestamps", "decode_values"}
 MULTI = {"decode_timestamps_multi", "decode_values_multi"}
+KEY_REJOIN = {"distinct", "broadcast", "merge", "rename"}
 
 
 def _uses(path: pathlib.Path, names: set[str]) -> list[int]:
@@ -45,10 +50,13 @@ def test_guard_detects_a_per_blob_call(tmp_path):
         "c = gorilla.decode_values_multi(blobs)\n"
         "d = {'double': gorilla.decode_values_multi}\n"
         "e = df.groupBy('g').applyInPandas(f, schema=s)\n"
+        "f = chunks.join(F.broadcast(keys.distinct()), '_sid')\n"
+        "g = pdf.merge(key_dict, on='_sid').rename(columns=names)\n"
     )
     assert _uses(bad, PER_BLOB) == [3, 4]
     assert _uses(bad, MULTI) == [5, 6]
     assert _uses(bad, {"applyInPandas"}) == [7]
+    assert _uses(bad, KEY_REJOIN) == [8, 9]
 
 
 def test_only_gorilla_calls_per_blob_decoders():
@@ -70,3 +78,8 @@ def test_only_the_chunk_kernels_call_batch_decoders():
 def test_no_apply_in_pandas_in_codec():
     offenders = _offenders(CODEC.rglob("*.py"), lambda p: _uses(p, {"applyInPandas"}))
     assert not offenders, f"encode chunks with codec.chunks.encode_runs: {offenders}"
+
+
+def test_encode_carries_its_keys():
+    offenders = _offenders(CODEC.rglob("*.py"), lambda p: _uses(p, KEY_REJOIN))
+    assert not offenders, f"take chunk keys by run-start position instead: {offenders}"

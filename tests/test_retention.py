@@ -50,7 +50,7 @@ def test_materialize_chain_and_readback(spark, store_root, minute_source):
     wrap = lambda v: ((v + 2**63) % 2**64) - 2**63  # noqa: E731
     for tier in ("minute", "week"):
         stored = store.read_tier(tier)
-        parts = store._partition_checksums(store._with_part_key(stored, tier))
+        (parts,) = store._partition_checksums(store._with_part_key(stored, tier))
         assert wrap(sum(c for _, c in parts.values())) == wrap(
             tier_state_checksum(stored, KEYS)
         )
@@ -203,6 +203,78 @@ def test_compressed_minute_tier_store(spark, store_root, minute_source):
     # idempotent rerun: nothing rematerializes
     again = store.materialize_chain(minute_source)
     assert all(len(v) == 0 for v in again.values())
+
+
+def test_corrupt_landed_blob_blocks_parity_and_retention(spark, store_root, minute_source):
+    """A truncated blob in a landed minute-tier file must fail the parity
+    gate and block retention: the checksums certify decodable bytes on
+    disk, not the frame the write was handed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = TierStore(spark, store_root, KEYS, compressed_tiers={"minute"})
+    store.materialize_chain(minute_source)
+    first = sorted(store.checkpoint.done_partitions("minute"))[0]
+    path = sorted((Path(store.tier_path("minute")) / f"part_key={first}").glob("*.parquet"))[0]
+    table = pq.read_table(path)
+    victim = int(pa.compute.index(table["n_points"], pa.compute.max(table["n_points"])).as_py())
+    blobs = table["cnt_blob"].to_pylist()
+    blobs[victim] = blobs[victim][: len(blobs[victim]) // 2]
+    i = table.schema.get_field_index("cnt_blob")
+    pq.write_table(table.set_column(i, table.schema.field(i), pa.array(blobs, pa.binary())), path)
+    # drop the file's checksum sidecar, else the filesystem layer refuses
+    # the rewritten file before any blob is decoded
+    path.with_name(f".{path.name}.crc").unlink()
+
+    try:
+        failed = store.verify_tier_parity("minute", "hour") is False
+    except Exception as e:  # the decode rejects the blob inside the job
+        failed = "corrupt Gorilla blob" in str(e)
+    assert failed
+    with pytest.raises(Exception, match="corrupt Gorilla blob|retention blocked"):
+        store.retention_pass("minute", expire_before="2024-01-08")
+    assert first in store.checkpoint.done_partitions("minute")
+
+
+def test_materialize_records_only_what_it_wrote(spark, store_root, minute_source):
+    """A part_key= directory that is on disk but neither in the manifest
+    nor produced by the source is never recorded done."""
+    store = TierStore(spark, store_root, KEYS)
+    store.materialize("minute", minute_source)
+    tier_dir = Path(store.tier_path("minute"))
+    done = sorted(store.checkpoint.done_partitions("minute"))
+    shutil.copytree(tier_dir / f"part_key={done[0]}", tier_dir / "part_key=1999-12-31")
+    # a killed partition, so the next run has something to write
+    cp = store.checkpoint.read()
+    store.checkpoint._write(cp[~((cp["tier"] == "minute") & (cp["partition_key"] == done[-1]))])
+    shutil.rmtree(tier_dir / f"part_key={done[-1]}")
+
+    assert store.materialize("minute", minute_source) == [done[-1]]
+    cp = store.checkpoint.read()
+    assert "1999-12-31" not in set(cp["partition_key"])
+    assert sorted(store.checkpoint.done_partitions("minute")) == done
+
+
+def test_fresh_store_reads_existing_tiers(spark, store_root, minute_source):
+    """A new TierStore over an existing root learns each tier's schema from
+    its first read and reads every tier, compressed and raw, exactly."""
+    store = TierStore(spark, store_root, KEYS, compressed_tiers={"minute"})
+    store.materialize_chain(minute_source)
+    tiers = ("minute", "hour", "day", "week")
+    want = {t: store.read_tier(t) for t in tiers}
+
+    fresh = TierStore(spark, store_root, KEYS, compressed_tiers={"minute"})
+    for t in tiers:
+        got = fresh.read_tier(t)
+        assert got.schema == want[t].schema, t
+        assert tier_state_checksum(got, KEYS) == tier_state_checksum(want[t], KEYS), t
+        # the second read goes through the recorded schema
+        assert fresh.read_tier(t).schema == got.schema, t
+    assert tier_state_checksum(fresh.read_tier("minute"), KEYS) == tier_state_checksum(
+        minute_source, KEYS
+    )
+    assert fresh.verify_tier_parity("minute", "hour")
+    assert all(len(v) == 0 for v in fresh.materialize_chain(minute_source).values())
 
 
 def test_range_read_prunes_partitions_and_chunks(spark, store_root, minute_source):

@@ -24,11 +24,11 @@ unit of work is one (sid, window) run, so a head series spreads its
 windows over the shuffle partitions and no task holds a fixed fraction
 of the table.
 
-``sid = xxhash64(keys)``: the shuffle and the encode-side Arrow crossing
-carry an 8-byte series id instead of the key strings, which rejoin the
-chunk rows through a broadcast of the distinct key→sid dictionary (chunk
-rows are far rarer than input rows). A 64-bit collision would merge two
-series' chunks (birthday bound ~1e-9 at 10^7 series per job).
+``sid = xxhash64(keys)`` orders and compares the runs as one 8-byte
+column; the key columns (as strings) ride the shuffle beside it, and each
+chunk row takes its keys from the row its chunk starts at. A 64-bit
+collision would merge two series' runs (birthday bound ~1e-9 at 10^7
+series per job).
 
 Decode is one ``decode_*_multi`` call per blob column per Arrow batch;
 the key columns ride through Arrow, and a row whose blob point counts
@@ -64,10 +64,15 @@ def _kernel(fn, **kwargs):
     return update_wrapper(partial(fn, **kwargs), fn)
 
 
-def _encode_sorted(batches, encode_run):
+def _encode_sorted(batches, keys, encode_run):
     """mapInPandas kernel over a partition sorted by (sid, window, ts):
     encodes each batch's complete runs and carries the trailing run, which
     may continue in the next batch, until the partition ends."""
+
+    def encoded(pdf, starts):
+        at, cols = encode_run(pdf, starts)
+        return pd.DataFrame({**{k: pdf[k].to_numpy()[at] for k in keys}, **cols})
+
     carry = None
     for pdf in batches:
         if carry is not None:
@@ -82,38 +87,36 @@ def _encode_sorted(batches, encode_run):
         starts = np.flatnonzero(changed)
         last = int(starts[-1])
         if last:
-            yield encode_run(pdf.iloc[:last], starts[:-1])
+            yield encoded(pdf.iloc[:last], starts[:-1])
         carry = pdf.iloc[last:].reset_index(drop=True)
     if carry is not None and len(carry):
-        yield encode_run(carry, np.zeros(1, dtype=np.int64))
+        yield encoded(carry, np.zeros(1, dtype=np.int64))
 
 
 def encode_runs(
     df: DataFrame, keys: list[str], cols: list, encode_run, blobs: tuple[str, ...]
 ) -> DataFrame:
     """``df`` rows → chunk rows ``(keys..., chunk_id, n_points, ts_start,
-    blobs...)`` through the sorted-stream kernel.
+    blobs...)`` through the sorted-stream kernel; keys come out as strings.
 
-    ``cols`` are the Columns selected beside the series id ``_sid``; they
-    must include ``_win`` (the chunk window) and ``_ts`` (the in-run
-    order). ``encode_run(pdf, starts)`` encodes the complete runs of
-    ``pdf``, starting at rows ``starts``, as rows ``(_sid, chunk_id,
-    n_points, ts_start, blobs...)``."""
+    ``cols`` are the Columns selected beside the series id ``_sid`` and the
+    keys; they must include ``_win`` (the chunk window) and ``_ts`` (the
+    in-run order). ``encode_run(pdf, starts)`` encodes the complete runs of
+    ``pdf``, starting at rows ``starts``, and returns ``(at, columns)``:
+    ``columns`` maps ``chunk_id``, ``n_points``, ``ts_start`` and each blob
+    to one array entry per chunk, and ``at`` is the row of ``pdf`` each
+    chunk starts at, whose keys the chunk row takes."""
     sid = F.xxhash64(*[F.col(k).cast("string") for k in keys])
-    schema = "_sid long, chunk_id long, n_points int, ts_start long, " + ", ".join(
-        f"{b} binary" for b in blobs
+    schema = ", ".join(
+        [f"`{k}` string" for k in keys]
+        + ["chunk_id long", "n_points int", "ts_start long"]
+        + [f"{b} binary" for b in blobs]
     )
-    chunks = (
-        df.select(sid.alias("_sid"), *cols)
+    return (
+        df.select(sid.alias("_sid"), *[F.col(k).cast("string").alias(k) for k in keys], *cols)
         .repartition("_sid", "_win")
         .sortWithinPartitions("_sid", "_win", "_ts")
-        .mapInPandas(_kernel(_encode_sorted, encode_run=encode_run), schema=schema)
-    )
-    sid_dict = df.select(*[F.col(k).cast("string") for k in keys]).distinct().withColumn(
-        "_sid", sid
-    )
-    return chunks.join(F.broadcast(sid_dict), "_sid").select(
-        *keys, "chunk_id", "n_points", "ts_start", *blobs
+        .mapInPandas(_kernel(_encode_sorted, keys=keys, encode_run=encode_run), schema=schema)
     )
 
 
@@ -156,7 +159,7 @@ def decode_blobs(
     )
 
 
-def _encode_value_runs(pdf: pd.DataFrame, starts: np.ndarray, chunk_size: int) -> pd.DataFrame:
+def _encode_value_runs(pdf: pd.DataFrame, starts: np.ndarray, chunk_size: int):
     """Run encoder of ``encode_chunks``: one chunk per run, except that a
     run longer than ``chunk_size`` (duplicate timestamps in one window)
     spills into chunks of ``chunk_size`` points with ordinals 1, 2, ..."""
@@ -195,16 +198,13 @@ def _encode_value_runs(pdf: pd.DataFrame, starts: np.ndarray, chunk_size: int) -
             "use coarser ticks or a larger chunk_size"
         )
     ts = pdf["_ts"].to_numpy(dtype=np.int64)
-    return pd.DataFrame(
-        {
-            "_sid": pdf["_sid"].to_numpy()[chunk_starts],
-            "chunk_id": ((wins << ORDINAL_BITS) | ordinal).astype(np.int64),
-            "n_points": np.diff(np.append(chunk_starts, n)).astype(np.int32),
-            "ts_start": ts[chunk_starts],
-            "ts_blob": encode_timestamps_multi(ts, chunk_starts),
-            "val_blob": encode_values_multi(pdf["_val"].to_numpy(dtype=np.float64), chunk_starts),
-        }
-    )
+    return chunk_starts, {
+        "chunk_id": ((wins << ORDINAL_BITS) | ordinal).astype(np.int64),
+        "n_points": np.diff(np.append(chunk_starts, n)).astype(np.int32),
+        "ts_start": ts[chunk_starts],
+        "ts_blob": encode_timestamps_multi(ts, chunk_starts),
+        "val_blob": encode_values_multi(pdf["_val"].to_numpy(dtype=np.float64), chunk_starts),
+    }
 
 
 def encode_chunks(

@@ -63,23 +63,20 @@ def _sum_scaled(pdf: pd.DataFrame) -> np.ndarray:
     return raw.astype(np.int64, copy=False)
 
 
-def _encode_state_runs(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
-    """Encode the sorted rows of ``pdf`` as one chunk row per run; ``starts``
+def _encode_state_runs(pdf: pd.DataFrame, starts: np.ndarray):
+    """Encode the sorted rows of ``pdf`` as one chunk per run; ``starts``
     are the first row of each (sid, window) run."""
     minutes = pdf["_ts"].to_numpy(dtype=np.int64)
-    return pd.DataFrame(
-        {
-            "_sid": pdf["_sid"].to_numpy()[starts],
-            "chunk_id": pdf["_win"].to_numpy()[starts].astype(np.int64),
-            "n_points": np.diff(np.append(starts, len(pdf))).astype(np.int32),
-            "ts_start": minutes[starts],
-            "ts_blob": encode_timestamps_multi(minutes, starts),
-            "cnt_blob": encode_timestamps_multi(pdf["cnt"].to_numpy(dtype=np.int64), starts),
-            "sum_blob": encode_timestamps_multi(_sum_scaled(pdf), starts),
-            "min_blob": encode_values_multi(pdf["val_min"].to_numpy(dtype=np.float64), starts),
-            "max_blob": encode_values_multi(pdf["val_max"].to_numpy(dtype=np.float64), starts),
-        }
-    )
+    return starts, {
+        "chunk_id": pdf["_win"].to_numpy()[starts].astype(np.int64),
+        "n_points": np.diff(np.append(starts, len(pdf))).astype(np.int32),
+        "ts_start": minutes[starts],
+        "ts_blob": encode_timestamps_multi(minutes, starts),
+        "cnt_blob": encode_timestamps_multi(pdf["cnt"].to_numpy(dtype=np.int64), starts),
+        "sum_blob": encode_timestamps_multi(_sum_scaled(pdf), starts),
+        "min_blob": encode_values_multi(pdf["val_min"].to_numpy(dtype=np.float64), starts),
+        "max_blob": encode_values_multi(pdf["val_max"].to_numpy(dtype=np.float64), starts),
+    }
 
 
 def encode_state_chunks(

@@ -17,16 +17,28 @@ write commits. ``retention_pass`` expires raw partitions strictly after
 verifying the covering coarser-tier partitions exist and checksum-match —
 "delete the raw minutes only once the hourly rollup provably holds them".
 
+Part keys come from the write itself. ``materialize`` filters the source
+to the partitions the manifest records neither done nor expired, and the
+written frame carries an ``Observation`` of ``collect_set(part_key)``, so
+no separate ``distinct`` job runs and a ``part_key=`` directory the write
+did not produce is never recorded. Exactly the observed partitions are
+read back (decoded, for compressed tiers) and checksummed. A partition's
+checksum is the decimal sum of ``state_row_hash`` over its rows, wrapped
+to int64; ``_partition_checksums`` computes it for several frames in one
+``groupBy(side, part_key)`` collect, so a parity gate checksums its
+recomputed and stored sides together.
+
 At cluster scale the same code shape holds: partition writes are
 distributed, only the checkpoint bookkeeping is driver-side metadata.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from pathlib import Path
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tslib_spark.operators.downsample import downsample, state_row_hash
@@ -137,20 +149,31 @@ class TierStore:
             "part_key", F.date_format(F.date_trunc(PART_TRUNC[tier], "bucket_ts"), "yyyy-MM-dd")
         )
 
-    def _partition_checksums(self, df_with_pk: DataFrame) -> dict[str, tuple[int, int]]:
-        """{part_key: (rows, checksum)} — order-insensitive decimal hash sum."""
-        rows = (
-            df_with_pk.groupBy("part_key")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(state_row_hash(self.keys).cast("decimal(38,0)")).alias("chk"),
+    def _partition_checksums(self, *frames: DataFrame) -> tuple[dict[str, tuple[int, int]], ...]:
+        """One {part_key: (rows, checksum)} per frame (each frame has a
+        ``part_key`` column), all from one ``groupBy(side, part_key)``
+        collect — an order-insensitive decimal hash sum."""
+        tagged = [
+            df.select(
+                F.lit(side).alias("_side"),
+                "part_key",
+                state_row_hash(self.keys).cast("decimal(38,0)").alias("_h"),
             )
+            for side, df in enumerate(frames)
+        ]
+        rows = (
+            reduce(DataFrame.unionAll, tagged)
+            .groupBy("_side", "part_key")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("_h").alias("chk"))
             .collect()
         )
         # wrap the (unbounded) decimal hash-sum into signed 64-bit so the
         # checkpoint parquet column stays an int64
         wrap = lambda v: ((int(v) + 2**63) % 2**64) - 2**63  # noqa: E731
-        return {r["part_key"]: (int(r["n"]), wrap(r["chk"] or 0)) for r in rows}
+        out = tuple({} for _ in frames)
+        for r in rows:
+            out[r["_side"]][r["part_key"]] = (int(r["n"]), wrap(r["chk"] or 0))
+        return out
 
     # ---------------- materialization ----------------
     def materialize(self, tier: str, source: DataFrame) -> list[str]:
@@ -159,17 +182,12 @@ class TierStore:
 
         Returns the partition keys written this run. Idempotent + resumable.
         """
-        with_pk = self._with_part_key(source, tier)
         cp = self.checkpoint.read()
         # skip both completed AND expired partitions — retention is terminal,
         # an expired range must not silently rematerialize from a late source
-        done = set(cp[cp["tier"] == tier]["partition_key"].astype(str))
-        all_pks = {r["part_key"] for r in with_pk.select("part_key").distinct().collect()}
-        missing = sorted(all_pks - done)
-        if not missing:
-            return []
-        self._write_partitions(tier, with_pk, missing)
-        return missing
+        done = sorted(set(cp[cp["tier"] == tier]["partition_key"].astype(str)))
+        todo = self._with_part_key(source, tier).filter(~F.col("part_key").isin(done))
+        return self._write_partitions(tier, todo)
 
     def upsert_partitions(
         self, tier: str, source: DataFrame, part_keys: list[str]
@@ -181,18 +199,19 @@ class TierStore:
         tier algebra — and their checkpoint rows are updated in place,
         ``times_updated`` incrementing per upsert (the reference's
         TimesUpdated counter as per-partition lineage, the epoch audit
-        trail for the streaming path)."""
+        trail for the streaming path). Returns the partition keys
+        written."""
         if not part_keys:
             return []
-        with_pk = self._with_part_key(source, tier)
-        todo_pks = sorted(set(part_keys))
-        self._write_partitions(tier, with_pk, todo_pks)
-        return todo_pks
+        todo = self._with_part_key(source, tier).filter(
+            F.col("part_key").isin(sorted(set(part_keys)))
+        )
+        return self._write_partitions(tier, todo)
 
-    def _write_partitions(self, tier: str, with_pk: DataFrame, pks: list[str]) -> None:
+    def _write_partitions(self, tier: str, todo: DataFrame) -> list[str]:
         """Shared write tail: encode-if-compressed → dynamic partition
-        overwrite → checksum the landed (decoded) bytes → checkpoint."""
-        todo = with_pk.filter(F.col("part_key").isin(pks))
+        overwrite → checksum the landed (decoded) bytes of the partitions
+        the write produced → checkpoint. Returns those partition keys."""
         if tier in self.compressed_tiers:
             from tslib_spark.codec.statechunks import encode_state_chunks
 
@@ -214,14 +233,25 @@ class TierStore:
             )
         else:
             out = todo
+        # the write itself reports which partitions it produced: no separate
+        # distinct job, and nothing on disk that this write did not produce
+        # (a stray part_key= directory) is ever recorded. The observation
+        # sits above the exchange: below it, an empty shuffle lets adaptive
+        # execution prune the observed node and the metrics never arrive.
+        written = Observation()
         self.backend.write_partitions(
             self.spark,
             tier,
-            out.repartition(F.col("part_key"), *[F.col(k) for k in self.keys]),
+            out.repartition(F.col("part_key"), *[F.col(k) for k in self.keys]).observe(
+                written, F.collect_set("part_key").alias("pks")
+            ),
         )
+        pks = sorted(written.get["pks"])
+        if not pks:
+            return []
         # checksum what actually landed (decoded read-back for compressed
         # tiers — the checksum certifies the decodable bytes on disk)
-        sums = self._partition_checksums(self.read_partitions(tier, pks))
+        (sums,) = self._partition_checksums(self.read_partitions(tier, pks))
         self.checkpoint.mark_many(
             [
                 {
@@ -235,6 +265,7 @@ class TierStore:
                 for pk in pks
             ]
         )
+        return pks
 
     def materialize_chain(self, minute_source: DataFrame) -> dict[str, list[str]]:
         """minute → hour → day → week, each tier read back from storage —
@@ -276,7 +307,8 @@ class TierStore:
         recomputed = self._with_part_key(downsample(fine_rows, coarse, self.keys), coarse)
         if coarse_pks is not None:
             recomputed = recomputed.filter(F.col("part_key").isin(pks))
-        return self._partition_checksums(recomputed) == self._partition_checksums(stored)
+        got, want = self._partition_checksums(recomputed, stored)
+        return got == want
 
     def expire_snapshots(
         self, older_than_ts: float, retain_last: int = 8, tiers: list[str] | None = None
@@ -343,7 +375,7 @@ class TierStore:
                 f"for partitions {recomputable}"
             )
         if integrity_only:
-            got = self._partition_checksums(self.read_partitions(coarse, integrity_only))
+            (got,) = self._partition_checksums(self.read_partitions(coarse, integrity_only))
             recorded = cp[(cp["tier"] == coarse) & (cp["status"] == "done")]
             want = dict(zip(recorded["partition_key"].astype(str), recorded["checksum"]))
             for pk in integrity_only:

@@ -6,6 +6,8 @@ bytes goes through a backend with four operations:
 
     exists(spark, tier)              — does the tier table exist yet
     read(spark, tier)                — DataFrame over the stored tier
+                                       (the parquet backend reads with
+                                       the tier's recorded schema)
     write_partitions(spark, tier, df)— dynamic-overwrite the df's
                                        part_key partitions
     drop_partition(spark, tier, pk)  — physically remove one partition
@@ -34,13 +36,27 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 class ParquetManifestBackend:
-    """Hive-partitioned parquet directories under ``<root>/tiers/<tier>``."""
+    """Hive-partitioned parquet directories under ``<root>/tiers/<tier>``.
+
+    ``read`` passes each tier's recorded schema to ``spark.read.schema``,
+    so a read starts no schema-inference job. The schema is recorded from
+    the frame ``write_partitions`` writes, or from the first (inferred)
+    read of a tier this instance has not written: every field nullable,
+    as a parquet scan reports it, and ``part_key`` last as a string."""
 
     def __init__(self, root: str | Path):
         self.root = Path(root)
+        self._schemas: dict[str, StructType] = {}
+
+    def _record(self, tier: str, schema: StructType) -> None:
+        self._schemas[tier] = StructType(
+            [StructField(f.name, f.dataType, True) for f in schema if f.name != "part_key"]
+            + [StructField("part_key", StringType(), True)]
+        )
 
     def table_path(self, tier: str) -> str:
         return str(self.root / "tiers" / tier)
@@ -49,7 +65,12 @@ class ParquetManifestBackend:
         return (self.root / "tiers" / tier).exists()
 
     def read(self, spark: SparkSession, tier: str) -> DataFrame:
-        return spark.read.parquet(self.table_path(tier))
+        schema = self._schemas.get(tier)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(self.table_path(tier))
+        df = spark.read.parquet(self.table_path(tier))
+        self._record(tier, df.schema)
+        return df
 
     def write_partitions(self, spark: SparkSession, tier: str, df: DataFrame) -> None:
         """Dynamic partition overwrite (TierStore sets the session conf):
@@ -57,6 +78,7 @@ class ParquetManifestBackend:
         df.write.mode("overwrite").partitionBy("part_key").parquet(
             self.table_path(tier)
         )
+        self._record(tier, df.schema)
 
     def drop_partition(self, spark: SparkSession, tier: str, part_key: str) -> None:
         part_dir = Path(self.table_path(tier)) / f"part_key={part_key}"
