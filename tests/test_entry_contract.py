@@ -64,23 +64,43 @@ def test_extraction_matches_frozen_pandas_oracle(spark):
     assert (got["extracted_text"].to_numpy() == oracle.to_numpy()).all()
 
 
-def test_salted_repartition_spreads_head_keys(spark):
-    from tslib_spark.operators.rollup import salted_repartition
+def test_encode_state_chunks_spreads_head_keys(spark):
+    """The north rule's skew salting: the chunk encode partitions on
+    (series id, time window), so a Zipf head url's windows spread over the
+    shuffle partitions instead of pinning one task at the head's share."""
+    from tslib_spark.codec.statechunks import encode_state_chunks
+    from tslib_spark.operators import rollup_pages
 
-    pages = generate_pages(spark, n_events=30_000, n_urls=50)
-    data = pages.select("url", "lang", "warc_ts")
+    minute = rollup_pages(generate_pages(spark, n_events=30_000, n_urls=50)).cache()
+    total = minute.count()
     head_share = (
-        pages.groupBy("url").count().orderBy(F.desc("count")).limit(1).collect()[0]["count"]
-        / pages.count()
+        minute.groupBy("url").count().orderBy(F.desc("count")).first()["count"] / total
     )
-    salted = salted_repartition(data, ["url", "lang"], salt_buckets=32, n_partitions=32)
-    sizes = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .toPandas()["count"]
-    )
-    # unsalted, the head key pins one partition at head_share of all rows;
-    # salted, the max partition must be far below that
+    # 32 shuffle partitions, not coalesced: adaptive execution would fold
+    # this small input into one partition and hide the spread
+    conf = {
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    before = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        sizes = (
+            encode_state_chunks(minute, ["url", "lang"])
+            .withColumn("pid", F.spark_partition_id())
+            .groupBy("pid")
+            .agg(F.sum("n_points").alias("points"))
+            .toPandas()["points"]
+        )
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+        minute.unpersist()
+    # unsalted, the head url would pin one partition at head_share of all
+    # points; windowed, the largest partition is far below that and close
+    # to the typical one
     assert head_share > 0.15
-    assert sizes.max() < 0.6 * head_share * sizes.sum()
+    assert sizes.sum() == total
+    assert sizes.max() < 0.6 * head_share * total
+    assert sizes.max() / sizes.median() <= 2

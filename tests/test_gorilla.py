@@ -219,67 +219,6 @@ def _strip_version(blob: bytes) -> bytes:
     return (hdr & np.uint32(0xFFFFFFFF ^ _VER_MASK)).tobytes() + blob[4:]
 
 
-def test_migrate_v1_blob_restores_current_layout():
-    """ADVICE r4: durable blobs written before the header gained version
-    bits must have a migration path, not just a loud failure. The payload
-    never changed, so migration is a verified 4-byte header rewrite."""
-    from tslib_spark.codec.gorilla import migrate_v1_blob
-
-    vals = np.array([3.5, 3.5, -1.25, float("nan"), 7.0])
-    v2 = encode_values(vals)
-    v1 = _strip_version(v2)
-    with pytest.raises(ValueError, match="version"):
-        decode_values(v1)  # loud failure unchanged
-    mig = migrate_v1_blob(v1, "values")
-    assert mig == v2
-    assert migrate_v1_blob(mig, "values") == mig  # idempotent on current blobs
-
-    ts = np.cumsum(np.arange(1, 900, dtype=np.int64) % 7 + 55)
-    t2 = encode_timestamps(ts)
-    assert migrate_v1_blob(_strip_version(t2), "timestamps") == t2
-    # empty-series timestamp blob (bare v1 header)
-    e2 = encode_timestamps(np.empty(0, dtype=np.int64))
-    assert migrate_v1_blob(_strip_version(e2), "timestamps") == e2
-
-    # a blob that is NOT the v1 sidecar layout must be refused, not guessed
-    bad = np.uint32(5).tobytes() + b"\x00" * 40
-    with pytest.raises(ValueError):
-        migrate_v1_blob(bad, "values")
-
-
-def test_migrate_v1_state_chunks_dataframe(spark):
-    """Tier-level migration: every statechunks blob column gets the
-    verified header rewrite; non-blob columns pass through untouched."""
-    import pandas as pd
-
-    from tslib_spark.codec.gorilla import migrate_v1_state_chunks
-
-    minutes = np.arange(0, 300, 60, dtype=np.int64)
-    cnts = np.array([3, 1, 4, 1, 5], dtype=np.int64)
-    sums = np.array([10, 20, 30, 40, 50], dtype=np.int64)
-    mins = np.array([0.5, -1.5, 2.0, float("nan"), 0.0])
-    maxs = mins + 1.0
-    row = {
-        "_sid": 7,
-        "chunk_id": 0,
-        "n_points": 5,
-        "ts_start": 0,
-        "ts_blob": encode_timestamps(minutes),
-        "cnt_blob": encode_timestamps(cnts),
-        "sum_blob": encode_timestamps(sums),
-        "min_blob": encode_values(mins),
-        "max_blob": encode_values(maxs),
-    }
-    v1_row = dict(row)
-    for c in ("ts_blob", "cnt_blob", "sum_blob", "min_blob", "max_blob"):
-        v1_row[c] = _strip_version(row[c])
-    df = spark.createDataFrame(pd.DataFrame([v1_row]))
-    got = migrate_v1_state_chunks(df).toPandas().iloc[0]
-    for c in ("ts_blob", "cnt_blob", "sum_blob", "min_blob", "max_blob"):
-        assert bytes(got[c]) == row[c], c
-    assert got["_sid"] == 7 and got["n_points"] == 5
-
-
 # ---------------- batch decode ----------------
 
 _F64 = st.floats(allow_nan=True, allow_infinity=True, width=64)

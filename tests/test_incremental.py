@@ -1,4 +1,5 @@
-"""Incremental model updates (folding-in / Brand) + streaming rollup."""
+"""Incremental model updates (folding-in / Brand) and the TierStore-driven
+update loop."""
 
 from __future__ import annotations
 
@@ -120,132 +121,59 @@ def test_state_passthrough_when_no_new_data(spark, low_rank_series):
     assert out.iloc[0]["times_updated"] == 0
 
 
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    from tslib_spark.operators.rollup import rollup
-    from tslib_spark.streaming.stream import streaming_rollup
+# ---------------- update_from_store: the TierStore-driven updateSVD ----------------
 
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "stream_src")
-    events.write.parquet(src)
-    schema = events.schema.simpleString().replace("struct<", "").rstrip(">").replace(":", " ")
+ORIGIN = pd.Timestamp("2026-03-02 00:00:00")
 
-    agg = streaming_rollup(
-        spark, src, schema, ["event_type"], "ts", "value", window="1 hour"
+
+def store_day(spark, store, day: int, values: np.ndarray) -> None:
+    """Materialize one day of minute-tier state for series t1: one bucket
+    per value, val_sum as the tier's decimal(38,9)."""
+    ts = [
+        (ORIGIN + pd.Timedelta(days=day, minutes=int(j))).to_pydatetime()
+        for j in range(len(values))
+    ]
+    rows = pd.DataFrame(
+        {
+            "series_key": "t1",
+            "bucket_ts": ts,
+            "cnt": 1,
+            "val_sum": values,
+            "val_min": values,
+            "val_max": values,
+        }
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.sql("select * from stream_out").toPandas()
-    want = rollup(events, ["event_type"], "ts", "value", "hour").toPandas()
-    # append mode emits only watermark-closed windows; on a finite source
-    # the last window(s) may be withheld — compare the emitted subset
-    assert len(got) >= 0.9 * len(want)
-    m = got.merge(want, on=["event_type", "bucket_ts"], suffixes=("_s", "_b"))
-    assert len(m) == len(got)
-    assert (m["cnt_s"] == m["cnt_b"]).all()
-    assert (m["val_sum_s"].astype(float) == m["val_sum_b"].astype(float)).all()
+    tier = spark.createDataFrame(rows)
+    store.materialize("minute", tier.withColumn("val_sum", F.col("val_sum").cast("decimal(38,9)")))
 
 
-def test_stream_update_svd_matches_sequential_batch(spark, tmp_path, low_rank_series):
-    """readStream → foreachBatch updateSVD: streaming two block files in
-    arrival order produces exactly the state of two sequential batch
-    updates (atomic swap leaves a valid state at every commit point)."""
-    import time as _time
+def day_blocks(start: int, per_day: int):
+    """``to_blocks`` for update_from_store: a bucket's minute within its day
+    → running bucket_idx after the ``start`` buckets of the base fit."""
+    origin_min = int(ORIGIN.timestamp() // 60)
 
-    from tslib_spark.streaming.model_stream import stream_update_svd
+    def to_blocks(df):
+        minute = (F.unix_timestamp("bucket_ts") / 60).cast("long")
+        day = F.floor((minute - origin_min) / 1440)
+        within = (minute - origin_min) % 1440
+        return df.select(
+            F.lit("g0").alias("group_id"),
+            (F.lit(start) + day * per_day + within).cast("long").alias("bucket_idx"),
+            F.col("val_sum").cast("double").alias("value"),
+        )
 
-    N, M_total, mat = low_rank_series
-    M0 = 36
-    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
-    base = mat[:, :M0].flatten("F")
-    blocks = [mat[:, M0 + i : M0 + i + 2].flatten("F") for i in range(0, 4, 2)]
+    return to_blocks
 
-    state_dir = str(tmp_path / "model_state")
-    fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
 
-    src = str(tmp_path / "blocks")
-    schema = "group_id string, bucket_idx long, value double"
-    start = N * M0
-    for i, blk in enumerate(blocks):
-        pdf = tidy(blk, start_idx=start + i * len(blk))[["group_id", "bucket_idx", "value"]]
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)  # distinct mtimes → deterministic file order
-
-    q = stream_update_svd(
-        spark, src, schema, state_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"), max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert got["times_updated"] == 2
-
-    # oracle: the same two updates applied sequentially in batch
+def sequential_state(spark, cfg, base, blocks, start):
+    """Oracle: ``blocks`` folded by one caller-supplied update_state each."""
     s = fit_state(spark.createDataFrame(tidy(base)), cfg)
     for i, blk in enumerate(blocks):
         nd = spark.createDataFrame(
             tidy(blk, start_idx=start + i * len(blk))[["group_id", "bucket_idx", "value"]]
         )
         s = update_state(s, nd)
-    want = s.toPandas().iloc[0]
-    assert want["times_updated"] == 2
-    np.testing.assert_allclose(got["weights"], want["weights"], atol=1e-12)
-    np.testing.assert_allclose(got["last_row"], want["last_row"], atol=0)
-    np.testing.assert_allclose(got["sk"], want["sk"], atol=1e-12)
-
-
-def test_stream_replay_and_kill_recovery(spark, tmp_path, low_rank_series):
-    """At-least-once durability: (a) re-running the stream WITHOUT a
-    checkpoint replays every file from epoch 0 — the _applied_epoch marker
-    must no-op the replay instead of double-folding the blocks; (b) a kill
-    between the two swap renames (state stranded in .old) is repaired by
-    recover_state on the next entry."""
-    import time as _time
-
-    from tslib_spark.streaming.model_stream import recover_state, stream_update_svd
-
-    N, M_total, mat = low_rank_series
-    M0 = 36
-    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
-    base = mat[:, :M0].flatten("F")
-    blocks = [mat[:, M0 + i : M0 + i + 2].flatten("F") for i in range(0, 4, 2)]
-
-    state_dir = str(tmp_path / "model_state")
-    fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
-
-    src = str(tmp_path / "blocks")
-    schema = "group_id string, bucket_idx long, value double"
-    start = N * M0
-    for i, blk in enumerate(blocks):
-        pdf = tidy(blk, start_idx=start + i * len(blk))[["group_id", "bucket_idx", "value"]]
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-
-    q = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=1)
-    q.awaitTermination(120)
-    first = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert first["times_updated"] == 2
-
-    # (a) restart with NO checkpoint: every epoch replays; state must not move
-    q2 = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=1)
-    q2.awaitTermination(120)
-    replayed = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert replayed["times_updated"] == 2, "replayed epochs were folded twice"
-    np.testing.assert_allclose(replayed["sk"], first["sk"], atol=0)
-
-    # (b) simulate a kill between the two renames: state stranded in .old
-    import os
-
-    os.rename(state_dir, state_dir + ".old")
-    assert recover_state(state_dir)
-    recovered = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert recovered["times_updated"] == 2
+    return s.toPandas().iloc[0]
 
 
 def test_update_from_store_folds_manifest_delta(spark, tmp_path, low_rank_series):
@@ -254,523 +182,112 @@ def test_update_from_store_folds_manifest_delta(spark, tmp_path, low_rank_series
     partition delta — no caller-supplied frames. Two materialized batches
     → two calls fold one day each; the state matches the sequential
     update_state oracle exactly, the reconstruction matches a full refit
-    at 1e-8 (exact low-rank data), and a third call is a no-op."""
-    import pandas as _pd
-
+    at 1e-8 (low-rank data at the tier's 1e-9 quantum), and a third call
+    is a no-op. The same holds on a raw and on a Gorilla-compressed
+    minute tier."""
     from tslib_spark.operators.retention import TierStore
-    from tslib_spark.streaming.incremental import impute_from_state
     from tslib_spark.streaming.model_stream import update_from_store
 
     N, M_total, mat = low_rank_series
     M0 = 36
     cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
     base = mat[:, :M0].flatten("F")
+    # two "days" of new minute buckets, 2 columns (2N points) each, at the
+    # decimal(38,9) quantum both stores keep exactly
+    blocks = [np.round(mat[:, M0 + 2 * i : M0 + 2 * i + 2].flatten("F"), 9) for i in range(2)]
+    to_blocks = day_blocks(N * M0, 2 * N)
+    want = sequential_state(spark, cfg, base, blocks, N * M0)
+
+    for name, compressed in (("raw", set()), ("compressed", {"minute"})):
+        state_dir = str(tmp_path / f"state_{name}")
+        fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
+        store = TierStore(
+            spark, str(tmp_path / f"store_{name}"), keys=["series_key"],
+            compressed_tiers=compressed,
+        )
+
+        store_day(spark, store, 0, blocks[0])
+        assert update_from_store(spark, store, "minute", state_dir, to_blocks) == ["2026-03-02"]
+        store_day(spark, store, 1, blocks[1])
+        assert update_from_store(spark, store, "minute", state_dir, to_blocks) == ["2026-03-03"]
+        assert update_from_store(spark, store, "minute", state_dir, to_blocks) == []
+
+        got = spark.read.parquet(state_dir).toPandas().iloc[0]
+        assert got["times_updated"] == 2, name
+        np.testing.assert_allclose(got["sk"], want["sk"], atol=1e-12)
+        np.testing.assert_allclose(got["weights"], want["weights"], atol=1e-12)
+        np.testing.assert_allclose(got["last_row"], want["last_row"], atol=0)
+
+        # and the incrementally-maintained reconstruction equals a full
+        # refit on this low-rank panel
+        rec = (
+            impute_from_state(spark.read.parquet(state_dir))
+            .toPandas()
+            .sort_values(["col_idx", "row_idx"])["value"]
+            .to_numpy()
+        )
+        full = np.column_stack([mat[:, :M0], *[b.reshape(2, N).T for b in blocks]])
+        sk_f, uk_f, vk_f = linalg.svd_topk(full, 3)
+        np.testing.assert_allclose(
+            rec, linalg.reconstruct(sk_f, uk_f, vk_f).flatten("F"), atol=1e-8
+        )
+
+
+def test_stream_replay_and_kill_recovery(spark, tmp_path, low_rank_series):
+    """Crash safety of update_from_store's state swap: (a) a replayed call
+    after a committed fold is a no-op; (b) a kill between the two swap
+    renames strands the state in ``.old`` — the next call restores it and
+    folds the new delta exactly once; (c) a stale ``.next`` left by a kill
+    before the swap is ignored and overwritten. Each fold matches the
+    sequential update_state oracle."""
+    import os
+
+    from tslib_spark.operators.retention import TierStore
+    from tslib_spark.streaming.model_stream import update_from_store
+
+    N, M_total, mat = low_rank_series
+    M0 = 34
+    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
+    base = mat[:, :M0].flatten("F")
+    blocks = [np.round(mat[:, M0 + 2 * i : M0 + 2 * i + 2].flatten("F"), 9) for i in range(3)]
+    to_blocks = day_blocks(N * M0, 2 * N)
+
     state_dir = str(tmp_path / "state")
     fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
-
-    # two "days" of new minute buckets, 2 columns (2N points... 40) each
-    origin = _pd.Timestamp("2026-03-02 00:00:00")
-    day_blocks = [mat[:, M0 + 2 * i : M0 + 2 * i + 2].flatten("F") for i in range(2)]
     store = TierStore(spark, str(tmp_path / "store"), keys=["series_key"])
 
-    def tier_rows(day: int, values: np.ndarray) -> _pd.DataFrame:
-        ts = [
-            (origin + _pd.Timedelta(days=day, minutes=int(j))).to_pydatetime()
-            for j in range(len(values))
-        ]
-        return _pd.DataFrame(
-            {
-                "series_key": "t1",
-                "bucket_ts": ts,
-                "cnt": 1,
-                "val_sum": values,
-                "val_min": values,
-                "val_max": values,
-            }
-        )
+    def fold() -> list[str]:
+        return update_from_store(spark, store, "minute", state_dir, to_blocks)
 
-    def to_blocks(df):
-        # minute offset within its day → running bucket_idx after the base
-        minute = (F.unix_timestamp("bucket_ts") / 60).cast("long")
-        origin_min = int(origin.timestamp() // 60)
-        day = F.floor((minute - origin_min) / 1440)
-        within = (minute - origin_min) % 1440
-        return df.select(
-            F.lit("g0").alias("group_id"),
-            (F.lit(N * M0) + day * (2 * N) + within).cast("long").alias("bucket_idx"),
-            F.col("val_sum").cast("double").alias("value"),
-        )
+    def times_updated() -> int:
+        return int(spark.read.parquet(state_dir).toPandas().iloc[0]["times_updated"])
 
-    store.materialize("minute", spark.createDataFrame(tier_rows(0, day_blocks[0])))
-    folded = update_from_store(spark, store, "minute", state_dir, to_blocks)
-    assert folded == ["2026-03-02"]
+    store_day(spark, store, 0, blocks[0])
+    assert fold() == ["2026-03-02"] and times_updated() == 1
 
-    store.materialize("minute", spark.createDataFrame(tier_rows(1, day_blocks[1])))
-    folded = update_from_store(spark, store, "minute", state_dir, to_blocks)
-    assert folded == ["2026-03-03"]
-    assert update_from_store(spark, store, "minute", state_dir, to_blocks) == []
+    # (a) replay: nothing new in the manifest, state untouched
+    assert fold() == [] and times_updated() == 1
+
+    # (b) kill between the renames: state_dir moved to .old, not yet replaced
+    store_day(spark, store, 1, blocks[1])
+    os.rename(state_dir, state_dir + ".old")
+    assert fold() == ["2026-03-03"]
+    assert times_updated() == 2, "the stranded delta was not folded exactly once"
+    assert not os.path.exists(state_dir + ".old")
+
+    # (c) kill before the swap: a complete .next claiming every partition
+    # folded, on top of an older state, must not be picked up
+    store_day(spark, store, 2, blocks[2])
+    stale = state_dir + ".next"
+    fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(stale)
+    with open(os.path.join(stale, "_applied_source"), "w") as f:
+        f.write('{"tier": "minute", "partitions": ["2026-03-02", "2026-03-03", "2026-03-04"]}')
+    assert fold() == ["2026-03-04"]
+    assert times_updated() == 3
+    assert not os.path.exists(stale)
 
     got = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert got["times_updated"] == 2
-
-    # oracle: the same two updates via caller-supplied frames
-    s = fit_state(spark.createDataFrame(tidy(base)), cfg)
-    for i, blk in enumerate(day_blocks):
-        nd = spark.createDataFrame(
-            tidy(blk, start_idx=N * M0 + i * len(blk))[["group_id", "bucket_idx", "value"]]
-        )
-        s = update_state(s, nd)
-    want = s.toPandas().iloc[0]
+    want = sequential_state(spark, cfg, base, blocks, N * M0)
     np.testing.assert_allclose(got["sk"], want["sk"], atol=1e-12)
     np.testing.assert_allclose(got["weights"], want["weights"], atol=1e-12)
     np.testing.assert_allclose(got["last_row"], want["last_row"], atol=0)
-
-    # and the incrementally-maintained reconstruction equals a full refit
-    # on this exact low-rank panel
-    rec = (
-        impute_from_state(spark.read.parquet(state_dir))
-        .toPandas()
-        .sort_values(["col_idx", "row_idx"])["value"]
-        .to_numpy()
-    )
-    full = mat[:, : M0 + 4]
-    sk_f, uk_f, vk_f = linalg.svd_topk(full, 3)
-    np.testing.assert_allclose(rec, linalg.reconstruct(sk_f, uk_f, vk_f).flatten("F"), atol=1e-8)
-
-
-def test_streaming_dedup_drops_repeated_content(spark, tmp_path):
-    """dropDuplicatesWithinWatermark on the content fingerprint: repeated
-    text within the horizon is emitted once; distinct texts all pass."""
-    import pandas as pd
-
-    from tslib_spark.streaming.stream import streaming_dedup
-
-    src = str(tmp_path / "dedup_src")
-    rows = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4, 5, 6],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:00"] * 3 + ["2024-01-01 00:05:00"] * 3
-            ),
-            "text": ["same text", "same text", "unique a", "same text", "unique b", "unique a"],
-        }
-    )
-    spark.createDataFrame(rows).write.parquet(src)
-
-    out = streaming_dedup(
-        spark, src, "doc_id bigint, ts timestamp, text string",
-        content_cols=["text"], ts_col="ts",
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select text from dedup_out").toPandas()
-    # one row per distinct text, regardless of how many dups arrived
-    assert sorted(got["text"].tolist()) == ["same text", "unique a", "unique b"]
-
-
-def test_stream_restart_grown_source_folds_new_files(spark, tmp_path, low_rank_series):
-    """The r4 replay-guard fix: a restart WITHOUT checkpoint_dir over a
-    source that grew must fold exactly the new files — under the old
-    ``epoch_id <= applied`` guard the restarted epochs 0..N were treated
-    as replays and the new data silently dropped. Worse, a restart with a
-    larger trigger re-batches an old file together with a new one; the
-    file-set guard folds only the new half of that mixed batch."""
-    import time as _time
-
-    from tslib_spark.streaming.model_stream import stream_update_svd
-
-    N, M_total, mat = low_rank_series
-    M0 = 34
-    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
-    base = mat[:, :M0].flatten("F")
-    blocks = [mat[:, M0 + i : M0 + i + 2].flatten("F") for i in range(0, 6, 2)]
-
-    state_dir = str(tmp_path / "model_state")
-    fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
-
-    src = str(tmp_path / "blocks")
-    schema = "group_id string, bucket_idx long, value double"
-    start = N * M0
-
-    def add_block(i: int) -> None:
-        pdf = tidy(blocks[i], start_idx=start + i * len(blocks[i]))[
-            ["group_id", "bucket_idx", "value"]
-        ]
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)  # distinct mtimes → deterministic file order
-
-    add_block(0)
-    q = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=1)
-    q.awaitTermination(120)
-    assert spark.read.parquet(state_dir).toPandas().iloc[0]["times_updated"] == 1
-
-    # source grows by two files; restart with a LARGER trigger so the first
-    # batch mixes the already-folded file with a new one (epochs restart at 0)
-    add_block(1)
-    add_block(2)
-    q2 = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=2)
-    q2.awaitTermination(120)
-    got = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert got["times_updated"] >= 2, "restart dropped the grown-source files"
-
-    # oracle: the three blocks folded sequentially exactly once each
-    s = fit_state(spark.createDataFrame(tidy(base)), cfg)
-    for i, blk in enumerate(blocks):
-        nd = spark.createDataFrame(
-            tidy(blk, start_idx=start + i * len(blk))[["group_id", "bucket_idx", "value"]]
-        )
-        s = update_state(s, nd)
-    want = s.toPandas().iloc[0]
-    np.testing.assert_allclose(got["last_row"], want["last_row"], atol=0)
-    np.testing.assert_allclose(got["sk"], want["sk"], atol=1e-9)
-
-    # a full replay run over the unchanged source is a no-op
-    q3 = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=3)
-    q3.awaitTermination(120)
-    again = spark.read.parquet(state_dir).toPandas().iloc[0]
-    np.testing.assert_allclose(again["sk"], got["sk"], atol=0)
-
-
-def test_ingest_chain_stream_to_tierstore_matches_batch(spark, tmp_path):
-    """The full wired ingest path (r4): readStream → watermark dedup →
-    1-minute tier agg → foreachBatch replace-merge upsert into TierStore.
-    The final stored minute tier is bit-equal (cnt, decimal val_sum,
-    min/max) to the batch pipeline — dedup + rollup — over the same rows,
-    and the touched partition's times_updated lineage recorded."""
-    import time as _time
-
-    import pandas as _pd
-
-    from tslib_spark.operators.retention import TierStore
-    from tslib_spark.operators.rollup import rollup
-    from tslib_spark.streaming.stream import ingest_to_store
-
-    base = _pd.Timestamp("2026-03-02 00:00:00")
-    rows = []
-    for m in range(0, 30):  # file 1: minutes 0..29
-        rows.append(("u1", "en", base + _pd.Timedelta(minutes=m), float(m), f"p{m}"))
-        if m % 5 == 0:  # exact duplicate rows → dedup must drop
-            rows.append(("u1", "en", base + _pd.Timedelta(minutes=m), float(m), f"p{m}"))
-    f1 = _pd.DataFrame(rows, columns=["url", "lang", "warc_ts", "val", "payload"])
-    rows2 = [
-        ("u2", "de", base + _pd.Timedelta(minutes=60 + m), float(m) * 2, f"q{m}")
-        for m in range(0, 30)
-    ]
-    rows2.append(("u2", "de", base + _pd.Timedelta(minutes=61), 2.0, "q1"))  # dup
-    # flush row: advances the watermark past every bucket under comparison
-    rows2.append(("flush", "xx", base + _pd.Timedelta(minutes=300), 0.0, "zz"))
-    f2 = _pd.DataFrame(rows2, columns=f1.columns)
-
-    src = str(tmp_path / "ingest_src")
-    spark.createDataFrame(f1).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(1.1)
-    spark.createDataFrame(f2).coalesce(1).write.mode("append").parquet(src)
-
-    store = TierStore(spark, str(tmp_path / "store"), ["url", "lang"])
-    schema = "url string, lang string, warc_ts timestamp, val double, payload string"
-    q = ingest_to_store(
-        spark, src, schema, store, "warc_ts", "val",
-        content_cols=["url", "payload"], watermark="10 minutes",
-        checkpoint_dir=str(tmp_path / "ingest_ckpt"), max_files_per_trigger=1,
-    )
-    q.awaitTermination(180)
-
-    cutoff = base + _pd.Timedelta(minutes=290)  # watermark: 300 − 10
-    got = (
-        store.read_tier("minute")
-        .filter(F.col("bucket_ts") < F.lit(cutoff))
-        .toPandas()
-        .sort_values(["url", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    events = spark.createDataFrame(_pd.concat([f1, f2], ignore_index=True))
-    deduped = events.dropDuplicates(["url", "payload"])
-    want = (
-        rollup(deduped, ["url", "lang"], "warc_ts", "val", "minute")
-        .filter(F.col("bucket_ts") < F.lit(cutoff))
-        .toPandas()
-        .sort_values(["url", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want) == 60
-    assert (got["cnt"].to_numpy() == want["cnt"].to_numpy()).all()
-    assert (got["cnt"] == 1).all()  # every duplicate dropped
-    assert [str(x) for x in got["val_sum"]] == [str(x) for x in want["val_sum"]]
-    assert (got["val_min"].to_numpy() == want["val_min"].to_numpy()).all()
-    assert (got["val_max"].to_numpy() == want["val_max"].to_numpy()).all()
-
-    cp = store.checkpoint.read()
-    lineage = cp[(cp["tier"] == "minute") & (cp["partition_key"] == "2026-03-02")]
-    assert len(lineage) == 1 and int(lineage["times_updated"].iloc[0]) >= 1
-
-
-def test_ingest_chain_compressed_minute_tier(spark, tmp_path):
-    """ingest_to_store against a Gorilla-compressed minute tier: the
-    replace-merge upsert flows through the same encode/decode path as
-    batch materialization, and the decoded read-back equals the batch
-    rollup on the closed buckets."""
-    import pandas as _pd
-
-    from tslib_spark.operators.retention import TierStore
-    from tslib_spark.operators.rollup import rollup
-    from tslib_spark.streaming.stream import ingest_to_store
-
-    base = _pd.Timestamp("2026-03-09 00:00:00")
-    rows = [
-        ("u1", "en", base + _pd.Timedelta(minutes=m), float(m % 7), f"p{m}")
-        for m in range(0, 40)
-    ]
-    rows.append(("flush", "xx", base + _pd.Timedelta(minutes=300), 0.0, "zz"))
-    f1 = _pd.DataFrame(rows, columns=["url", "lang", "warc_ts", "val", "payload"])
-    src = str(tmp_path / "csrc")
-    spark.createDataFrame(f1).coalesce(1).write.parquet(src)
-
-    store = TierStore(
-        spark, str(tmp_path / "cstore"), ["url", "lang"],
-        compressed_tiers={"minute"},
-    )
-    schema = "url string, lang string, warc_ts timestamp, val double, payload string"
-    q = ingest_to_store(
-        spark, src, schema, store, "warc_ts", "val",
-        content_cols=["url", "payload"], watermark="10 minutes",
-        checkpoint_dir=str(tmp_path / "cckpt"),
-    )
-    q.awaitTermination(180)
-
-    cutoff = base + _pd.Timedelta(minutes=290)
-    got = (
-        store.read_tier("minute")
-        .filter(F.col("bucket_ts") < F.lit(cutoff))
-        .toPandas().sort_values("bucket_ts").reset_index(drop=True)
-    )
-    want = (
-        rollup(spark.createDataFrame(f1), ["url", "lang"], "warc_ts", "val", "minute")
-        .filter(F.col("bucket_ts") < F.lit(cutoff))
-        .toPandas().sort_values("bucket_ts").reset_index(drop=True)
-    )
-    assert len(got) == len(want) == 40
-    assert (got["cnt"].to_numpy() == want["cnt"].to_numpy()).all()
-    assert [str(x) for x in got["val_sum"]] == [str(x) for x in want["val_sum"]]
-    # the stored bytes really are compressed chunks, not raw state rows
-    raw_cols = set(spark.read.parquet(store.tier_path("minute")).columns)
-    assert "val_blob" in raw_cols or "blob" in raw_cols or "ts_start" in raw_cols
-
-
-def test_ingest_chain_full_replay_is_idempotent(spark, tmp_path):
-    """At-least-once durability for the streaming tier: reprocessing the
-    ENTIRE source (fresh checkpoint → every batch replays) leaves the
-    stored minute tier bit-identical — the replace-merge upsert absorbs
-    replayed buckets instead of double-counting them, and the partition
-    lineage records the extra pass (times_updated increments)."""
-    import pandas as _pd
-
-    from tslib_spark.operators.retention import TierStore
-    from tslib_spark.streaming.stream import ingest_to_store
-
-    base = _pd.Timestamp("2026-03-16 00:00:00")
-    rows = [
-        ("u1", "en", base + _pd.Timedelta(minutes=m), float(m), f"p{m}")
-        for m in range(0, 30)
-    ]
-    rows.append(("flush", "xx", base + _pd.Timedelta(minutes=300), 0.0, "zz"))
-    f1 = _pd.DataFrame(rows, columns=["url", "lang", "warc_ts", "val", "payload"])
-    src = str(tmp_path / "rsrc")
-    spark.createDataFrame(f1).coalesce(1).write.parquet(src)
-
-    store = TierStore(spark, str(tmp_path / "rstore"), ["url", "lang"])
-    schema = "url string, lang string, warc_ts timestamp, val double, payload string"
-    for i, ckpt in enumerate(("ck1", "ck2")):  # second run replays everything
-        q = ingest_to_store(
-            spark, src, schema, store, "warc_ts", "val",
-            content_cols=["url", "payload"], watermark="10 minutes",
-            checkpoint_dir=str(tmp_path / ckpt),
-        )
-        q.awaitTermination(180)
-        got = (
-            store.read_tier("minute")
-            .toPandas().sort_values(["url", "bucket_ts"]).reset_index(drop=True)
-        )
-        if i == 0:
-            first = got
-        else:
-            assert len(got) == len(first)
-            assert (got["cnt"].to_numpy() == first["cnt"].to_numpy()).all()
-            assert [str(x) for x in got["val_sum"]] == [str(x) for x in first["val_sum"]]
-    cp = store.checkpoint.read()
-    lin = cp[(cp["tier"] == "minute") & (cp["partition_key"] == "2026-03-16")]
-    assert int(lin["times_updated"].iloc[0]) >= 2  # the replay pass is on record
-
-
-def test_legacy_epoch_marker_migrates_without_double_fold(spark, tmp_path, low_rank_series):
-    """ADVICE r4: a state dir whose _applied_epoch marker was written by a
-    pre-file-set build (epoch counter only, no 'files' key) must fall back
-    to the legacy epoch guard instead of treating every file as new — and
-    the guard must PERSIST across the marker-format migration, because
-    files folded by the old build never get file identity."""
-    import json
-    import os
-    import time as _time
-
-    from tslib_spark.streaming.model_stream import stream_update_svd
-
-    N, M_total, mat = low_rank_series
-    M0 = 34
-    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
-    base = mat[:, :M0].flatten("F")
-    blocks = [mat[:, M0 + i : M0 + i + 2].flatten("F") for i in range(0, 4, 2)]
-
-    state_dir = str(tmp_path / "model_state")
-    fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
-    src = str(tmp_path / "blocks")
-    schema = "group_id string, bucket_idx long, value double"
-    start = N * M0
-
-    def add_block(i):
-        pdf = tidy(blocks[i], start_idx=start + i * len(blocks[i]))[
-            ["group_id", "bucket_idx", "value"]
-        ]
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-
-    add_block(0)
-    q = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=1)
-    q.awaitTermination(120)
-    assert spark.read.parquet(state_dir).toPandas().iloc[0]["times_updated"] == 1
-
-    # simulate the old build's marker: epoch counter only
-    marker_path = os.path.join(state_dir, "_applied_epoch")
-    with open(marker_path, "w") as f:
-        json.dump({"epoch_id": 0}, f)
-
-    # replay over the UNCHANGED source: legacy guard must skip (no double fold)
-    q2 = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=1)
-    q2.awaitTermination(120)
-    s1 = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert s1["times_updated"] == 1, "legacy marker replay double-folded"
-
-    # source grows; restart folds exactly the new file (epoch 1 > legacy 0)
-    add_block(1)
-    q3 = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=1)
-    q3.awaitTermination(120)
-    s2 = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert s2["times_updated"] == 2
-
-    # the migrated marker carries the file set AND the legacy epoch
-    with open(marker_path) as f:
-        marker = json.load(f)
-    assert marker["legacy_epoch"] == 0 and len(marker["files"]) >= 1
-
-    # full replay after migration: epoch 0 legacy-skipped, epoch 1 file-set-skipped
-    q4 = stream_update_svd(spark, src, schema, state_dir, max_files_per_trigger=1)
-    q4.awaitTermination(120)
-    s3 = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert s3["times_updated"] == 2
-    np.testing.assert_allclose(s3["sk"], s2["sk"], atol=0)
-
-    # oracle: blocks folded sequentially exactly once each
-    s = fit_state(spark.createDataFrame(tidy(base)), cfg)
-    for i, blk in enumerate(blocks):
-        nd = spark.createDataFrame(
-            tidy(blk, start_idx=start + i * len(blk))[["group_id", "bucket_idx", "value"]]
-        )
-        s = update_state(s, nd)
-    want = s.toPandas().iloc[0]
-    np.testing.assert_allclose(s2["sk"], want["sk"], atol=1e-9)
-
-
-def test_checkpointed_marker_compacts_file_set(spark, tmp_path, low_rank_series, monkeypatch):
-    """ADVICE r4: the applied-file set must not grow without bound. With a
-    checkpoint_dir (replays limited to the last uncommitted batch) the
-    marker keeps a rolling tail; files_seen records the true total."""
-    import json
-    import os
-    import time as _time
-
-    from tslib_spark.streaming import model_stream
-
-    monkeypatch.setattr(model_stream, "_MAX_MARKER_FILES", 2)
-
-    N, M_total, mat = low_rank_series
-    M0 = 32
-    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
-    base = mat[:, :M0].flatten("F")
-    blocks = [mat[:, M0 + i : M0 + i + 2].flatten("F") for i in range(0, 8, 2)]
-
-    state_dir = str(tmp_path / "model_state")
-    fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
-    src = str(tmp_path / "blocks")
-    schema = "group_id string, bucket_idx long, value double"
-    start = N * M0
-    for i, blk in enumerate(blocks):
-        pdf = tidy(blk, start_idx=start + i * len(blk))[["group_id", "bucket_idx", "value"]]
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-
-    q = model_stream.stream_update_svd(
-        spark, src, schema, state_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"), max_files_per_trigger=1,
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert got["times_updated"] == 4
-    with open(os.path.join(state_dir, "_applied_epoch")) as f:
-        marker = json.load(f)
-    assert len(marker["files"]) <= 2, "marker file set not compacted"
-    assert marker["files_seen"] == 4
-
-
-def test_marker_compaction_never_truncates_current_batch(
-    spark, tmp_path, low_rank_series, monkeypatch
-):
-    """ADVICE r5: when a SINGLE batch carries more files than
-    _MAX_MARKER_FILES, the rolling tail must still retain that batch's
-    whole file set — truncating to the constant would drop files just
-    applied, and a replay of that uncommitted batch would double-fold
-    the dropped ones."""
-    import json
-    import os
-
-    from tslib_spark.streaming import model_stream
-
-    monkeypatch.setattr(model_stream, "_MAX_MARKER_FILES", 2)
-
-    N, M_total, mat = low_rank_series
-    M0 = 32
-    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
-    base = mat[:, :M0].flatten("F")
-    blocks = [mat[:, M0 + i : M0 + i + 2].flatten("F") for i in range(0, 8, 2)]
-
-    state_dir = str(tmp_path / "model_state")
-    fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
-    src = str(tmp_path / "blocks")
-    start = N * M0
-    for i, blk in enumerate(blocks):
-        pdf = tidy(blk, start_idx=start + i * len(blk))[["group_id", "bucket_idx", "value"]]
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-
-    # one availableNow batch over ALL 4 files (> the patched cap of 2)
-    q = model_stream.stream_update_svd(
-        spark, src, "group_id string, bucket_idx long, value double", state_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"), max_files_per_trigger=16,
-    )
-    q.awaitTermination(180)
-    with open(os.path.join(state_dir, "_applied_epoch")) as f:
-        marker = json.load(f)
-    # the whole 4-file batch survived compaction — nothing applied was lost
-    assert len(marker["files"]) == 4
-    assert marker["files_seen"] == 4
-    # and a restart over the same source folds nothing twice
-    q2 = model_stream.stream_update_svd(
-        spark, src, "group_id string, bucket_idx long, value double", state_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"), max_files_per_trigger=16,
-    )
-    q2.awaitTermination(180)
-    got = spark.read.parquet(state_dir).toPandas().iloc[0]
-    assert got["times_updated"] == 1

@@ -1,4 +1,4 @@
-"""Stateful streaming accumulator + CSV-panel RSC end-to-end (SURVEY §5)."""
+"""CSV-panel RSC end-to-end (SURVEY §5)."""
 
 from __future__ import annotations
 
@@ -6,59 +6,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
-
-
-def test_stateful_running_rollup_across_batches(spark, tmp_path):
-    from tslib_spark.streaming.stateful import SCALE, stateful_running_rollup
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    first, second = events.filter("event_id % 2 = 0"), events.filter("event_id % 2 = 1")
-    first.write.mode("overwrite").parquet(src)
-
-    schema = events.schema.simpleString().replace("struct<", "").rstrip(">").replace(":", " ")
-    latest: dict[str, tuple] = {}
-
-    def sink(df, epoch_id):
-        for r in df.collect():
-            latest[r["series_key"]] = r
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            stateful_running_rollup(stream, "event_type", "value")
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    # second micro-batch arrives; a RESTARTED query must resume state from
-    # the checkpoint and accumulate
-    second.write.mode("append").parquet(src)
-    run_once()
-
-    got = pd.DataFrame([dict(r.asDict()) for r in latest.values()]).set_index("series_key")
-    want = (
-        events.groupBy("event_type")
-        .agg(
-            F.count("value").alias("cnt"),
-            F.sum(F.col("value").cast("decimal(38,9)")).alias("s"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-        )
-        .toPandas()
-        .set_index("event_type")
-    )
-    for et in want.index:
-        assert got.loc[et, "cnt"] == want.loc[et, "cnt"]
-        assert abs(got.loc[et, "val_sum_scaled"] / SCALE - float(want.loc[et, "s"])) < 1e-6
-        assert got.loc[et, "val_min"] == want.loc[et, "mn"]
-        assert got.loc[et, "val_max"] == want.loc[et, "mx"]
 
 
 def test_csv_panel_rsc_end_to_end(spark, tmp_path):
@@ -103,30 +50,3 @@ def test_csv_panel_rsc_end_to_end(spark, tmp_path):
     rmse = float(np.sqrt(np.mean((pred["prediction"].to_numpy() - post_mean) ** 2)))
     assert rmse < 0.3
 
-
-def test_stateful_quantum_rounding_matches_decimal_half_up(spark):
-    """Values landing exactly on a half 1e-9 quantum must round like
-    Spark's Decimal cast (HALF_UP, away from zero) — not pandas banker's
-    rounding — or streaming and batch sums diverge by 1e-9."""
-    from tslib_spark.streaming.stateful import SCALE, _accumulate
-
-    class FakeState:
-        exists = False
-        get = None
-
-        def update(self, t):
-            self.stored = t
-
-    # 2.5e-9 and 3.5e-9: banker's gives 2 and 4; HALF_UP gives 3 and 4.
-    # -2.5e-9: HALF_UP (away from zero) gives -3.
-    vals = [2.5e-9, 3.5e-9, -2.5e-9]
-    st = FakeState()
-    out = list(_accumulate(("k",), [pd.DataFrame({"value": vals})], st))
-    got = out[0]["val_sum_scaled"].iloc[0]
-
-    want = (
-        spark.createDataFrame(pd.DataFrame({"v": vals}))
-        .select((F.sum(F.col("v").cast("decimal(38,9)")) * SCALE).cast("long").alias("s"))
-        .collect()[0]["s"]
-    )
-    assert got == want == 4  # 3 + 4 - 3

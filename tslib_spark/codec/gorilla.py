@@ -502,68 +502,3 @@ def decode_values(buf: bytes) -> np.ndarray:
 def decode_timestamps(buf: bytes) -> np.ndarray:
     return decode_timestamps_multi([buf])[0]
 
-
-def migrate_v1_blob(buf: bytes, kind: str) -> bytes:
-    """One-shot migration for blobs persisted before the header gained its
-    version bits (the "v1" sidecar layout: identical payload, version
-    field 0). The payload layout never changed — only bits 30-29 of the
-    header — so migration is a 4-byte header rewrite, VERIFIED by decoding
-    the migrated blob and re-encoding the points: the encoder is
-    deterministic, so a genuine v1 blob re-encodes byte-for-byte to the
-    migrated form. Anything older (pre-sidecar layouts) fails that check
-    and raises instead of silently mis-decoding.
-
-    ``kind`` is ``"values"`` (float64 XOR codec) or ``"timestamps"``
-    (int64 delta-of-delta). Idempotent: current-version blobs return
-    unchanged."""
-    if kind not in ("values", "timestamps"):
-        raise ValueError(f"kind must be 'values' or 'timestamps', got {kind!r}")
-    if not buf:
-        return buf
-    hdr = int(np.frombuffer(buf[:4], dtype=np.uint32)[0])
-    ver = (hdr & _VER_MASK) >> _VER_SHIFT
-    if ver == _VERSION:
-        return buf
-    if ver != 0:
-        raise ValueError(f"cannot migrate blob with unknown version bits {ver}")
-    migrated = (np.uint32(hdr) | _VER_BITS).tobytes() + buf[4:]
-    if kind == "values":
-        pts = decode_values(migrated)
-        re_enc = encode_values(pts)
-    else:
-        pts = decode_timestamps(migrated)
-        re_enc = encode_timestamps(pts)
-    if re_enc != migrated:
-        raise ValueError(
-            "blob is not the v1 sidecar layout (re-encode verification "
-            "failed) — re-materialize this tier from raw data instead"
-        )
-    return migrated
-
-
-def migrate_v1_state_chunks(chunks):
-    """Migrate a compressed tier-STATE DataFrame (codec/statechunks.py
-    schema) whose blobs were written by a pre-version-bits build: every
-    blob column gets the verified 4-byte header rewrite, Arrow-batched.
-    Returns a DataFrame with identical schema; write it back through the
-    TierStore backend to complete the one-shot migration."""
-    import pandas as pd
-
-    ts_cols = ("ts_blob", "cnt_blob", "sum_blob")
-    val_cols = ("min_blob", "max_blob")
-
-    def _migrate(iterator):
-        for pdf in iterator:
-            for c in ts_cols:
-                pdf[c] = pd.Series(
-                    [migrate_v1_blob(bytes(b), "timestamps") for b in pdf[c]],
-                    index=pdf.index, dtype=object,
-                )
-            for c in val_cols:
-                pdf[c] = pd.Series(
-                    [migrate_v1_blob(bytes(b), "values") for b in pdf[c]],
-                    index=pdf.index, dtype=object,
-                )
-            yield pdf
-
-    return chunks.mapInPandas(_migrate, schema=chunks.schema)

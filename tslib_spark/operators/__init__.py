@@ -1,14 +1,11 @@
-from tslib_spark.operators.rollup import rollup_events, rollup_pages, salted_repartition
-from tslib_spark.operators.downsample import TIERS, downsample, tier_chain
+from tslib_spark.operators.rollup import rollup_pages
+from tslib_spark.operators.downsample import downsample, tier_chain
 from tslib_spark.operators.gapfill import densify_grid, interpolate_linear, middle_fill
 
 __all__ = [
     "rollup_pages",
-    "rollup_events",
-    "salted_repartition",
     "downsample",
     "tier_chain",
-    "TIERS",
     "densify_grid",
     "middle_fill",
     "interpolate_linear",

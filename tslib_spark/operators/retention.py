@@ -17,6 +17,10 @@ write commits. ``retention_pass`` expires raw partitions strictly after
 verifying the covering coarser-tier partitions exist and checksum-match —
 "delete the raw minutes only once the hourly rollup provably holds them".
 
+``materialize`` is the only way a partition is written and recorded. It
+skips every partition the manifest records as done or expired, so an
+expired range is never written again: expiry is terminal.
+
 Part keys come from the write itself. ``materialize`` filters the source
 to the partitions the manifest records neither done nor expired, and the
 written frame carries an ``Observation`` of ``collect_set(part_key)``, so
@@ -189,29 +193,11 @@ class TierStore:
         todo = self._with_part_key(source, tier).filter(~F.col("part_key").isin(done))
         return self._write_partitions(tier, todo)
 
-    def upsert_partitions(
-        self, tier: str, source: DataFrame, part_keys: list[str]
-    ) -> list[str]:
-        """Rewrite specific partitions from caller-MERGED state (the
-        streaming-ingest upsert path): unlike ``materialize``, partitions
-        already checkpointed are rewritten — the caller has combined the
-        existing rows with newly arrived buckets using the associative
-        tier algebra — and their checkpoint rows are updated in place,
-        ``times_updated`` incrementing per upsert (the reference's
-        TimesUpdated counter as per-partition lineage, the epoch audit
-        trail for the streaming path). Returns the partition keys
-        written."""
-        if not part_keys:
-            return []
-        todo = self._with_part_key(source, tier).filter(
-            F.col("part_key").isin(sorted(set(part_keys)))
-        )
-        return self._write_partitions(tier, todo)
-
     def _write_partitions(self, tier: str, todo: DataFrame) -> list[str]:
-        """Shared write tail: encode-if-compressed → dynamic partition
-        overwrite → checksum the landed (decoded) bytes of the partitions
-        the write produced → checkpoint. Returns those partition keys."""
+        """``materialize``'s write tail: encode-if-compressed → dynamic
+        partition overwrite → checksum the landed (decoded) bytes of the
+        partitions the write produced → checkpoint. Returns those
+        partition keys."""
         if tier in self.compressed_tiers:
             from tslib_spark.codec.statechunks import encode_state_chunks
 

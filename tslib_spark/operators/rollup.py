@@ -13,8 +13,10 @@ Scale notes:
 - ``groupBy`` here compiles to partial (map-side) + final hash aggregation;
   the shuffle carries only pre-combined per-(key, minute) state, so a head
   url with 10^9 raw events still ships ~minutes-per-window rows per mapper.
-- For downstream *kernel* stages (applyInPandas has no partial aggregation),
-  use ``salted_repartition`` to spread head keys.
+- Stages with no partial aggregation spread head keys by time window
+  instead: the chunk encode (``codec/chunks.py`` ``encode_runs``)
+  partitions on (series id, window), so a head url's windows land on
+  many tasks.
 """
 
 from __future__ import annotations
@@ -65,25 +67,3 @@ def rollup_pages(pages: DataFrame, bucket: str = "minute") -> DataFrame:
     )
     return rollup(with_measure, ["url", "lang"], "warc_ts", "text_len", bucket)
 
-
-def rollup_events(events: DataFrame, bucket: str = "minute") -> DataFrame:
-    """Driver-testdata variant: events(event_type, ts, value) → 1-minute tier."""
-    return rollup(events, ["event_type"], "ts", "value", bucket)
-
-
-def salted_repartition(
-    df: DataFrame, keys: list[str], salt_buckets: int = 64, n_partitions: int | None = None
-) -> DataFrame:
-    """Spread skewed keys across ``salt_buckets`` partitions-per-key.
-
-    For kernel stages (applyInPandas) and writes where a Zipf head key would
-    otherwise pin one task: repartition on (keys..., pmod(xxhash64(all cols
-    of the row's natural sub-key), B)). Callers that need per-key grouping
-    afterwards must aggregate the salted partials (associative state makes
-    that free).
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id()), F.lit(salt_buckets))
-    cols = [*[F.col(k) for k in keys], salt.alias("_salt")]
-    if n_partitions:
-        return df.repartition(n_partitions, *cols)
-    return df.repartition(*cols)

@@ -18,10 +18,6 @@ def read_csv_panel(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.read.csv(path, header=True, schema=schema, enforceSchema=True)
 
 
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """Crawl pages table (BASELINE.json input_hint schema). With an Iceberg
     catalog configured this becomes ``spark.table(name)``; the parquet path

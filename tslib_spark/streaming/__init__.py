@@ -1,9 +1,3 @@
-from tslib_spark.streaming.incremental import (
-    STATE_SCHEMA,
-    fit_state,
-    impute_from_state,
-    update_state,
-)
-from tslib_spark.streaming.stream import streaming_rollup
+from tslib_spark.streaming.incremental import fit_state, impute_from_state, update_state
 
-__all__ = ["STATE_SCHEMA", "fit_state", "update_state", "impute_from_state", "streaming_rollup"]
+__all__ = ["fit_state", "update_state", "impute_from_state"]

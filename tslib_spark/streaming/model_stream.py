@@ -1,54 +1,26 @@
-"""Streaming model maintenance: updateSVD driven by Structured Streaming
-and by TierStore manifest deltas.
+"""Model maintenance from TierStore manifest deltas: ``updateSVD`` driven
+by the store's own lineage.
 
 The reference's update loop is "new block arrives → updateSVD(D)"
-(/root/reference/src/models/tsSVDModel.py:194-232, driver-called). Two
-Spark-shaped drivers of the same cogrouped update_state kernel:
+(tslib ``src/models/tsSVDModel.py:194-232``, driver-called).
+``update_from_store`` is the one Spark-shaped driver of that loop: the
+TierStore checkpoint manifest is the snapshot log (one row per written
+partition, like Iceberg snapshots), the state directory records which
+partition keys it has already folded, and one call folds exactly the
+delta through the cogrouped ``update_state`` kernel. No caller-supplied
+frames: the store decides what is new — the resumable north-rule shape.
 
-- ``stream_update_svd``: ``readStream`` over an append-only bucket source
-  → ``foreachBatch`` folds each micro-batch into the parquet-backed model
-  state table.
-- ``update_from_store``: snapshot-driven batch incrementality — the
-  TierStore checkpoint manifest is the snapshot log (one row per written
-  partition, like Iceberg snapshots); the state table records which
-  partition keys it has already folded, and one call folds exactly the
-  delta. No caller-supplied frames: the store's own lineage decides what
-  is new — the resumable north-rule shape.
-
-Durability contract (both drivers):
+Durability contract:
 
 - **Atomic swap**: new state is written to ``state_dir + ".next"`` and
   renamed over ``state_dir``; a kill mid-write leaves the previous state
-  intact. A kill *between* the two renames strands the state in
-  ``state_dir + ".old"`` — every entry point first calls
-  ``recover_state``, which restores it.
-- **Idempotent replay**: foreachBatch is at-least-once, so the swap alone
-  is not enough — a replayed epoch after a successful swap would fold the
-  same block twice and silently corrupt the model. The state directory
-  carries an ``_applied_epoch`` marker (underscore-prefixed: invisible to
-  parquet reads) that travels with the swap; ``_upsert`` no-ops when
-  ``epoch_id <=`` the marker. ``update_from_store`` keeps the applied
-  partition-key set in ``_applied_source`` the same way, so a killed call
-  re-folds exactly the unapplied delta and a replayed call is a no-op.
-
-Epoch ids restart from 0 when a stream runs without ``checkpoint_dir``,
-so the epoch number alone cannot distinguish "replay of committed work"
-from "restart over a grown source" — the naive ``epoch_id <= applied``
-guard would silently drop genuinely new epochs 0..N (silent model
-staleness). The marker therefore records the APPLIED-FILE SET
-(scheme-normalized input paths, ~one string per block file). With a
-``checkpoint_dir`` the set is compacted to a rolling tail
-(``_MAX_MARKER_FILES``) — sound because a checkpointed stream replays at
-most the last uncommitted batch. WITHOUT a checkpoint the full set is
-kept and grows with the source (the price of exact replay detection when
-a restart re-reads everything) — pass ``checkpoint_dir`` for long-lived
-streams: a batch folds only its not-yet-applied files, filtered
-row-wise by ``input_file_name()``, which is also robust to restarts
-re-batching old files together with new ones (a batch-level fingerprint
-would double-fold the old half of such a mixed batch). Non-file sources
-have no file identity — there the epoch guard is all we have, and a
-skip is reported with a warning. For exactly-once across restarts,
-still pass ``checkpoint_dir``.
+  intact, and the next call overwrites the stale ``.next``. A kill
+  *between* the two renames strands the state in ``state_dir + ".old"``;
+  every call first runs ``recover_state``, which restores it.
+- **Idempotent replay**: the applied partition-key set lives in an
+  ``_applied_source`` marker inside the state directory (underscore-
+  prefixed, so parquet reads skip it) and travels with the swap. A killed
+  call re-folds exactly the unapplied delta; a replayed call is a no-op.
 """
 
 from __future__ import annotations
@@ -58,31 +30,10 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from tslib_spark.streaming.incremental import update_state
 
-_EPOCH_MARKER = "_applied_epoch"
 _SOURCE_MARKER = "_applied_source"
-# Marker compaction bound: with a checkpoint_dir the applied-file set is
-# trimmed to this rolling tail (replay can only involve the last
-# uncommitted batch). WITHOUT a checkpoint the full set must be kept —
-# a restart re-reads every source file — so the marker grows with the
-# source; pass checkpoint_dir for long-lived streams.
-_MAX_MARKER_FILES = 1000
-
-
-_SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+"
-
-
-def _norm_file(f: str) -> str:
-    """Scheme-insensitive file identity (``file:///x``, ``file:/x`` and
-    ``/x`` all normalize to ``/x``) — the SAME regex the JVM-side
-    input_file_name filter applies, so the two views can never drift."""
-    import re
-
-    return re.sub(_SCHEME_RE, "/", f)
 
 
 def recover_state(state_dir: str) -> bool:
@@ -96,154 +47,27 @@ def recover_state(state_dir: str) -> bool:
     return False
 
 
-def _read_marker(state_dir: str, name: str):
-    path = os.path.join(state_dir, name)
+def _read_marker(state_dir: str):
+    path = os.path.join(state_dir, _SOURCE_MARKER)
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)
     return None
 
 
-def _swap_state(new_state: DataFrame, state_dir: str, markers: dict[str, object]) -> None:
+def _swap_state(new_state: DataFrame, state_dir: str, marker: dict) -> None:
     """Write → marker → rename-swap. The second rename is the commit point;
     recover_state undoes a kill between the renames."""
     nxt = state_dir + ".next"
     shutil.rmtree(nxt, ignore_errors=True)
     new_state.write.mode("overwrite").parquet(nxt)
-    for name, payload in markers.items():
-        with open(os.path.join(nxt, name), "w") as f:
-            json.dump(payload, f)
+    with open(os.path.join(nxt, _SOURCE_MARKER), "w") as f:
+        json.dump(marker, f)
     old = state_dir + ".old"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(state_dir, old)
     os.rename(nxt, state_dir)  # commit point
     shutil.rmtree(old, ignore_errors=True)
-
-
-def stream_update_svd(
-    spark: SparkSession,
-    source_path: str,
-    source_schema: str,
-    state_dir: str,
-    method: str = "folding-in",
-    checkpoint_dir: str | None = None,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """Fold arriving bucket files into the model state table, one block per
-    micro-batch. ``state_dir`` must hold an initial fit_state parquet.
-
-    Returns the started query (caller awaits/stops). Each epoch:
-    read current state → cogrouped update_state with the batch → atomic
-    swap (see module docstring for the replay/recovery contract).
-    """
-
-    def _upsert(batch_df, epoch_id: int) -> None:
-        recover_state(state_dir)
-        if batch_df.isEmpty():
-            return
-        applied = _read_marker(state_dir, _EPOCH_MARKER) or {}
-        prev_epoch = applied.get("epoch_id", -1)
-        # marker written by a pre-file-set build has only the epoch counter:
-        # done=[] would re-fold every already-applied file on a no-checkpoint
-        # restart (silent double-fold). Honor the legacy epoch guard those
-        # folds were committed under — and PERSIST it across the format
-        # migration (files folded by the old build have no file identity,
-        # ever, so the old guard must keep protecting those epochs).
-        if applied and "files" not in applied:
-            legacy_epoch = prev_epoch
-        else:
-            legacy_epoch = applied.get("legacy_epoch", -1)
-        if legacy_epoch >= 0 and epoch_id <= legacy_epoch:
-            import warnings
-
-            warnings.warn(
-                f"stream_update_svd: epoch {epoch_id} <= {legacy_epoch} was "
-                "applied by a pre-file-set build (legacy marker) — skipping "
-                "under the old epoch guard; epochs beyond it use the "
-                "file-set guard",
-                UserWarning,
-                stacklevel=2,
-            )
-            return
-        done: list[str] = applied.get("files", [])
-        # per-row input_file_name, distinct-collected (#files rows):
-        # DataFrame.inputFiles() returns [] on foreachBatch frames, but the
-        # scan-time file name survives into the batch plan
-        files = sorted(
-            _norm_file(r["f"])
-            for r in batch_df.select(
-                F.input_file_name().alias("f")
-            ).distinct().collect()
-            if r["f"]
-        )
-        if files:
-            # file source: the applied-FILE set, not the epoch counter, is
-            # the replay authority — epochs restart at 0 without a
-            # checkpoint_dir, and restarts also re-BATCH (a replayed file
-            # can share a batch with a genuinely new one), so the guard
-            # must work at file granularity: drop already-folded files
-            # row-wise, fold what remains
-            new_files = [f for f in files if f not in set(done)]
-            if not new_files:
-                return  # every file in the batch was already folded
-            if len(new_files) < len(files):
-                batch_df = batch_df.filter(
-                    F.regexp_replace(F.input_file_name(), _SCHEME_RE, "/").isin(
-                        new_files
-                    )
-                )
-        elif applied and epoch_id <= prev_epoch:
-            # non-file source: no file identity to consult, so the epoch
-            # guard is all we have — skip, but never silently
-            import warnings
-
-            warnings.warn(
-                f"stream_update_svd: skipping epoch {epoch_id} <= applied "
-                f"{prev_epoch} with no input-file identity; if this is a "
-                "restart without checkpoint_dir over a grown source, the "
-                "batch carried NEW data — pass checkpoint_dir",
-                UserWarning,
-                stacklevel=2,
-            )
-            return
-        state = spark.read.parquet(state_dir)
-        new_state = update_state(state, batch_df, method=method)
-        keep = _read_marker(state_dir, _SOURCE_MARKER)
-        all_files = done + [f for f in files if f not in set(done)]
-        files_seen = applied.get("files_seen", len(done)) + (len(all_files) - len(done))
-        if checkpoint_dir and len(all_files) > _MAX_MARKER_FILES:
-            # with a checkpoint, Spark never replays committed epochs — only
-            # the last uncommitted batch can come back — so a rolling tail
-            # of the applied set is a sound replay guard and the marker
-            # stays bounded on long-lived streams. Without a checkpoint a
-            # restart re-reads EVERY source file, so the full set is the
-            # only exact guard: it grows with the source, documented above.
-            # The tail must always retain the CURRENT batch's file set in
-            # full: if one batch carries more than _MAX_MARKER_FILES files,
-            # truncating to the constant would drop files just applied, and
-            # a replay of that (uncommitted) batch would double-fold them.
-            all_files = all_files[-max(_MAX_MARKER_FILES, len(files)):]
-        marker_payload = {
-            "epoch_id": max(epoch_id, prev_epoch),
-            "files": all_files,
-            "files_seen": files_seen,
-        }
-        if legacy_epoch >= 0:
-            marker_payload["legacy_epoch"] = legacy_epoch
-        markers = {_EPOCH_MARKER: marker_payload}
-        if keep is not None:
-            markers[_SOURCE_MARKER] = keep
-        _swap_state(new_state, state_dir, markers)
-
-    stream = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_path)
-    )
-    writer = stream.writeStream.foreachBatch(_upsert).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def update_from_store(
@@ -259,19 +83,19 @@ def update_from_store(
     ``store`` is a TierStore; its checkpoint manifest records every
     materialized partition of ``tier`` (the snapshot log). The state dir's
     ``_applied_source`` marker records which of those this model has
-    already folded; one call reads exactly the new partitions (partition-
-    pruned scan, decoded transparently for compressed tiers), maps them to
-    tidy update blocks via ``to_blocks(tier_df) -> (group_id, bucket_idx,
-    value)`` rows, applies ONE update_state pass, and commits state +
-    marker atomically. Returns the partition keys folded this call
-    (empty = model already current).
+    already folded; one call reads exactly the new partitions through
+    ``store.read_partitions`` (partition-pruned, decoded for compressed
+    tiers), maps them to tidy update blocks via ``to_blocks(tier_df) ->
+    (group_id, bucket_idx, value)`` rows, applies ONE update_state pass,
+    and commits state + marker atomically. Returns the partition keys
+    folded this call (empty = model already current).
 
     Crash-safe: a kill before the swap leaves marker and state at the
     previous version, so the re-run folds the same delta; a replayed call
     after the swap sees no delta and no-ops.
     """
     recover_state(state_dir)
-    marker = _read_marker(state_dir, _SOURCE_MARKER) or {"tier": tier, "partitions": []}
+    marker = _read_marker(state_dir) or {"tier": tier, "partitions": []}
     if marker.get("tier", tier) != tier:
         raise ValueError(
             f"state at {state_dir} tracks tier {marker['tier']!r}, not {tier!r}"
@@ -282,24 +106,11 @@ def update_from_store(
     if not new_pks:
         return []
 
-    raw = spark.read.parquet(store.tier_path(tier)).filter(
-        F.col("part_key").isin(new_pks)
-    ).drop("part_key")
-    if tier in store.compressed_tiers:
-        from tslib_spark.codec.statechunks import decode_state_chunks
-
-        tier_rows = decode_state_chunks(raw, store.keys)
-    else:
-        tier_rows = raw
-    blocks = to_blocks(tier_rows)
+    blocks = to_blocks(store.read_partitions(tier, new_pks).drop("part_key"))
 
     state = spark.read.parquet(state_dir)
     new_state = update_state(state, blocks, method=method)
-    keep_epoch = _read_marker(state_dir, _EPOCH_MARKER)
-    markers: dict[str, object] = {
-        _SOURCE_MARKER: {"tier": tier, "partitions": sorted(applied | set(new_pks))}
-    }
-    if keep_epoch is not None:
-        markers[_EPOCH_MARKER] = keep_epoch
-    _swap_state(new_state, state_dir, markers)
+    _swap_state(
+        new_state, state_dir, {"tier": tier, "partitions": sorted(applied | set(new_pks))}
+    )
     return new_pks
