@@ -960,26 +960,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # count). If the cap ever rises, promote candidates in this order —
     # each already has a tested operator and an oracle strategy ready, so
     # a cap raise converts to verdict coverage the same day:
-    #  1. semdedup — SemDeDup composition on the embeddings table
-    #     (operators/semdedup.py; oracle: the within-cell pair generation +
-    #     union-find re-expressed as a DuckDB recursive CTE, exactly the
-    #     embedding_dup_clusters precedent; pytest numpy/union-find oracle
-    #     already green in tests/test_semdedup.py).
-    #  2. mutual_knn_clusters — mutual-kNN graph clustering
-    #     (semdedup.py:mutual_knn_clusters; oracle: directed top-k from the
-    #     frozen-fixture kNN path, mutual filter + recursive-CTE CC).
-    #  3. media_meta_video — MP4 + WebM metadata extraction over a video
+    #  1. media_meta_video — MP4 + WebM metadata extraction over a video
     #     media table (parse_mp4_meta/parse_webm_meta; oracle: frozen
     #     fixture of the independently hand-built box/EBML writers used in
     #     tests/test_training_ops.py).
-    #  4. ivf_topk standalone — currently method-tagged inside
+    #  2. ivf_topk standalone — currently method-tagged inside
     #     ann_methods_topk (see _q_ann_methods_topk docstring).
-    #  5. lm_perplexity — n-gram LM scoring on the documents table
+    #  3. lm_perplexity — n-gram LM scoring on the documents table
     #     (operators/lm_quality.py:lm_score; oracle: the counts table is
     #     plain GROUP BY SQL and the backoff CASE translates 1:1 to DuckDB
     #     window SQL; pytest pure-Python oracle already green in
     #     tests/test_lm_quality.py).
-    #  6. dsir_weights — hashed importance log-weights per document
+    #  4. dsir_weights — hashed importance log-weights per document
     #     (lm_quality.py:dsir_weights; oracle: DuckDB over the same
     #     xxhash64-replica bucket ids via a registered UDF or frozen
     #     fixture; pytest oracle already green).

@@ -332,7 +332,8 @@ def freeze_media_decode() -> pd.DataFrame:
                 canvas[:] = pal[bg]
             fh, fw = idx.shape
             canvas[top : top + fh, left : left + fw] = pal[idx]
-            gray = (canvas.astype(np.float64) / 255.0) @ np.array([0.299, 0.587, 0.114])
+            rgb = canvas.astype(np.float64) / 255.0
+            gray = rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
             ri = np.minimum((np.arange(sh) * 8) // sh, 7)
             ci = np.minimum((np.arange(sw) * 8) // sw, 7)
             cell = (ri[:, None] * 8 + ci[None, :]).ravel()
@@ -341,9 +342,10 @@ def freeze_media_decode() -> pd.DataFrame:
             )
             meta = (i, "image/gif", sw, sh, -1)
         elif i % 2 == 0:
-            rgb = media_pixels(i)
-            h, w = rgb.shape[:2]
-            gray = (rgb.astype(np.float64) / 255.0) @ np.array([0.299, 0.587, 0.114])
+            pixels = media_pixels(i)
+            h, w = pixels.shape[:2]
+            rgb = pixels.astype(np.float64) / 255.0
+            gray = rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
             ri = np.minimum((np.arange(h) * 8) // h, 7)
             ci = np.minimum((np.arange(w) * 8) // w, 7)
             cell = (ri[:, None] * 8 + ci[None, :]).ravel()

@@ -291,3 +291,63 @@ def test_stream_replay_and_kill_recovery(spark, tmp_path, low_rank_series):
     np.testing.assert_allclose(got["sk"], want["sk"], atol=1e-12)
     np.testing.assert_allclose(got["weights"], want["weights"], atol=1e-12)
     np.testing.assert_allclose(got["last_row"], want["last_row"], atol=0)
+
+
+def test_update_from_store_refuses_partitions_expired_before_folding(spark, tmp_path):
+    """A model that lags retention cannot fold past the gap: when
+    ``retention_pass`` expires minute partitions the model never folded,
+    update_from_store raises naming them and leaves state and marker
+    as they were (folding the surviving day would splice it onto the
+    wrong column). Expired partitions the model already folded do not
+    block: fold → expire → fold of a new day works."""
+    import os
+
+    from tslib_spark.operators.downsample import downsample
+    from tslib_spark.operators.retention import TierStore
+    from tslib_spark.streaming.model_stream import update_from_store
+
+    rng = np.random.default_rng(11)
+    N, M0, days = 10, 20, 4
+    mat = rng.normal(size=(N, 3)) @ rng.normal(size=(3, M0 + 2 * days))
+    cfg = ModelConfig(target_key="t1", N=N, M=M0, k=3)
+    base = mat[:, :M0].flatten("F")
+    blocks = [np.round(mat[:, M0 + 2 * i : M0 + 2 * i + 2].flatten("F"), 9) for i in range(days)]
+    to_blocks = day_blocks(N * M0, 2 * N)
+
+    def new_model(name):
+        state_dir = str(tmp_path / f"state_{name}")
+        fit_state(spark.createDataFrame(tidy(base)), cfg).write.parquet(state_dir)
+        store = TierStore(spark, str(tmp_path / f"store_{name}"), keys=["series_key"])
+        for d in range(3):
+            store_day(spark, store, d, blocks[d])
+        return state_dir, store
+
+    def expire(store):
+        store.materialize("hour", downsample(store.read_tier("minute"), "hour", ["series_key"]))
+        return store.retention_pass("minute", "2026-03-04")
+
+    def state(state_dir):
+        return spark.read.parquet(state_dir).toPandas().iloc[0]
+
+    # the model lags: retention expires two days it never folded
+    state_dir, store = new_model("lagging")
+    assert expire(store) == ["2026-03-02", "2026-03-03"]
+    files = sorted(os.listdir(state_dir))
+    with pytest.raises(ValueError, match=r"\['2026-03-02', '2026-03-03'\]"):
+        update_from_store(spark, store, "minute", state_dir, to_blocks)
+    assert sorted(os.listdir(state_dir)) == files  # no marker written
+    assert state(state_dir)["times_updated"] == 0
+    assert len(state(state_dir)["last_row"]) == M0
+
+    # the model is current: its folded days may expire
+    state_dir, store = new_model("current")
+    assert update_from_store(spark, store, "minute", state_dir, to_blocks) == [
+        "2026-03-02", "2026-03-03", "2026-03-04",
+    ]
+    assert expire(store) == ["2026-03-02", "2026-03-03"]
+    store_day(spark, store, 3, blocks[3])
+    assert update_from_store(spark, store, "minute", state_dir, to_blocks) == ["2026-03-05"]
+    got = state(state_dir)
+    assert got["times_updated"] == 2
+    assert len(got["last_row"]) == M0 + 2 * days
+    np.testing.assert_allclose(got["last_row"][-2:], mat[-1, -2:], atol=1e-9)

@@ -18,14 +18,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tslib_spark.functions.text import tokens
 from tslib_spark.operators.lm_quality import (
+    _buckets_from_toks,
     dsir_log_ratio,
     dsir_resample,
     dsir_weights,
-    hashed_ngram_buckets,
     lm_score,
     ngram_lm_train,
-    perplexity_filter,
 )
 from tslib_spark.oracle.xxh64 import spark_xxhash64
 
@@ -140,6 +140,8 @@ def test_lm_score_edge_docs(spark):
 
 
 def test_perplexity_filter_keeps_clean_register(spark, corpus):
+    """The CCNet head/middle cut on lm_score's perplexity keeps exactly
+    the oracle's low-perplexity docs, and the clean register dominates."""
     rows, df = corpus
     train = df.filter(F.col("doc_id") % 3 != 0)
     lm = ngram_lm_train(train, order=2)
@@ -152,7 +154,8 @@ def test_perplexity_filter_keeps_clean_register(spark, corpus):
     cut = float(np.median(sorted(ppl.values())))
     # margin guard: no oracle perplexity within 1e-6 rel of the cut
     assert all(abs(p - cut) / cut > 1e-6 for p in ppl.values() if p != cut)
-    kept = {r["doc_id"] for r in perplexity_filter(df, lm, cut, order=2).collect()}
+    scores = lm_score(df, lm, order=2).filter(F.col("perplexity") <= cut)
+    kept = {r["doc_id"] for r in scores.collect()}
     want = {d for d, p in ppl.items() if p <= cut}
     assert kept == want
     # the clean register dominates the kept set
@@ -164,7 +167,8 @@ def test_hashed_buckets_exact(spark, corpus):
     got = {
         r["doc_id"]: r["b"]
         for r in df.select(
-            "doc_id", hashed_ngram_buckets(F.col("text"), buckets=512, n=2, seed=7).alias("b")
+            "doc_id",
+            _buckets_from_toks(tokens(F.lower(F.col("text"))), 512, 2, 7).alias("b"),
         ).collect()
     }
     for d, t in rows[:10]:

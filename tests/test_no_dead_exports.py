@@ -1,9 +1,15 @@
-"""Every name a ``tslib_spark`` package exports has a caller.
+"""Every public name in ``tslib_spark`` has a caller.
 
-A name in an ``__init__``'s ``__all__`` is live when some Python file
-outside ``tests/``, outside that ``__init__`` and outside the module that
-defines it names it in code (comments and docstrings do not count). A name
-with no such caller sits on ``ALLOWED`` with the reason it stays.
+A top-level ``def`` or ``class`` of a ``tslib_spark`` module whose name has
+no leading underscore is live when some Python file outside ``tests/``
+names it in code (comments and docstrings do not count) anywhere other
+than its own ``def`` line: another module, or the same module calling it
+again. ``__init__.py`` files only re-export, and ``oracle/`` modules are
+test references, so neither is checked and neither counts as a caller. A
+name with no such caller sits on ``ALLOWED`` with the reason it stays.
+
+Every entry of a module-level ``__all__`` must also be bound in that
+module, so a deleted name cannot linger as a stale export.
 """
 
 from __future__ import annotations
@@ -17,97 +23,156 @@ ROOT = Path(__file__).resolve().parent.parent
 SKIP_DIRS = {"tests", ".git", "__pycache__", "fixtures"}
 
 ALLOWED = {
-    # tslib test-data generators: reproductions of the reference's data
-    # scripts, called by the tests that pin them to the reference
-    "generate_arma": "reproduces the reference's ARMA data script",
-    "generate_harmonics": "reproduces the reference's harmonics data script",
-    "generate_trend": "reproduces the reference's trend data script",
-    "hide_random": "reproduces the reference's random-missingness helper",
-    "hide_consecutive": "reproduces the reference's consecutive-gap helper",
+    # the paper's RSC / mRSC surface
+    "rsc_predict": "the paper's RSC counterfactual predict",
+    "mrsc_predict": "the paper's mRSC counterfactual predict",
+    "rank_preservation_diagnostic": "the paper's mRSC rank-preservation diagnostic",
+    # reproductions of the reference's data scripts, called by the tests
+    # that pin them to the reference
     "single_ts_fixture": "reproduces the reference's single-series test script data",
     "multi_ts_fixture": "reproduces the reference's multi-series test script data",
+    "sigmoid_function_one": "reproduces the reference's mRSC simpleFunctionOne",
+    "sigmoid_function_two": "reproduces the reference's mRSC simpleFunctionTwo",
+    "sigmoid_params": "reproduces the reference's mRSC parameter draw",
+    "trend_df": "reproduces the reference's trend data script on Spark",
+    "hide_values_df": "reproduces the reference's random-missingness helper on Spark",
+    # reference implementations and metrics
+    "registrable_domain_py": "pure-Python PSL reference of registrable_domain",
+    "rmse": "the reference's numpy RMSE metric",
+    # parked by ROADMAP until the Iceberg runtime jar is available
+    "IcebergBackend": "the Iceberg catalog seam, a raising stub without the jar",
+    # direction 2's imputed tier: the updateSVD kernels and their driver
+    "fit_state": "builds the initial model state that update_from_store folds into",
+    "impute_from_state": "the imputed tier's read of the maintained model state",
+    "update_from_store": "folds new tier partitions into the imputed tier's model",
     # the one-blob codec API: calls of the batched decode, kept for users
     # with a single series in hand
     "encode_values": "one-blob codec API",
     "decode_values": "one-blob codec API",
     "encode_timestamps": "one-blob codec API",
     "decode_timestamps": "one-blob codec API",
-    # the updateSVD kernels around update_from_store
-    "fit_state": "builds the initial model state that update_from_store folds into",
-    "impute_from_state": "the imputed tier's read of the maintained model state",
     "unnormalize_expr": "inverse of normalize_expr, the reference's unnormalize",
     "read_csv_panel": "reads the reference's CSV case-study panels for RSC",
 }
 
 
-def _code_names(path: Path) -> set[str]:
-    """Identifiers used as code in ``path`` (no comments, no strings)."""
+def _code_names(path: Path) -> list[tuple[str, int]]:
+    """``(identifier, line)`` of every name used as code in ``path``
+    (no comments, no strings)."""
     toks = tokenize.generate_tokens(io.StringIO(path.read_text()).readline)
-    return {t.string for t in toks if t.type == tokenize.NAME}
+    return [(t.string, t.start[0]) for t in toks if t.type == tokenize.NAME]
 
 
-def _exports(init: Path, root: Path) -> dict[str, Path]:
-    """``{name: defining file}`` for every name in ``init``'s ``__all__``."""
-    tree = ast.parse(init.read_text())
-    origin: dict[str, Path] = {}
-    for node in tree.body:
-        if isinstance(node, ast.ImportFrom) and node.module:
-            base = root.joinpath(*node.module.split("."))
-            for alias in node.names:
-                sub = base / f"{alias.name}.py"  # a submodule export
-                origin[alias.asname or alias.name] = sub if sub.exists() else base.with_suffix(".py")
-    names = next(
-        ast.literal_eval(node.value)
-        for node in tree.body
-        if isinstance(node, ast.Assign)
-        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
-    )
-    return {name: origin.get(name, init) for name in names}
+def _checked(path: Path, root: Path) -> bool:
+    """Whether ``path`` is a module whose names are checked and whose code
+    counts as a caller: not an ``__init__``, not an oracle."""
+    return path.name != "__init__.py" and "oracle" not in path.relative_to(root).parts
 
 
-def dead_exports(root: Path = ROOT) -> dict[str, str]:
-    """``{name: __init__ path}`` for exports with no caller outside tests."""
+def dead_names(root: Path = ROOT) -> dict[str, str]:
+    """``{name: defining file}`` for public top-level names with no caller
+    outside tests."""
     files = [
         p for p in root.rglob("*.py")
-        if not SKIP_DIRS.intersection(p.relative_to(root).parts)
+        if not SKIP_DIRS.intersection(p.relative_to(root).parts) and _checked(p, root)
     ]
-    names_in = {p: _code_names(p) for p in files}
+    uses: dict[str, set[tuple[Path, int]]] = {}
+    for p in files:
+        for name, line in _code_names(p):
+            uses.setdefault(name, set()).add((p, line))
     dead = {}
-    for init in sorted((root / "tslib_spark").rglob("__init__.py")):
-        if "__all__" not in init.read_text():
-            continue
-        for name, defined_in in _exports(init, root).items():
-            if not any(
-                name in names for p, names in names_in.items() if p not in (init, defined_in)
-            ):
-                dead[name] = str(init.relative_to(root))
+    for mod in sorted(p for p in files if (root / "tslib_spark") in p.parents):
+        for node in ast.parse(mod.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if node.name.startswith("_"):
+                continue
+            if not uses.get(node.name, set()) - {(mod, node.lineno)}:
+                dead[node.name] = str(mod.relative_to(root))
     return dead
 
 
+def _bound(tree: ast.Module) -> set[str]:
+    """Names a module binds at top level: defs, classes, assignments, imports."""
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return names
+
+
+def unbound_all_entries(root: Path = ROOT) -> list[str]:
+    """``path: name`` for every ``__all__`` entry its module does not bind."""
+    stale = []
+    for mod in sorted((root / "tslib_spark").rglob("*.py")):
+        tree = ast.parse(mod.read_text())
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                bound = _bound(tree)
+                stale += [
+                    f"{mod.relative_to(root)}: {name}"
+                    for name in ast.literal_eval(node.value)
+                    if name not in bound
+                ]
+    return stale
+
+
 def test_every_export_has_a_caller_or_a_reason():
-    dead = dead_exports()
+    dead = dead_names()
     unexplained = sorted(set(dead) - set(ALLOWED))
     assert not unexplained, (
-        f"exported but never called outside tests: {unexplained}; delete them "
+        f"public but never called outside tests: {unexplained}; delete them "
         "or add each to ALLOWED with its reason"
     )
     stale = sorted(set(ALLOWED) - set(dead))
-    assert not stale, f"ALLOWED names that now have a caller: {stale}"
+    assert not stale, f"ALLOWED names that now have a caller or are gone: {stale}"
     assert all(reason.strip() for reason in ALLOWED.values())
 
 
+def test_every_all_entry_is_bound():
+    assert not unbound_all_entries(), unbound_all_entries()
+
+
 def test_guard_sees_an_uncalled_export(tmp_path):
-    """The guard flags an export named only by its own module and tests,
-    and counts a name used in code (not in a docstring) as a caller."""
+    """The guard flags a name used only at its ``def`` and a name only a
+    docstring, an ``__init__``, an oracle or a test mentions; a second use
+    inside its own module counts as a caller; a stale ``__all__`` entry
+    is reported."""
     pkg = tmp_path / "tslib_spark" / "ops"
     pkg.mkdir(parents=True)
     (pkg / "__init__.py").write_text(
-        "from tslib_spark.ops.mod import live, dead\n__all__ = ['live', 'dead']\n"
+        "from tslib_spark.ops.mod import dead, mentioned\n__all__ = ['dead', 'mentioned']\n"
     )
-    (pkg / "mod.py").write_text("def live():\n    pass\n\n\ndef dead():\n    pass\n")
+    (pkg / "mod.py").write_text(
+        "__all__ = ['live', 'dead', 'gone']\n\n\n"
+        "def live():\n    return _helper()\n\n\n"
+        "def _helper():\n    return reused()\n\n\n"
+        "def reused():\n    pass\n\n\n"
+        "def dead():\n    pass\n\n\n"
+        "def mentioned():\n    pass\n"
+    )
+    oracle = tmp_path / "tslib_spark" / "oracle"
+    oracle.mkdir()
+    (oracle / "ref.py").write_text(
+        "from tslib_spark.ops.mod import dead\n\n\ndef reference():\n    return dead()\n"
+    )
     (tmp_path / "tests").mkdir()
-    (tmp_path / "tests" / "test_mod.py").write_text("from tslib_spark.ops import dead\n")
-    (tmp_path / "app.py").write_text(
-        '"""dead is only mentioned here."""\nfrom tslib_spark.ops import live\n'
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from tslib_spark.ops.mod import dead, mentioned\n"
     )
-    assert dead_exports(tmp_path) == {"dead": "tslib_spark/ops/__init__.py"}
+    (tmp_path / "app.py").write_text(
+        '"""mentioned is only mentioned here."""\n'
+        "from tslib_spark.ops.mod import live\n\nlive()\n"
+    )
+    assert dead_names(tmp_path) == {
+        "dead": "tslib_spark/ops/mod.py",
+        "mentioned": "tslib_spark/ops/mod.py",
+    }
+    assert unbound_all_entries(tmp_path) == ["tslib_spark/ops/mod.py: gone"]

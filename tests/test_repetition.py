@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from tslib_spark.operators.repetition import (
     dup_token_frac,
-    ngram_repetition,
     repetition_signals,
 )
 
@@ -25,7 +24,7 @@ def docs(spark):
 def test_ngram_repetition_hand_oracle(docs):
     out = {
         r["doc_id"]: r
-        for r in ngram_repetition(docs, "doc_id", "text", n=2).collect()
+        for r in repetition_signals(docs, "doc_id", "text", n=2).collect()
     }
     assert out[1]["ngram_total"] == 4
     assert out[1]["top_ngram_share"] == pytest.approx(0.5)
@@ -65,7 +64,7 @@ def test_repetition_signals_joins_all(docs):
 def test_trigram_variant(docs):
     out = {
         r["doc_id"]: r
-        for r in ngram_repetition(docs, "doc_id", "text", n=3).collect()
+        for r in repetition_signals(docs, "doc_id", "text", n=3).collect()
     }
     # doc 1 trigrams: "a b a", "b a b", "a b c" — all distinct
     assert out[1]["ngram_total"] == 3

@@ -4,7 +4,6 @@ import pytest
 
 from tslib_spark.operators.substring import (
     doc_windows,
-    oversized_windows,
     substring_dup_pairs,
 )
 
@@ -59,8 +58,6 @@ def test_bucket_cap_drops_boilerplate(spark):
     rows = [(i, " ".join(boiler + [f"u{i}a", f"u{i}b"])) for i in range(1, 6)]
     docs = _docs(spark, rows)
     assert substring_dup_pairs(docs, "doc_id", "text", 8, 8, max_bucket=3).count() == 0
-    over = oversized_windows(docs, "doc_id", "text", 8, max_bucket=3).collect()
-    assert len(over) == 1 and over[0]["n_docs"] == 5
     # without the cap the clique appears
     assert substring_dup_pairs(docs, "doc_id", "text", 8, 8, max_bucket=1000).count() == 10
 

@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 
 from tslib_spark.datagen.crawl import generate_pages
-from tslib_spark.operators.downsample import downsample, tier_chain, tier_state_checksum, with_derived
+from tslib_spark.operators.downsample import downsample, tier_chain, tier_state_checksum
 from tslib_spark.operators.rollup import rollup, rollup_pages
 
 KEYS = ["url", "lang"]
@@ -63,12 +63,6 @@ def test_tier_chain_partition_invariance(spark, pages):
     tiers = tier_chain(minute, KEYS)
     sizes = {t: df.count() for t, df in tiers.items()}
     assert sizes["minute"] > sizes["hour"] > sizes["day"] > sizes["week"] > 0
-
-
-def test_derived_metrics(spark, pages):
-    day = tier_chain(rollup_pages(pages), KEYS)["day"]
-    row = with_derived(day).filter("cnt > 1").limit(1).collect()[0]
-    assert row["val_mean"] == pytest.approx(row["val_sum_d"] / row["cnt"])
 
 
 def test_generic_rollup_on_events(spark):

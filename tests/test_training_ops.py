@@ -13,11 +13,9 @@ from tslib_spark.operators.dedup import (
     exact_dedup,
     near_dup_minhash,
     simhash_agg,
-    simhash_near_dups,
 )
 from tslib_spark.operators.multimodal import (
     decode_media,
-    frame_sample,
     make_media_table,
     media_repartition,
 )
@@ -66,10 +64,8 @@ def test_minhash_finds_near_dups(spark, docs):
 def test_lsh_bucket_cap_defuses_boilerplate_bucket(spark):
     """A boilerplate corpus (many docs sharing every band hash) must not
     produce a quadratic candidate stage: with max_bucket set, the
-    degenerate buckets are dropped (and recorded by lsh_oversized_buckets)
-    while honest near-dup pairs elsewhere are still found."""
-    from tslib_spark.operators.dedup import lsh_oversized_buckets
-
+    degenerate buckets are dropped while honest near-dup pairs elsewhere
+    are still found."""
     boiler = "lorem ipsum boilerplate footer terms of service apply here"
     rows = [(i, boiler) for i in range(120)]  # one adversarial bucket of 120
     rows += [(200, "a unique document about distributed query planning"),
@@ -85,23 +81,18 @@ def test_lsh_bucket_cap_defuses_boilerplate_bucket(spark):
     assert (200, 201) in found
     assert not any(a < 120 and b < 120 for a, b in found)
 
-    from tslib_spark.operators.dedup import minhash_signature_agg, shingles
-
-    sh = shingles(df.select("doc_id", "text"), "text", 2)
-    mh = minhash_signature_agg(sh, "doc_id", num_hashes=64)
-    over = lsh_oversized_buckets(mh, bands=32, rows_per_band=2, max_bucket=50).toPandas()
-    assert len(over) >= 1 and (over["bucket_count"] == 120).all()
-
 
 def test_simhash_hamming_close_for_near_dups(spark, docs):
-    sh = simhash_agg(docs, "doc_id", "text").cache()
-    dups = simhash_near_dups(sh, "doc_id", max_hamming=16, blocks=4).toPandas()
-    # identical docs → hamming 0
-    zero = dups[dups["hamming"] == 0]
-    assert len(zero) >= 9
-    # different base docs should NOT appear at small hamming
-    cross = dups[(dups["id_a"] < 4) & (dups["id_b"] >= 8)]
-    assert (cross["hamming"] > 10).all() if len(cross) else True
+    sigs = {r["doc_id"]: r["simhash"] for r in simhash_agg(docs, "doc_id", "text").collect()}
+
+    def hamming(a, b):
+        return bin((sigs[a] ^ sigs[b]) & ((1 << 64) - 1)).count("1")
+
+    pairs = [(a, b) for a in sigs for b in sigs if a < b]
+    # identical docs → hamming 0 (three triplicate groups)
+    assert sum(hamming(a, b) == 0 for a, b in pairs) >= 9
+    # different base docs are far apart
+    assert all(hamming(a, b) > 10 for a, b in pairs if a < 4 and b >= 8)
 
 
 def test_hyperplane_signature_arrow_bitidentical_to_expression(spark):
@@ -205,18 +196,10 @@ def test_text_functions(spark):
     out = df.select(
         "id",
         T.token_count(F.col("t")).alias("n"),
-        T.lang_guess(F.col("t")).alias("lang"),
-        T.quality_score(F.col("t")).alias("q"),
         T.punct_ratio(F.col("t")).alias("punct"),
-        T.bpe_ish_token_count(F.col("t")).alias("bpe"),
     ).toPandas().set_index("id")
     assert out.loc[1, "n"] == 6
-    assert out.loc[1, "lang"] == "en"
-    assert out.loc[2, "lang"] == "de"
-    assert out.loc[3, "lang"] == "und"
-    assert out.loc[1, "q"] > out.loc[3, "q"]
     assert out.loc[3, "punct"] > 0.2
-    assert out.loc[3, "bpe"] >= 4
 
 
 def test_multimodal_plumbing(spark):
@@ -293,16 +276,6 @@ def test_multimodal_real_decode_ppm_wav(spark):
         bins, minlength=64
     )
     np.testing.assert_allclose(np.asarray(aud["features"]), wantf, atol=1e-12)
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame(
-        [(1, "video", bytearray(b"x"), "v", None, None, 3500), (2, "video", bytearray(b"y"), "v", None, None, None)],
-        "media_id long, kind string, payload binary, mime string, width int, height int, duration_ms int",
-    )
-    frames = frame_sample(df, every_ms=1000).toPandas()
-    assert frames[frames["media_id"] == 1]["frame_ms"].tolist() == [0, 1000, 2000, 3000]
-    assert (frames["media_id"] != 2).all()
 
 
 def test_ivf_topk_recall(spark):
@@ -866,8 +839,8 @@ def _mp4_bytes(duration_s: float, w: int, h: int, codec: bytes = b"avc1", v1: bo
 
 def test_mp4_metadata_parse_and_frame_plan(spark):
     """MP4 box walk extracts duration/dimensions/codec without frame
-    decode, and the duration feeds frame_sample's per-frame plan —
-    the composition a video corpus pipeline runs."""
+    decode, and decode_media surfaces the duration a per-frame plan
+    needs."""
     from tslib_spark.operators.multimodal import parse_mp4_meta
 
     mp4 = _mp4_bytes(3.5, 640, 360)
@@ -890,13 +863,6 @@ def test_mp4_metadata_parse_and_frame_plan(spark):
         "video/mp4", 640, 360, 3500,
     )
     assert got["features"] is None
-    frames = frame_sample(
-        decode_media(media, fake=False).join(
-            media.select("media_id", "payload"), "media_id"
-        ).select("media_id", "kind", "payload", "duration_ms"),
-        every_ms=1000,
-    ).toPandas()
-    assert frames["frame_ms"].tolist() == [0, 1000, 2000, 3000]
 
 
 def _ebml_size(n: int) -> bytes:
@@ -941,8 +907,8 @@ def _webm_bytes(
 
 def test_webm_metadata_parse_and_frame_plan(spark):
     """EBML walk extracts DocType/duration/dimensions/codecs without frame
-    decode (the WebM twin of the MP4 box walk, r5 verdict #4), and the
-    duration feeds frame_sample's plan through decode_media."""
+    decode (the WebM twin of the MP4 box walk, r5 verdict #4), and
+    decode_media surfaces the duration a per-frame plan needs."""
     from tslib_spark.operators.multimodal import parse_webm_meta
 
     webm = _webm_bytes(3500.0, 640, 360)
@@ -975,13 +941,6 @@ def test_webm_metadata_parse_and_frame_plan(spark):
         "video/webm", 640, 360, 3500,
     )
     assert got["features"] is None
-    frames = frame_sample(
-        decode_media(media, fake=False).join(
-            media.select("media_id", "payload"), "media_id"
-        ).select("media_id", "kind", "payload", "duration_ms"),
-        every_ms=1000,
-    ).toPandas()
-    assert frames["frame_ms"].tolist() == [0, 1000, 2000, 3000]
 
 
 def test_jpeg_fill_bytes_before_markers():
@@ -1024,7 +983,8 @@ def test_gif_decode_variants_match_independent_composite():
             canvas[:] = pal[bg]
         fh, fw = idx.shape
         canvas[top : top + fh, left : left + fw] = pal[idx]
-        gray = (canvas.astype(np.float64) / 255.0) @ np.array([0.299, 0.587, 0.114])
+        rgb = canvas.astype(np.float64) / 255.0
+        gray = rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
         np.testing.assert_array_equal(feats, _pool_gray(gray))
 
 
@@ -1053,7 +1013,8 @@ def test_gif_lzw_width_growth_and_rejects():
     body = bytes(out + b"\x00\x3b")
     w, h, feats = decode_gif(body)
     assert (w, h) == (90, 80)
-    gray = (pal[idx].astype(np.float64) / 255.0) @ np.array([0.299, 0.587, 0.114])
+    rgb = pal[idx].astype(np.float64) / 255.0
+    gray = rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
     np.testing.assert_array_equal(feats, _pool_gray(gray))
 
     with pytest.raises(ValueError, match="not a GIF"):

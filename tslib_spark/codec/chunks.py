@@ -248,16 +248,3 @@ def decode_chunks(
         chunks, keys, [("ts_blob", ts_col, "long"), ("val_blob", value_col, "double")], "chunk"
     )
 
-
-def chunk_stats(chunks: DataFrame) -> DataFrame:
-    """Compression accounting: bytes per chunk vs raw 16 B/point."""
-    return chunks.select(
-        F.sum("n_points").alias("points"),
-        F.sum(F.length("ts_blob") + F.length("val_blob")).alias("compressed_bytes"),
-        (F.sum("n_points") * 16).alias("raw_bytes"),
-    ).select(
-        "points",
-        "compressed_bytes",
-        "raw_bytes",
-        (F.col("raw_bytes") / F.col("compressed_bytes")).alias("compression_ratio"),
-    )

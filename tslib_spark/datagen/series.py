@@ -21,7 +21,6 @@ fixtures (≤ a few × 10^4 points per series), not the scale path.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 
 def generate_harmonics(
@@ -44,10 +43,6 @@ def linear_trend(time_steps: int, power: float, displacement: float) -> np.ndarr
 
 def log_trend(time_steps: int, displacement: float) -> np.ndarray:
     return np.log(np.arange(1, time_steps + 1, dtype=np.float64)) + displacement
-
-
-def neg_exp_trend(time_steps: int, dampening: float, displacement: float) -> np.ndarray:
-    return np.exp(np.arange(0, -time_steps, -1, dtype=np.float64) * dampening) + displacement
 
 
 def generate_trend(time_steps: int, power: float = 0.35, displacement: float = -2.5) -> np.ndarray:
@@ -105,32 +100,13 @@ def sigmoid_function_two(theta, rho, alpha: float = 0.5):
     return 10.0 / (1.0 + exp_term)
 
 
-def sigmoid_panel(
-    n_units: int,
-    n_times: int,
-    row_rank: int,
-    col_rank: int,
-    fn,
-    rng: np.random.Generator,
-) -> np.ndarray:
-    """Mean panel M[i, j] = fn(theta_i, rho_j), with unit/time parameters
-    drawn from finite pools of size row_rank/col_rank (the reference's
-    generateDataMatrix + parameter draws, testScriptMultiSynthControlSVD.py:
-    52-58 and 186-193) — the pools bound the matrix's approximate rank.
-    To share one parameter draw across metrics (the reference reuses one
-    draw for both metric matrices), draw with sigmoid_params and apply the
-    fn directly."""
-    theta_pool = rng.uniform(0.0, 1.0, row_rank)
-    rho_pool = rng.uniform(0.0, 1.0, col_rank)
-    theta = rng.choice(theta_pool, n_units)
-    rho = rng.choice(rho_pool, n_times)
-    return fn(theta[:, None], rho[None, :])
-
-
 def sigmoid_params(
     n_units: int, n_times: int, row_rank: int, col_rank: int, rng: np.random.Generator
 ) -> tuple[np.ndarray, np.ndarray]:
-    """One (theta, rho) parameter draw, shared across metric matrices."""
+    """One (theta, rho) parameter draw, shared across metric matrices:
+    unit/time parameters drawn from finite pools of size row_rank/col_rank
+    (the reference's parameter draws, testScriptMultiSynthControlSVD.py:
+    52-58 and 186-193) — the pools bound the matrix's approximate rank."""
     theta = rng.choice(rng.uniform(0.0, 1.0, row_rank), n_units)
     rho = rng.choice(rng.uniform(0.0, 1.0, col_rank), n_times)
     return theta, rho
@@ -177,12 +153,6 @@ def normalize(array: np.ndarray, vmax: float, vmin: float) -> np.ndarray:
     mid = 0.5 * (vmin + vmax)
     half = 0.5 * (vmax - vmin)
     return (array - mid) / half
-
-
-def unnormalize(array: np.ndarray, vmax: float, vmin: float) -> np.ndarray:
-    mid = 0.5 * (vmin + vmax)
-    half = 0.5 * (vmax - vmin)
-    return array * half + mid
 
 
 def _mixture(time_steps: int, rng: np.random.Generator, harmonics_params=None):
@@ -272,26 +242,3 @@ def multi_ts_fixture(N: int = 50, M: int = 400, train_prop: float = 0.7, seed: i
         "mean_test": mean_t1[-test_points:].copy(),
     }
 
-
-def to_tidy(series: dict[str, np.ndarray], start_ts: str = "2017-09-10 20:30:00") -> pd.DataFrame:
-    """Wide dict-of-arrays → tidy (series_key, bucket_idx, bucket_ts, value) frame.
-
-    NaN becomes None/NULL so Spark sees SQL NULLs (SURVEY.md §1.2).
-    """
-    frames = []
-    for key, arr in series.items():
-        n = len(arr)
-        ts = pd.Timestamp(start_ts) + pd.to_timedelta(np.arange(n), unit="m")
-        frames.append(
-            pd.DataFrame(
-                {
-                    "series_key": key,
-                    "bucket_idx": np.arange(n, dtype=np.int64),
-                    "bucket_ts": ts,
-                    "value": arr,
-                }
-            )
-        )
-    out = pd.concat(frames, ignore_index=True)
-    out["value"] = out["value"].astype(object).where(~pd.isna(out["value"]), None)
-    return out

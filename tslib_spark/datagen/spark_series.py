@@ -59,20 +59,6 @@ def trend_df(
     return base.select(F.col("id").alias("bucket_idx"), expr.alias("value"))
 
 
-def random_matrix_df(
-    spark: SparkSession, n_rows: int, n_cols: int, seed: int = 42, parallelism: int | None = None
-) -> DataFrame:
-    """N×M gaussian matrix as tidy rows — the reference's HDF5 random-matrix
-    source (hdf_util.write_randomn_data, :16-41) without the out-of-core
-    machinery: Spark partitioning replaces the 10^8-element segment budget."""
-    base = spark.range(0, n_rows * n_cols, 1, parallelism or spark.sparkContext.defaultParallelism)
-    return base.select(
-        (F.col("id") % n_rows).alias("row_idx"),
-        F.floor(F.col("id") / n_rows).alias("col_idx"),
-        F.randn(seed).alias("value"),
-    )
-
-
 def hide_values_df(df: DataFrame, p_observe: float, seed: int = 42, value_col: str = "value") -> DataFrame:
     """NULL-out values u.a.r. with prob 1-p — the randomlyHideValues test
     fixture (tsUtils.py:119-128) as a deterministic hash-based expression

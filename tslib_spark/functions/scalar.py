@@ -23,12 +23,6 @@ def unnormalize_expr(value: Column, vmax: Column, vmin: Column) -> Column:
     return value * half + mid
 
 
-def clip_expr(value: Column, vmin: Column, vmax: Column) -> Column:
-    """Clamp to [vmin, vmax] — the reference's reconstruction clipping
-    (tsALSModel.py:82-83) as a column expression."""
-    return F.least(F.greatest(value, vmin), vmax)
-
-
 def rmse_hidden(observed: Column, imputed: Column, truth: Column) -> Column:
     """RMSE over the positions hidden in ``observed`` (NULL or NaN) — the
     corrected semantics of the reference's rmseMissingData

@@ -1,9 +1,7 @@
 """Byte-pair-encoding subword tokenizer: distributed train + Arrow encode.
 
-The real thing, not the regex stand-in (`functions.text.bpe_ish_token_count`
-stays as the cheap estimator): ``bpe_train`` learns an ordered merge list
-with the classic Sennrich et al. 2015 recipe, ``bpe_encode`` tokenizes a
-corpus with it.
+``bpe_train`` learns an ordered merge list with the classic Sennrich et
+al. 2015 recipe, ``bpe_encode`` tokenizes a corpus with it.
 
 Training is driver-orchestrated but corpus-scale-safe: the corpus is
 reduced ONCE to the distinct-word frequency table (one explode + groupBy —

@@ -9,8 +9,8 @@ Four families, all shuffle-conscious:
   min-aggregate per hash seed, no Python) → band buckets → self-join
   within buckets only, on (band, hash) — the classic sub-quadratic
   near-dup path.
-- **SimHash**: 64-bit majority-of-token-hash-bits signature; near-dups =
-  small Hamming distance within LSH-style bit-block buckets.
+- **SimHash**: 64-bit majority-of-token-hash-bits signature (the
+  ``simhash_signatures`` contract query).
 - **Exact n-gram Jaccard**: the verifier for candidate pairs (array
   intersect/union on shingle sets).
 
@@ -123,25 +123,6 @@ def _band_array(minhash_col: str, bands: int, rows_per_band: int):
     )
 
 
-def lsh_oversized_buckets(
-    df: DataFrame,
-    minhash_col: str = "minhash",
-    bands: int = 16,
-    rows_per_band: int = 4,
-    max_bucket: int = 10_000,
-) -> DataFrame:
-    """Lineage record for the skew guard: the (band, band_hash, bucket_count)
-    rows that ``lsh_candidate_pairs(max_bucket=...)`` would drop. Run with
-    the same banding parameters to audit exactly which buckets were skipped
-    (typically boilerplate templates shared by very many docs)."""
-    banded = df.select(F.posexplode(_band_array(minhash_col, bands, rows_per_band)).alias("band", "band_hash"))
-    return (
-        banded.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("bucket_count"))
-        .filter(F.col("bucket_count") > max_bucket)
-    )
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -159,8 +140,7 @@ def lsh_candidate_pairs(
     count²/2 candidate rows no matter how they are scheduled. ``max_bucket``
     is the guard — buckets above it are dropped before the self-join
     (see similarity.cap_bucket_size; docs usually stay reachable through
-    their other bands, so recall degrades gracefully). Pair it with
-    ``lsh_oversized_buckets`` when the dropped set must be recorded.
+    their other bands, so recall degrades gracefully).
     """
     banded = df.select(
         F.col(id_col).alias("_id"),
@@ -289,40 +269,3 @@ def simhash_agg(
         F.when(~F.col("_null"), F.coalesce(F.col(out_col), F.lit(0).cast("long"))).alias(out_col),
     )
 
-
-def simhash_near_dups(
-    df: DataFrame, id_col: str, simhash_col: str = "simhash", max_hamming: int = 3, blocks: int = 4
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming.
-
-    Pigeonhole blocking: split the 64-bit signature into ``blocks`` 16-bit
-    blocks; any pair within distance d < blocks shares at least one exact
-    block → self-join per block bucket, verify with bit_count(xor).
-    """
-    block_arr = F.array(
-        *[
-            F.shiftrightunsigned(F.col(simhash_col), b * (64 // blocks))
-            .bitwiseAND(F.lit((1 << (64 // blocks)) - 1))
-            for b in range(blocks)
-        ]
-    )
-    exploded = df.select(
-        F.col(id_col).alias("_id"), F.col(simhash_col).alias("_sh"),
-        F.posexplode(block_arr).alias("blk", "blk_val"),
-    )
-    l, r = exploded.alias("l"), exploded.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.blk_val") == F.col("r.blk_val"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.bit_count(F.col("l._sh").bitwiseXOR(F.col("r._sh"))).alias("hamming"),
-        )
-        .distinct()
-    )
-    return cands.filter(F.col("hamming") <= max_hamming)

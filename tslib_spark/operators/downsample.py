@@ -6,7 +6,7 @@ state (see rollup.py), so:
   downsample(rollup(raw, "minute"), "hour") == rollup(raw, "hour")
 
 bit-for-bit, at any partition count — the invariant the tier-parity tests
-assert. Mean/rate metrics are *derived at read time* (``with_derived``),
+assert. Mean/rate metrics are *derived at read time* (``val_sum / cnt``),
 never stored, because float division is where bit-drift would creep in.
 """
 
@@ -55,15 +55,6 @@ def tier_chain(minute_tier: DataFrame, keys: list[str]) -> dict[str, DataFrame]:
     return tiers
 
 
-def with_derived(tier_df: DataFrame) -> DataFrame:
-    """Attach read-time derived metrics (double sum, mean)."""
-    return tier_df.select(
-        "*",
-        F.col("val_sum").cast("double").alias("val_sum_d"),
-        (F.col("val_sum") / F.col("cnt")).cast("double").alias("val_mean"),
-    )
-
-
 def state_row_hash(keys: list[str]) -> Column:
     """Per-row xxhash64 over the canonical string form of a tier-state row —
     the one row hash behind every tier checksum (parity tests, lineage).
@@ -88,6 +79,6 @@ def tier_state_checksum(tier_df: DataFrame, keys: list[str]) -> int:
 
 
 __all__ = [
-    "TIERS", "downsample", "tier_chain", "with_derived", "state_row_hash",
+    "TIERS", "downsample", "tier_chain", "state_row_hash",
     "tier_state_checksum", "STATE_COLS",
 ]

@@ -43,8 +43,6 @@ from tslib_spark.functions.text import tokens
 __all__ = [
     "ngram_lm_train",
     "lm_score",
-    "perplexity_filter",
-    "hashed_ngram_buckets",
     "dsir_log_ratio",
     "dsir_weights",
     "dsir_resample",
@@ -213,36 +211,6 @@ def lm_score(
         "logprob_per_token",
         F.exp(-F.col("logprob_per_token")).alias("perplexity"),
     )
-
-
-def perplexity_filter(
-    docs: DataFrame,
-    lm: DataFrame,
-    max_perplexity: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **score_kwargs,
-) -> DataFrame:
-    """Keep documents whose LM perplexity is at most ``max_perplexity``
-    (the CCNet head/middle cut). Empty documents are dropped (no signal)."""
-    scores = lm_score(docs, lm, id_col=id_col, text_col=text_col, **score_kwargs)
-    keep = scores.filter(F.col("perplexity") <= float(max_perplexity)).select(id_col, "perplexity")
-    return docs.join(keep, id_col)
-
-
-def hashed_ngram_buckets(
-    text: Column,
-    buckets: int = 8192,
-    n: int = 2,
-    seed: int = 7,
-    lowercase: bool = True,
-) -> Column:
-    """DSIR feature extractor: every order-1..n gram hashed into
-    ``buckets`` bins — array<bigint>, one entry per gram occurrence.
-    Pure codegen: xxhash64(seed, gram) pmod buckets."""
-    if n < 1 or n > 3:
-        raise ValueError(f"n must be 1..3, got {n}")
-    return _buckets_from_toks(tokens(F.lower(text) if lowercase else text), buckets, n, seed)
 
 
 def _buckets_from_toks(toks: Column, buckets: int, n: int, seed: int) -> Column:

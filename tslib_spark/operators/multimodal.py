@@ -124,8 +124,15 @@ def decode_ppm(payload: bytes) -> tuple[int, int, np.ndarray]:
         raise ValueError(f"PPM payload truncated: {len(payload) - off} < {need} bytes")
     raw = np.frombuffer(payload, dtype=">u2" if bpc == 2 else np.uint8, offset=off, count=w * h * 3)
     rgb = raw.reshape(h, w, 3).astype(np.float64) / maxval
-    gray = rgb @ np.array([0.299, 0.587, 0.114])
-    return w, h, _pool_gray(gray)
+    return w, h, _pool_gray(_luma(rgb))
+
+
+def _luma(rgb: np.ndarray) -> np.ndarray:
+    """ITU-R 601 luma of an (..., 3) RGB float image, shared by the PPM,
+    PNG and GIF decoders. Written as the explicit elementwise sum: the
+    3-term dot product of ``rgb @ weights`` rounds differently depending
+    on the numpy/BLAS dispatch, this form rounds the same everywhere."""
+    return rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
 
 
 def _pool_gray(gray: np.ndarray) -> np.ndarray:
@@ -257,7 +264,7 @@ def decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
         ch = 3
     scaled = px.astype(np.float64) / 255.0
     if ch >= 3:
-        gray = scaled[:, :, :3] @ np.array([0.299, 0.587, 0.114])
+        gray = _luma(scaled[:, :, :3])
     else:
         gray = scaled[:, :, 0]  # grayscale (alpha, if any, ignored)
     return w, h, _pool_gray(gray)
@@ -290,8 +297,8 @@ def parse_mp4_meta(payload: bytes) -> dict:
     extracting container duration (mvhd), video track dimensions (tkhd),
     and sample-entry codec fourccs (stsd). Frame decode needs real codec
     libraries and stays env-gated; the metadata path is what a corpus
-    pipeline needs to plan per-frame work (frame_sample consumes the
-    duration) and to filter/partition by codec and resolution."""
+    pipeline needs to plan per-frame work from the duration and to
+    filter/partition by codec and resolution."""
     if payload[4:8] != b"ftyp":
         raise ValueError("not an ISO-BMFF (MP4) file")
     duration_ms = None
@@ -400,7 +407,7 @@ def parse_webm_meta(payload: bytes) -> dict:
     extracting DocType, duration (Info/Duration × TimestampScale), first
     video track dimensions (TrackEntry/Video PixelWidth/Height), and every
     track's CodecID — the WebM twin of ``parse_mp4_meta`` (same role:
-    feeds frame_sample's plan and codec/resolution filtering; H.264/VP9
+    feeds per-frame planning and codec/resolution filtering; H.264/VP9
     frame decode needs codec libraries absent from this container and
     stays env-gated). Element IDs per the public Matroska/EBML spec
     (RFC 8794 + matroska.org); no reference-repo counterpart."""
@@ -673,8 +680,7 @@ def decode_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
             raise ValueError(f"bad GIF block 0x{b:02x} at byte {i}")
     if frames == 0:
         raise ValueError("GIF contains no image")
-    gray = (canvas.astype(np.float64) / 255.0) @ np.array([0.299, 0.587, 0.114])
-    return w, h, _pool_gray(gray)
+    return w, h, _pool_gray(_luma(canvas.astype(np.float64) / 255.0))
 
 
 def _decode_real(payload: bytes) -> dict:
@@ -705,7 +711,7 @@ def _decode_real(payload: bytes) -> dict:
                 "duration_ms": dur, "features": feats}
     if payload[4:8] == b"ftyp":
         meta = parse_mp4_meta(payload)
-        # metadata-only: duration feeds frame_sample's plan; FRAME decode
+        # metadata-only: duration feeds per-frame planning; FRAME decode
         # needs real codec libs and stays env-gated (features = None)
         return {"mime": "video/mp4", "width": meta["width"],
                 "height": meta["height"], "duration_ms": meta["duration_ms"],
@@ -773,16 +779,3 @@ def decode_media(df: DataFrame, fake: bool = False, batch_note_col: bool = False
 
     return df.mapInPandas(_decode, schema=schema)
 
-
-def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling *plan*: one output row per sampled frame offset.
-
-    Pure relational expansion (sequence + explode) — the per-frame decode
-    then flows through decode_media. Null-duration media yields no frames.
-    """
-    offsets = F.sequence(
-        F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms)
-    )
-    return df.filter(F.col("duration_ms").isNotNull()).select(
-        "media_id", "kind", "payload", F.explode(offsets).alias("frame_ms")
-    )

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from tslib_spark.functions.text import token_count, tokens
 from tslib_spark.operators.substring import _window_hashes
 
-__all__ = ["dup_token_frac", "ngram_repetition", "repetition_signals"]
+__all__ = ["dup_token_frac", "repetition_signals"]
 
 
 def dup_token_frac(text: Column) -> Column:
@@ -78,11 +78,11 @@ def _with_ratios(joined: DataFrame, id_col: str, extra: list[str]) -> DataFrame:
     )
 
 
-def ngram_repetition(
+def repetition_signals(
     docs: DataFrame, id_col: str, text_col: str, n: int = 2
 ) -> DataFrame:
-    """Per-doc n-gram repetition stats: (id, ngram_total, top_ngram_share,
-    dup_ngram_frac).
+    """All repetition signals in one pass: (id, total_tokens,
+    dup_token_frac, ngram_total, top_ngram_share, dup_ngram_frac).
 
     - ``top_ngram_share``: occurrences of the single most frequent n-gram
       over all n-gram occurrences (Gopher's "fraction in most common
@@ -90,20 +90,7 @@ def ngram_repetition(
     - ``dup_ngram_frac``: fraction of n-gram occurrences whose n-gram
       appears more than once (Gopher's "fraction in duplicated n-grams").
 
-    Docs with fewer than ``n`` tokens get (0, 0.0, 0.0).
-    """
-    base = docs.select(F.col(id_col)).distinct()
-    return _with_ratios(
-        base.join(_ngram_stats(docs, id_col, text_col, n), id_col, "left"),
-        id_col, [],
-    )
-
-
-def repetition_signals(
-    docs: DataFrame, id_col: str, text_col: str, n: int = 2
-) -> DataFrame:
-    """All repetition signals in one pass: (id, total_tokens,
-    dup_token_frac, ngram_total, top_ngram_share, dup_ngram_frac).
+    Docs with fewer than ``n`` tokens get (0, 0.0, 0.0) n-gram stats.
 
     The per-doc expression row (one per input row) is the left side, so no
     extra distinct/exchange is spent re-deriving the doc set — at corpus

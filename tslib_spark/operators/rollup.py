@@ -6,7 +6,7 @@ Counts/min/max are exactly associative; the measure sum is carried as a
 fixed-scale decimal, whose addition is exact and associative — so a rollup
 (and every later re-aggregation) is bit-for-bit identical regardless of
 partition count, task order, or AQE decisions. Doubles are derived at read
-time (``val_sum_d``), never stored as running state. This is what makes the
+time (``val_sum / cnt``), never stored as running state. This is what makes the
 north rule's "match at each tier" hold on a 1000-executor cluster.
 
 Scale notes:

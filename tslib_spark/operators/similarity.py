@@ -349,47 +349,24 @@ def ivf_assign(
     vec_col: str,
     centroids: np.ndarray,
     out_col: str = "_ivf",
-    sim_col: str | None = None,
 ):
     """Nearest-centroid assignment as a vectorized Arrow kernel.
 
     One (batch × dim) @ (dim × C) matmul per Arrow batch — the argmin over
     C dot products is expressible with higher-order column functions but
     runs O(C·dim) interpreted per row there; the numpy form is the
-    documented fast path for this shape (SURVEY §2.11).
-
-    ``sim_col``: also emit the cosine to the assigned centroid (centroids
-    are L2-normalized by the trainer, so the max dot IS the cosine). The
-    matmul is shared — callers that need both (e.g. semantic dedup's
-    keep-rule) pay one kernel pass, not two."""
+    documented fast path for this shape (SURVEY §2.11)."""
     from pyspark.sql.functions import pandas_udf
 
     cent = np.ascontiguousarray(centroids, dtype=np.float64)
 
-    if sim_col is None:
-
-        @pandas_udf("int")
-        def _assign(vs: pd.Series) -> pd.Series:
-            X = np.array(vs.tolist(), dtype=np.float64)
-            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            return pd.Series(np.argmax(X @ cent.T, axis=1).astype(np.int32))
-
-        return df.withColumn(out_col, _assign(F.col(vec_col).cast("array<double>")))
-
-    @pandas_udf("cell int, sim double")
-    def _assign_sim(vs: pd.Series) -> pd.DataFrame:
+    @pandas_udf("int")
+    def _assign(vs: pd.Series) -> pd.Series:
         X = np.array(vs.tolist(), dtype=np.float64)
         X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        dots = X @ cent.T
-        cells = np.argmax(dots, axis=1)
-        return pd.DataFrame(
-            {"cell": cells.astype(np.int32), "sim": dots[np.arange(len(cells)), cells]}
-        )
+        return pd.Series(np.argmax(X @ cent.T, axis=1).astype(np.int32))
 
-    packed = df.withColumn("_as", _assign_sim(F.col(vec_col).cast("array<double>")))
-    return packed.withColumn(out_col, F.col("_as.cell")).withColumn(
-        sim_col, F.col("_as.sim")
-    ).drop("_as")
+    return df.withColumn(out_col, _assign(F.col(vec_col).cast("array<double>")))
 
 
 def ivf_topk(

@@ -14,7 +14,6 @@ Pipeline (all DataFrame ops):
 2. drop windows whose hash occurs in more than ``max_bucket`` docs —
    the same adversarial-skew cap as the MinHash band join (boilerplate
    n-grams shared by half the corpus would make the self-join quadratic);
-   ``oversized_windows`` returns the dropped buckets as lineage;
 3. self-join on the window hash (id_a < id_b) → shared (pos_a, pos_b);
 4. gaps-and-islands: within a pair, matches on the same diagonal
    (pos_a − pos_b) with consecutive positions form one island — the
@@ -41,7 +40,7 @@ from pyspark.sql import functions as F
 
 from tslib_spark.functions.text import tokens
 
-__all__ = ["doc_windows", "oversized_windows", "substring_dup_pairs"]
+__all__ = ["doc_windows", "substring_dup_pairs"]
 
 
 def _window_hashes(toks_col: str, window_tokens: int) -> Column:
@@ -74,23 +73,6 @@ def doc_windows(
     return toked.select(
         F.col(id_col),
         F.posexplode(_window_hashes("_toks", window_tokens)).alias("pos", "h"),
-    )
-
-
-def oversized_windows(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    window_tokens: int = 8,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Lineage for the skew cap: (h, n_docs) of window hashes dropped by
-    ``substring_dup_pairs(max_bucket=...)`` — run with identical params."""
-    w = doc_windows(docs, id_col, text_col, window_tokens)
-    return (
-        w.groupBy("h")
-        .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
     )
 
 

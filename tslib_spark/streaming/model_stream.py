@@ -93,6 +93,13 @@ def update_from_store(
     Crash-safe: a kill before the swap leaves marker and state at the
     previous version, so the re-run folds the same delta; a replayed call
     after the swap sees no delta and no-ops.
+
+    The model must be folded before retention expires the tier: the
+    blocks are spliced on in partition order, so a partition the manifest
+    records as expired but the marker has not applied would leave a hole
+    and put the next block on the wrong column. Such a lag raises
+    ``ValueError`` naming the lost partitions, with state and marker
+    unchanged. Expired partitions the model already folded are fine.
     """
     recover_state(state_dir)
     marker = _read_marker(state_dir) or {"tier": tier, "partitions": []}
@@ -101,8 +108,16 @@ def update_from_store(
             f"state at {state_dir} tracks tier {marker['tier']!r}, not {tier!r}"
         )
     applied = set(marker["partitions"])
-    available = store.checkpoint.done_partitions(tier)
-    new_pks = sorted(available - applied)
+    cp = store.checkpoint.read()
+    mine = cp[cp["tier"] == tier]
+    status = dict(zip(mine["partition_key"].astype(str), mine["status"]))
+    lost = sorted(pk for pk, st in status.items() if st == "expired" and pk not in applied)
+    if lost:
+        raise ValueError(
+            f"{tier} partitions {lost} were expired before the model at "
+            f"{state_dir} folded them; fold before retention expires {tier}"
+        )
+    new_pks = sorted(pk for pk, st in status.items() if st == "done" and pk not in applied)
     if not new_pks:
         return []
 
