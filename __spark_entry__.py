@@ -966,15 +966,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     tests/test_training_ops.py).
     #  2. ivf_topk standalone — currently method-tagged inside
     #     ann_methods_topk (see _q_ann_methods_topk docstring).
-    #  3. lm_perplexity — n-gram LM scoring on the documents table
-    #     (operators/lm_quality.py:lm_score; oracle: the counts table is
-    #     plain GROUP BY SQL and the backoff CASE translates 1:1 to DuckDB
-    #     window SQL; pytest pure-Python oracle already green in
-    #     tests/test_lm_quality.py).
-    #  4. dsir_weights — hashed importance log-weights per document
-    #     (lm_quality.py:dsir_weights; oracle: DuckDB over the same
-    #     xxhash64-replica bucket ids via a registered UDF or frozen
-    #     fixture; pytest oracle already green).
     return {
         "rollup_minute": _q_rollup_minute,
         "downsample_hour": _q_downsample_hour,

@@ -1,12 +1,13 @@
 """Every public name in ``tslib_spark`` has a caller.
 
-A top-level ``def`` or ``class`` of a ``tslib_spark`` module whose name has
-no leading underscore is live when some Python file outside ``tests/``
-names it in code (comments and docstrings do not count) anywhere other
-than its own ``def`` line: another module, or the same module calling it
-again. ``__init__.py`` files only re-export, and ``oracle/`` modules are
-test references, so neither is checked and neither counts as a caller. A
-name with no such caller sits on ``ALLOWED`` with the reason it stays.
+A top-level ``def``, ``class`` or assigned name of a ``tslib_spark`` module
+whose name has no leading underscore (``__all__`` aside) is live when some
+Python file outside ``tests/`` names it in code (comments and docstrings do
+not count) anywhere other than the line that binds it: another module, or
+the same module reading it again. ``__init__.py`` files only re-export, and
+``oracle/`` modules are test references, so neither is checked and neither
+counts as a caller. A name with no such caller sits on ``ALLOWED`` with the
+reason it stays.
 
 Every entry of a module-level ``__all__`` must also be bound in that
 module, so a deleted name cannot linger as a stale export.
@@ -82,26 +83,32 @@ def dead_names(root: Path = ROOT) -> dict[str, str]:
             uses.setdefault(name, set()).add((p, line))
     dead = {}
     for mod in sorted(p for p in files if (root / "tslib_spark") in p.parents):
-        for node in ast.parse(mod.read_text()).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        for name, line in _defined(ast.parse(mod.read_text())):
+            if name.startswith("_"):
                 continue
-            if node.name.startswith("_"):
-                continue
-            if not uses.get(node.name, set()) - {(mod, node.lineno)}:
-                dead[node.name] = str(mod.relative_to(root))
+            if not uses.get(name, set()) - {(mod, line)}:
+                dead[name] = str(mod.relative_to(root))
     return dead
+
+
+def _defined(tree: ast.Module) -> list[tuple[str, int]]:
+    """``(name, line)`` of every top-level ``def``, ``class`` and plain
+    assignment target in ``tree``."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.append((node.name, node.lineno))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out += [(t.id, t.lineno) for t in targets if isinstance(t, ast.Name)]
+    return out
 
 
 def _bound(tree: ast.Module) -> set[str]:
     """Names a module binds at top level: defs, classes, assignments, imports."""
-    names = set()
+    names = {name for name, _ in _defined(tree)}
     for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            names.add(node.name)
-        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
-            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-            names.update(t.id for t in targets if isinstance(t, ast.Name))
-        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
             names.update((a.asname or a.name).split(".")[0] for a in node.names)
     return names
 
@@ -141,17 +148,19 @@ def test_every_all_entry_is_bound():
 
 
 def test_guard_sees_an_uncalled_export(tmp_path):
-    """The guard flags a name used only at its ``def`` and a name only a
-    docstring, an ``__init__``, an oracle or a test mentions; a second use
-    inside its own module counts as a caller; a stale ``__all__`` entry
-    is reported."""
+    """The guard flags a name used only at its ``def`` or assignment and a
+    name only a docstring, an ``__init__``, an oracle or a test mentions;
+    a second use inside its own module, or a read in another, counts as a
+    caller; a stale ``__all__`` entry is reported."""
     pkg = tmp_path / "tslib_spark" / "ops"
     pkg.mkdir(parents=True)
     (pkg / "__init__.py").write_text(
         "from tslib_spark.ops.mod import dead, mentioned\n__all__ = ['dead', 'mentioned']\n"
     )
     (pkg / "mod.py").write_text(
-        "__all__ = ['live', 'dead', 'gone']\n\n\n"
+        "__all__ = ['live', 'dead', 'gone']\n"
+        "UNREAD = 1\n"
+        "SHARED = (\n    2\n)\n\n\n"
         "def live():\n    return _helper()\n\n\n"
         "def _helper():\n    return reused()\n\n\n"
         "def reused():\n    pass\n\n\n"
@@ -169,9 +178,10 @@ def test_guard_sees_an_uncalled_export(tmp_path):
     )
     (tmp_path / "app.py").write_text(
         '"""mentioned is only mentioned here."""\n'
-        "from tslib_spark.ops.mod import live\n\nlive()\n"
+        "from tslib_spark.ops.mod import SHARED, live\n\nlive(SHARED)\n"
     )
     assert dead_names(tmp_path) == {
+        "UNREAD": "tslib_spark/ops/mod.py",
         "dead": "tslib_spark/ops/mod.py",
         "mentioned": "tslib_spark/ops/mod.py",
     }

@@ -45,6 +45,28 @@ def test_doc_straddles_bins_and_zero_tokens(spark):
     assert got == {0: (0, 0), 1: (0, 700), 2: (1, 400), 3: (1, 400)}
 
 
+def test_packs_a_derived_token_count(spark):
+    """Tokenize -> count -> pack in one plan: the offsets over the int
+    ``token_count(text)`` column equal a Python scan over ``tokens_ref``."""
+    from pyspark.sql import functions as F
+
+    from tslib_spark.functions.text import token_count
+    from tslib_spark.oracle.textdedup import tokens_ref
+
+    rng = random.Random(5)
+    words = ["the", "cat", "sat", "on", "a", "mat", "zebra"]
+    texts = [
+        rng.choice([" ", "  ", "\t"]).join(rng.choices(words, k=rng.randrange(0, 40)))
+        + rng.choice(["", "\n"])
+        for _ in range(120)
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    counted = df.withColumn("n_tok", token_count(F.col("text")))
+    got = pack_sequences(counted, "n_tok", "doc_id", budget=64).collect()
+    want = _oracle([(i, len(tokens_ref(t))) for i, t in enumerate(texts)], 64)
+    assert {r["doc_id"]: (r["bin_id"], r["bin_offset"]) for r in got} == want
+
+
 def test_bad_budget_raises(spark):
     df = spark.createDataFrame([(1, 5)], "doc_id long, n_tokens long")
     with pytest.raises(ValueError, match="budget"):

@@ -80,108 +80,3 @@ def test_sample_arg_validation(spark):
         hash_sample(df, "doc_id")
     with pytest.raises(ValueError, match="strata_col"):
         hash_sample(df, "doc_id", rates={"en": 0.5})
-
-
-def _tbs_corpus(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(23)
-    rows = [
-        (i, ["en", "de", "fr"][i % 3], int(rng.integers(5, 400)))
-        for i in range(300)
-    ]
-    # fr is tiny-total: its whole mass sits under most budgets
-    rows += [(1000 + i, "tiny", 3) for i in range(4)]
-    return rows, spark.createDataFrame(rows, "doc_id long, lang string, n_tokens long")
-
-
-def _tbs_oracle(rows, budget, strata_col=True, seed=42):
-    """Simple full-order trim: per stratum, hash-ordered prefix until the
-    cumulative token count reaches the budget (no prefilter)."""
-    from collections import defaultdict
-
-    by_s = defaultdict(list)
-    for i, lang, n in rows:
-        by_s[lang if strata_col else "__all__"].append((spark_xxhash64(seed, i), i, n))
-    keep = set()
-    for s, docs in by_s.items():
-        docs.sort()
-        acc = 0
-        for _, i, n in docs:
-            if acc >= budget:
-                break
-            keep.add(i)
-            acc += n
-    return keep
-
-
-def test_token_budget_sample_matches_full_order_trim(spark):
-    from tslib_spark.operators.sampling import token_budget_sample
-
-    rows, df = _tbs_corpus(spark)
-    for budget in (1, 500, 4000, 10**9):
-        got = {
-            r["doc_id"]
-            for r in token_budget_sample(
-                df, "doc_id", "n_tokens", budget, strata_col="lang"
-            ).collect()
-        }
-        assert got == _tbs_oracle(rows, budget), f"budget={budget}"
-    # budget beyond the corpus keeps everything (incl. the tiny stratum)
-    assert len(
-        token_budget_sample(df, "doc_id", "n_tokens", 10**9, strata_col="lang").collect()
-    ) == len(rows)
-
-
-def test_token_budget_sample_global_and_invariance(spark):
-    from tslib_spark.operators.sampling import token_budget_sample
-
-    rows, df = _tbs_corpus(spark)
-    want = _tbs_oracle(rows, 2500, strata_col=False)
-    got = {
-        r["doc_id"]
-        for r in token_budget_sample(df, "doc_id", "n_tokens", 2500).collect()
-    }
-    assert got == want
-    again = {
-        r["doc_id"]
-        for r in token_budget_sample(df.repartition(13), "doc_id", "n_tokens", 2500).collect()
-    }
-    assert again == want
-
-
-def test_token_budget_sample_escalation_under_skew(spark):
-    """One giant doc holds most of the stratum's mass: the initial
-    oversampled cut can undershoot the budget, forcing the rate-doubling
-    loop to escalate before the exact trim."""
-    from tslib_spark.operators.sampling import token_budget_sample
-
-    rows = [(i, "en", 1) for i in range(200)] + [(999, "en", 100_000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, n_tokens long")
-    budget = 150
-    got = {
-        r["doc_id"]
-        for r in token_budget_sample(df, "doc_id", "n_tokens", budget, strata_col="lang").collect()
-    }
-    assert got == _tbs_oracle(rows, budget)
-
-    with pytest.raises(ValueError):
-        token_budget_sample(df, "doc_id", "n_tokens", 0)
-
-
-def test_token_budget_sample_null_stratum_is_first_class(spark):
-    """r7: NULL strata must be prefiltered and trimmed like any other
-    stratum (null-safe key), not funneled unfiltered into the trim."""
-    rows = [(i, None if i % 2 == 0 else "en", 10) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, n_tokens long")
-    from tslib_spark.operators.sampling import token_budget_sample
-
-    out = token_budget_sample(df, "doc_id", "n_tokens", 100, strata_col="lang").collect()
-    null_kept = [r for r in out if r["lang"] is None]
-    en_kept = [r for r in out if r["lang"] == "en"]
-    assert len(null_kept) == 10 and len(en_kept) == 10  # 100 tokens / 10 each
-    # partition invariance of the distributed trim
-    again = token_budget_sample(
-        df.repartition(17), "doc_id", "n_tokens", 100, strata_col="lang"
-    ).collect()
-    assert {r["doc_id"] for r in again} == {r["doc_id"] for r in out}

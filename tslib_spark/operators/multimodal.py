@@ -44,11 +44,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, "
-    "width int, height int, duration_ms int"
-)
-
 FEATURE_DIM = 64
 _POOL = 8  # image features = _POOL x _POOL mean-pooled grid
 
@@ -730,7 +725,7 @@ def _decode_real(payload: bytes) -> dict:
     )
 
 
-def decode_media(df: DataFrame, fake: bool = False, batch_note_col: bool = False) -> DataFrame:
+def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
     """payload → (detected mime, dimensions/duration, feature vector) via
     Arrow-batched mapInPandas.
 
@@ -744,8 +739,6 @@ def decode_media(df: DataFrame, fake: bool = False, batch_note_col: bool = False
         "media_id long, kind string, mime string, n_bytes long, "
         "width int, height int, duration_ms int, features array<double>"
     )
-    if batch_note_col:
-        schema += ", batch_rows int"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -757,7 +750,7 @@ def decode_media(df: DataFrame, fake: bool = False, batch_note_col: bool = False
                                  "duration_ms": None, "features": _fake_features(b)})
                 else:
                     rows.append(_decode_real(b))
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"].to_numpy(),
                     "kind": pdf["kind"].to_numpy(),
@@ -773,9 +766,6 @@ def decode_media(df: DataFrame, fake: bool = False, batch_note_col: bool = False
                     ],
                 }
             )
-            if batch_note_col:
-                out["batch_rows"] = len(pdf)
-            yield out
 
     return df.mapInPandas(_decode, schema=schema)
 
