@@ -874,8 +874,8 @@ def _q_media_decode(spark, sf_dir):
     payloads (P6 PPM images / PCM WAVs / GIF87a-89a images incl.
     interlaced, local-color-table, and offset-frame variants;
     datagen/media.py) flow through make_media_table → byte-budget
-    repartition → the REAL decode_media path (mapInPandas, no fake),
-    features exploded to scalar rows. The frozen oracle
+    repartition → decode_media (mapInPandas), features exploded to
+    scalar rows. The frozen oracle
     (fixtures/media_decode_sf001.parquet) computes the expected
     pooled-luma / amplitude-envelope features with ITS OWN math over the
     same known pixels/samples/palettes — the decoders are never consulted
@@ -891,7 +891,7 @@ def _q_media_decode(spark, sf_dir):
     media = make_media_table(
         spark.createDataFrame(pdf), "media_id", "payload", "mixed"
     )
-    decoded = decode_media(media_repartition(media, target_bytes=4096), fake=False)
+    decoded = decode_media(media_repartition(media, target_bytes=4096))
     return decoded.select(
         "media_id",
         "mime",
@@ -957,15 +957,10 @@ def _q_knn_graph(spark, sf_dir):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registration is PINNED at exactly 50 names (the harness records at
     # most 50 verdict rows; tests/test_entry_contract.py enforces the
-    # count). If the cap ever rises, promote candidates in this order —
-    # each already has a tested operator and an oracle strategy ready, so
-    # a cap raise converts to verdict coverage the same day:
-    #  1. media_meta_video — MP4 + WebM metadata extraction over a video
-    #     media table (parse_mp4_meta/parse_webm_meta; oracle: frozen
-    #     fixture of the independently hand-built box/EBML writers used in
-    #     tests/test_training_ops.py).
-    #  2. ivf_topk standalone — currently method-tagged inside
-    #     ann_methods_topk (see _q_ann_methods_topk docstring).
+    # count). If the cap ever rises, promote ivf_topk standalone — it
+    # already has a tested operator and an oracle strategy, and is
+    # currently method-tagged inside ann_methods_topk (see
+    # _q_ann_methods_topk docstring).
     return {
         "rollup_minute": _q_rollup_minute,
         "downsample_hour": _q_downsample_hour,

@@ -36,6 +36,30 @@ def test_densify_inserts_null_rows(spark):
     assert dense["value"].isna().sum() == 3
 
 
+def test_densify_passes_unaligned_input_through(spark):
+    """Off the documented precondition (on-grid, unique (keys, ts)) the
+    operator checks nothing: an off-grid row keeps its timestamp and the
+    gaps after it are counted from it, and a duplicate (keys, ts) row stays
+    a second row. Pinned so a change in that behaviour shows."""
+    t = lambda hms: pd.Timestamp("2024-01-01 " + hms).to_pydatetime()  # noqa: E731
+
+    def dense(rows):
+        df = spark.createDataFrame(rows, "series_key string, bucket_ts timestamp, value double")
+        out = densify_grid(df, ["series_key"]).orderBy("bucket_ts", "value").collect()
+        return [(r["bucket_ts"].strftime("%H:%M:%S"), r["value"]) for r in out]
+
+    off_grid = [("a", t("00:00"), 1.0), ("a", t("00:02:30"), 2.5), ("a", t("00:05:30"), 4.0)]
+    assert dense(off_grid) == [
+        ("00:00:00", 1.0), ("00:01:00", None), ("00:02:30", 2.5),
+        ("00:03:30", None), ("00:04:30", None), ("00:05:30", 4.0),
+    ]
+    duplicate = [("a", t("00:00"), 1.0), ("a", t("00:00"), 9.0), ("a", t("00:03"), 3.0)]
+    assert dense(duplicate) == [
+        ("00:00:00", 1.0), ("00:00:00", 9.0), ("00:01:00", None),
+        ("00:02:00", None), ("00:03:00", 3.0),
+    ]
+
+
 def test_middle_fill_matches_reference_semantics(spark):
     # reference fills with (nanmax + nanmin)/2 across the WHOLE group
     df = _tidy(spark, {"a": [1.0, None, 3.0], "b": [None, 10.0, None]})

@@ -8,11 +8,35 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from tslib_spark.codec.gorilla import (
-    decode_timestamps,
-    decode_values,
-    encode_timestamps,
-    encode_values,
+    _VER_BITS,
+    decode_timestamps_multi,
+    decode_values_multi,
+    encode_timestamps_multi,
+    encode_values_multi,
 )
+
+_ONE = np.zeros(1, dtype=np.int64)  # the starts of a one-series batch
+
+
+def encode_values(values) -> bytes:
+    """One float series as one blob; the empty series is ``b""``."""
+    arr = np.asarray(values, dtype=np.float64)
+    return encode_values_multi(arr, _ONE)[0] if arr.size else b""
+
+
+def encode_timestamps(ts) -> bytes:
+    """One timestamp series as one blob; the empty series is the bare
+    versioned header."""
+    arr = np.asarray(ts, dtype=np.int64)
+    return encode_timestamps_multi(arr, _ONE)[0] if arr.size else _VER_BITS.tobytes()
+
+
+def decode_values(blob: bytes) -> np.ndarray:
+    return decode_values_multi([blob])[0]
+
+
+def decode_timestamps(blob: bytes) -> np.ndarray:
+    return decode_timestamps_multi([blob])[0]
 
 
 def rt_values(arr):
@@ -154,15 +178,9 @@ def test_chunk_table_roundtrip(spark):
 )
 @settings(max_examples=60, deadline=None)
 def test_multi_encode_matches_single_property(series_list):
-    """encode_*_multi must be per-series bit-identical to the single-series
-    encoders for arbitrary series batches (chain resets at every start)."""
-    from tslib_spark.codec.gorilla import (
-        encode_timestamps,
-        encode_timestamps_multi,
-        encode_values,
-        encode_values_multi,
-    )
-
+    """encode_*_multi must encode each series of an arbitrary batch
+    bit-identically to a batch of that series alone (chain resets at every
+    start)."""
     vals = [np.asarray(s, dtype=np.float64) for s in series_list]
     tss = [
         np.cumsum(np.abs(np.nan_to_num(v, posinf=3.0, neginf=-3.0)) * 100 + 1).astype(np.int64)
@@ -181,16 +199,6 @@ def test_blob_version_marker_rejects_unversioned():
     v1-era blob (top/version bits all zero — any plain uint32 count) is
     rejected with a clear error instead of silently decoding as a constant
     series / regular grid on the degenerate path."""
-    import numpy as np
-    import pytest
-
-    from tslib_spark.codec.gorilla import (
-        decode_timestamps,
-        decode_values,
-        encode_timestamps,
-        encode_values,
-    )
-
     # round-trip still exact with the marker present
     vals = np.array([1.5, 1.5, 2.25, float("nan"), -0.0])
     np.testing.assert_array_equal(
@@ -265,8 +273,6 @@ def _multi_roundtrip(series, dtype, encode_multi, encode_one, decode_multi, as_b
 @settings(max_examples=150, deadline=None)
 @given(st.lists(VALUE_SERIES, min_size=0, max_size=12))
 def test_values_multi_decode_roundtrip_property(series):
-    from tslib_spark.codec.gorilla import decode_values_multi, encode_values_multi
-
     _multi_roundtrip(
         series, np.float64, encode_values_multi, encode_values, decode_values_multi,
         lambda a: a.view(np.uint64),
@@ -276,8 +282,6 @@ def test_values_multi_decode_roundtrip_property(series):
 @settings(max_examples=150, deadline=None)
 @given(st.lists(TS_SERIES, min_size=0, max_size=12))
 def test_timestamps_multi_decode_roundtrip_property(series):
-    from tslib_spark.codec.gorilla import decode_timestamps_multi, encode_timestamps_multi
-
     _multi_roundtrip(
         series, np.int64, encode_timestamps_multi, encode_timestamps,
         decode_timestamps_multi, lambda a: a,
@@ -287,8 +291,6 @@ def test_timestamps_multi_decode_roundtrip_property(series):
 def test_multi_decode_edge_blobs():
     """The empty values blob (b""), the bare-header empty timestamp blob and
     1- and 2-point timestamp blobs decode inside a batch."""
-    from tslib_spark.codec.gorilla import decode_timestamps_multi, decode_values_multi
-
     ts = [[], [7], [5, -3], [], [0, 60, 120, 200]]
     blobs = [encode_timestamps(np.asarray(t, dtype=np.int64)) for t in ts]
     assert len(blobs[0]) == 4  # bare header
@@ -307,8 +309,6 @@ def test_multi_decode_edge_blobs():
 
 
 def test_multi_decode_rejects_v1_blob_mid_batch():
-    from tslib_spark.codec.gorilla import decode_timestamps_multi, decode_values_multi
-
     vals = [encode_values(np.array([1.0, 2.0, 2.0])) for _ in range(3)]
     vals[1] = _strip_version(vals[1])
     with pytest.raises(ValueError, match="version"):
@@ -322,8 +322,6 @@ def test_multi_decode_rejects_v1_blob_mid_batch():
 def test_multi_decode_rejects_truncated_blob():
     """A blob shorter than its header and sidecar say must raise, not read
     its neighbour's bytes."""
-    from tslib_spark.codec.gorilla import decode_timestamps_multi, decode_values_multi
-
     good = encode_values(np.array([1.0, 3.0, -2.0]))
     with pytest.raises(ValueError, match="corrupt"):
         decode_values_multi([good[:-1], good])

@@ -1,16 +1,20 @@
 """Every public name in ``tslib_spark`` has a caller.
 
-A top-level ``def``, ``class`` or assigned name of a ``tslib_spark`` module
-whose name has no leading underscore (``__all__`` aside) is live when some
-Python file outside ``tests/`` names it in code (comments and docstrings do
-not count) anywhere other than the line that binds it: another module, or
-the same module reading it again. ``__init__.py`` files only re-export, and
-``oracle/`` modules are test references, so neither is checked and neither
-counts as a caller. A name with no such caller sits on ``ALLOWED`` with the
-reason it stays.
+A top-level ``def``, ``class`` or assigned name of a ``tslib_spark`` module,
+or a method of a top-level class, whose name has no leading underscore
+(``__all__`` aside) is live when some Python file outside ``tests/`` names
+it in code (comments and docstrings do not count) anywhere other than the
+line that binds it: another module, or the same module reading it again.
+``__init__.py`` files only re-export, and ``oracle/`` modules are test
+references, so neither is checked and neither counts as a caller. A name
+with no such caller sits on ``ALLOWED`` with the reason it stays; a method
+is reported and allowed as ``Class.method``.
 
 Every entry of a module-level ``__all__`` must also be bound in that
-module, so a deleted name cannot linger as a stale export.
+module, so a deleted name cannot linger as a stale export. Every
+module-level import of a ``tslib_spark`` module other than an
+``__init__.py`` must be named in that module's code again or listed in its
+``__all__``, so a deletion cannot leave an unused import behind.
 """
 
 from __future__ import annotations
@@ -46,12 +50,6 @@ ALLOWED = {
     "fit_state": "builds the initial model state that update_from_store folds into",
     "impute_from_state": "the imputed tier's read of the maintained model state",
     "update_from_store": "folds new tier partitions into the imputed tier's model",
-    # the one-blob codec API: calls of the batched decode, kept for users
-    # with a single series in hand
-    "encode_values": "one-blob codec API",
-    "decode_values": "one-blob codec API",
-    "encode_timestamps": "one-blob codec API",
-    "decode_timestamps": "one-blob codec API",
     "unnormalize_expr": "inverse of normalize_expr, the reference's unnormalize",
     "read_csv_panel": "reads the reference's CSV case-study panels for RSC",
 }
@@ -83,12 +81,23 @@ def dead_names(root: Path = ROOT) -> dict[str, str]:
             uses.setdefault(name, set()).add((p, line))
     dead = {}
     for mod in sorted(p for p in files if (root / "tslib_spark") in p.parents):
-        for name, line in _defined(ast.parse(mod.read_text())):
-            if name.startswith("_"):
+        tree = ast.parse(mod.read_text())
+        for name, line in _defined(tree) + _methods(tree):
+            short = name.rpartition(".")[2]
+            if short.startswith("_"):
                 continue
-            if not uses.get(name, set()) - {(mod, line)}:
+            if not uses.get(short, set()) - {(mod, line)}:
                 dead[name] = str(mod.relative_to(root))
     return dead
+
+
+def _methods(tree: ast.Module) -> list[tuple[str, int]]:
+    """``("Class.method", line)`` of every method of a top-level class."""
+    return [
+        (f"{cls.name}.{node.name}", node.lineno)
+        for cls in tree.body if isinstance(cls, ast.ClassDef)
+        for node in cls.body if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
 
 
 def _defined(tree: ast.Module) -> list[tuple[str, int]]:
@@ -113,22 +122,57 @@ def _bound(tree: ast.Module) -> set[str]:
     return names
 
 
+def _all_entries(tree: ast.Module) -> list[str]:
+    """The names a module lists in its top-level ``__all__``."""
+    return [
+        name
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+        for name in ast.literal_eval(node.value)
+    ]
+
+
 def unbound_all_entries(root: Path = ROOT) -> list[str]:
     """``path: name`` for every ``__all__`` entry its module does not bind."""
     stale = []
     for mod in sorted((root / "tslib_spark").rglob("*.py")):
         tree = ast.parse(mod.read_text())
-        for node in tree.body:
-            if isinstance(node, ast.Assign) and any(
-                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
-            ):
-                bound = _bound(tree)
-                stale += [
-                    f"{mod.relative_to(root)}: {name}"
-                    for name in ast.literal_eval(node.value)
-                    if name not in bound
-                ]
+        bound = _bound(tree)
+        stale += [
+            f"{mod.relative_to(root)}: {name}"
+            for name in _all_entries(tree)
+            if name not in bound
+        ]
     return stale
+
+
+def unused_imports(root: Path = ROOT) -> list[str]:
+    """``path: name`` for every module-level import of a ``tslib_spark``
+    module (``__init__.py`` aside) that its code never names again outside
+    the import statements and its ``__all__`` does not list."""
+    unused = []
+    for mod in sorted((root / "tslib_spark").rglob("*.py")):
+        if mod.name == "__init__.py":
+            continue
+        tree = ast.parse(mod.read_text())
+        imports = [
+            node for node in tree.body
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            and getattr(node, "module", None) != "__future__"
+        ]
+        import_lines = {
+            line for node in imports for line in range(node.lineno, node.end_lineno + 1)
+        }
+        named = {name for name, line in _code_names(mod) if line not in import_lines}
+        named.update(_all_entries(tree))
+        unused += [
+            f"{mod.relative_to(root)}: {bound}"
+            for node in imports
+            for alias in node.names
+            if (bound := (alias.asname or alias.name).split(".")[0]) not in named
+        ]
+    return unused
 
 
 def test_every_export_has_a_caller_or_a_reason():
@@ -147,25 +191,39 @@ def test_every_all_entry_is_bound():
     assert not unbound_all_entries(), unbound_all_entries()
 
 
+def test_every_import_is_used():
+    assert not unused_imports(), f"delete the unused imports: {unused_imports()}"
+
+
 def test_guard_sees_an_uncalled_export(tmp_path):
-    """The guard flags a name used only at its ``def`` or assignment and a
-    name only a docstring, an ``__init__``, an oracle or a test mentions;
-    a second use inside its own module, or a read in another, counts as a
-    caller; a stale ``__all__`` entry is reported."""
+    """The guard flags a name or method used only at its ``def`` or
+    assignment and a name only a docstring, an ``__init__``, an oracle or a
+    test mentions; a second use inside its own module, or a read in
+    another, counts as a caller; a stale ``__all__`` entry and an import
+    named nowhere else are reported."""
     pkg = tmp_path / "tslib_spark" / "ops"
     pkg.mkdir(parents=True)
     (pkg / "__init__.py").write_text(
         "from tslib_spark.ops.mod import dead, mentioned\n__all__ = ['dead', 'mentioned']\n"
     )
     (pkg / "mod.py").write_text(
-        "__all__ = ['live', 'dead', 'gone']\n"
+        "from __future__ import annotations\n\n"
+        "import os\n"
+        "import struct\n"
+        "from tslib_spark.ops.other import (\n    REEXPORTED,\n    unused_too,\n)\n\n"
+        "__all__ = ['live', 'dead', 'gone', 'REEXPORTED']\n"
         "UNREAD = 1\n"
         "SHARED = (\n    2\n)\n\n\n"
-        "def live():\n    return _helper()\n\n\n"
-        "def _helper():\n    return reused()\n\n\n"
+        "def live():\n    return _helper(os.sep)\n\n\n"
+        "def _helper(sep):\n    return reused()\n\n\n"
         "def reused():\n    pass\n\n\n"
         "def dead():\n    pass\n\n\n"
-        "def mentioned():\n    pass\n"
+        "def mentioned():\n    pass\n\n\n"
+        "class Store:\n"
+        "    def __init__(self):\n        self._load()\n\n"
+        "    def _load(self):\n        pass\n\n"
+        "    def used(self):\n        pass\n\n"
+        "    def unused(self):\n        pass\n"
     )
     oracle = tmp_path / "tslib_spark" / "oracle"
     oracle.mkdir()
@@ -174,15 +232,20 @@ def test_guard_sees_an_uncalled_export(tmp_path):
     )
     (tmp_path / "tests").mkdir()
     (tmp_path / "tests" / "test_mod.py").write_text(
-        "from tslib_spark.ops.mod import dead, mentioned\n"
+        "from tslib_spark.ops.mod import Store, dead, mentioned\n\nStore().unused()\n"
     )
     (tmp_path / "app.py").write_text(
         '"""mentioned is only mentioned here."""\n'
-        "from tslib_spark.ops.mod import SHARED, live\n\nlive(SHARED)\n"
+        "from tslib_spark.ops.mod import SHARED, Store, live\n\nlive(SHARED)\nStore().used()\n"
     )
     assert dead_names(tmp_path) == {
         "UNREAD": "tslib_spark/ops/mod.py",
         "dead": "tslib_spark/ops/mod.py",
         "mentioned": "tslib_spark/ops/mod.py",
+        "Store.unused": "tslib_spark/ops/mod.py",
     }
     assert unbound_all_entries(tmp_path) == ["tslib_spark/ops/mod.py: gone"]
+    assert unused_imports(tmp_path) == [
+        "tslib_spark/ops/mod.py: struct",
+        "tslib_spark/ops/mod.py: unused_too",
+    ]

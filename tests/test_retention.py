@@ -316,9 +316,14 @@ def test_catalog_backend_seam(spark, tmp_path):
     minute = rollup_pages(pages)
     root = str(tmp_path / "seam_store")
     store = TierStore(spark, root, KEYS, backend=ParquetManifestBackend(root))
-    assert not store.tier_exists("minute")
+    assert not store.checkpoint.done_partitions("minute")
     written = store.materialize_chain(minute)
-    assert written["minute"] and store.tier_exists("minute")
+    stored = {
+        r["part_key"]
+        for r in store.backend.read(spark, "minute").select("part_key").distinct().collect()
+    }
+    assert written["minute"]
+    assert stored == set(written["minute"]) == store.checkpoint.done_partitions("minute")
     assert store.verify_tier_parity("minute", "hour")
     # retention through the seam: drop_partition + terminal lineage
     first_pk = sorted(written["minute"])[0]

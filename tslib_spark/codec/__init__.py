@@ -1,16 +1,3 @@
-from tslib_spark.codec.gorilla import (
-    decode_timestamps,
-    decode_values,
-    encode_timestamps,
-    encode_values,
-)
 from tslib_spark.codec.chunks import decode_chunks, encode_chunks
 
-__all__ = [
-    "encode_values",
-    "decode_values",
-    "encode_timestamps",
-    "decode_timestamps",
-    "encode_chunks",
-    "decode_chunks",
-]
+__all__ = ["encode_chunks", "decode_chunks"]

@@ -56,9 +56,8 @@ them, read every header and its version bits at once, and turn sidecar
 bitmap ranks, code positions, delta-of-delta sums and the XOR chain into
 per-blob (segmented) ``cumsum`` / ``bitwise_xor.accumulate`` over the
 concatenated points, with 9-byte ``_gather64`` reads for the payloads.
-The cost is a few numpy calls per batch, not per blob; the one-blob
-``decode_values`` / ``decode_timestamps`` are calls of the same path.
-There is no per-point or per-blob Python loop anywhere in the decoder.
+The cost is a few numpy calls per batch, not per blob. There is no
+per-point or per-blob Python loop anywhere in the decoder.
 """
 
 from __future__ import annotations
@@ -185,22 +184,6 @@ def _hdr(n: int, sidecar: bytes) -> bytes:
     return h.tobytes()
 
 
-def encode_values(values: np.ndarray) -> bytes:
-    """Gorilla-XOR encode a float64 array (NaN round-trips bit-exactly)."""
-    arr = np.ascontiguousarray(values, dtype=np.float64)
-    if arr.size == 0:
-        return b""
-    return encode_values_multi(arr, np.zeros(1, dtype=np.int64))[0]
-
-
-def encode_timestamps(ts: np.ndarray) -> bytes:
-    """Delta-of-delta encode an int64 array (timestamps in any fixed unit)."""
-    arr = np.ascontiguousarray(ts, dtype=np.int64)
-    if arr.size == 0:
-        return _VER_BITS.tobytes()
-    return encode_timestamps_multi(arr, np.zeros(1, dtype=np.int64))[0]
-
-
 def _clz64(x: np.ndarray) -> np.ndarray:
     """Count leading zeros of uint64 (vectorized); clz(0) = 64."""
     out = np.full(x.shape, 64, dtype=np.int64)
@@ -226,8 +209,8 @@ def encode_values_multi(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
     """Gorilla-XOR encode many series in one vectorized pass.
 
     ``values`` is the concatenation of all series; ``starts`` marks each
-    series' first index (starts[0] == 0). Bit-identical per series to
-    encode_values — the XOR chain just resets at every start."""
+    series' first index (starts[0] == 0). Each series encodes exactly as
+    it would alone — the XOR chain resets at every start."""
     v = np.ascontiguousarray(values, dtype=np.float64).view(np.uint64)
     n = v.size
     if n == 0:
@@ -269,8 +252,8 @@ def encode_values_multi(values: np.ndarray, starts: np.ndarray) -> list[bytes]:
 
 
 def encode_timestamps_multi(ts: np.ndarray, starts: np.ndarray) -> list[bytes]:
-    """Delta-of-delta encode many series in one vectorized pass; per-series
-    bit-identical to encode_timestamps."""
+    """Delta-of-delta encode many series in one vectorized pass; each
+    series encodes exactly as it would alone."""
     t = np.ascontiguousarray(ts, dtype=np.int64)
     n = t.size
     if n == 0:
@@ -493,12 +476,4 @@ def decode_timestamps_multi(blobs) -> tuple[np.ndarray, np.ndarray]:
     deltas = b.cumsum(np.where(first, 0, raw))
     deltas[first] = raw[first]
     return b.cumsum(deltas), b.n
-
-
-def decode_values(buf: bytes) -> np.ndarray:
-    return decode_values_multi([buf])[0]
-
-
-def decode_timestamps(buf: bytes) -> np.ndarray:
-    return decode_timestamps_multi([buf])[0]
 

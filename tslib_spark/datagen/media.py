@@ -1,4 +1,4 @@
-"""Deterministic synthetic media payloads (PPM images + PCM WAVs).
+"""Deterministic synthetic media payloads (PPM and GIF images + PCM WAVs).
 
 The shared *input definition* for the media_decode contract query and
 its frozen oracle: both sides regenerate identical bytes from the seeded

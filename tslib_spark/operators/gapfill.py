@@ -33,6 +33,14 @@ def densify_grid(
 ) -> DataFrame:
     """Expand each series to its full [min_ts, max_ts] grid; absent buckets → NULL rows.
 
+    Precondition: every ``ts_col`` value lies on the ``step`` grid and each
+    (keys, ts) occurs once. The stored hour tier meets both by
+    construction (one row per truncated bucket). Nothing checks it, since
+    a check would cost a Spark job on every call: an off-grid row passes
+    through with gaps counted from it (the task fails when the series'
+    next row lies strictly between one and two steps after it), and a
+    duplicate (keys, ts) row passes through as a second row.
+
     Grid generation is distributed: one `sequence` per series key, exploded.
     A series spanning 3 weeks of minutes is ~30k rows — well within a single
     task; series counts scale out across tasks.
@@ -42,10 +50,9 @@ def densify_grid(
     one ``sequence`` explode per gap) — the old shape joined the exploded
     [min, max] grid back against the input, a second full exchange of the
     dense grid keyed on (keys, ts). Gap generation is per-row and
-    streaming (no per-series map/array is ever materialized), duplicate
-    observed (keys, ts) rows pass through exactly as the join produced
-    them, and the window partitioning is the same (keys) partitioning the
-    fill operators need next, so Spark reuses the exchange.
+    streaming (no per-series map/array is ever materialized), and the
+    window partitioning is the same (keys) partitioning the fill
+    operators need next, so Spark reuses the exchange.
     """
     value_cols = value_cols or [c for c in df.columns if c not in keys + [ts_col]]
     w = Window.partitionBy(*keys).orderBy(ts_col)

@@ -1,41 +1,31 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Media columns: image/audio payloads as opaque binary + typed metadata.
 
-The Spark-side plumbing is real and tested — schema contracts, Arrow batch
-iteration (``mapInPandas``), partition sizing, deterministic sampling —
-and ``decode_media`` now has a REAL decode branch for the two formats
-parseable without external media libraries:
+``make_media_table`` wraps a binary column into the media contract,
+``media_repartition`` sizes partitions by payload bytes, and
+``decode_media`` decodes in Arrow batches (``mapInPandas``) the three
+formats its one caller, the ``media_decode`` contract query, sends:
 
 - **PPM (P6)** images: pure-Python header parse + numpy pixel decode,
   features = 8×8 mean-pooled grayscale (FEATURE_DIM floats), width/height
   from the header;
-- **PNG** images: stdlib-``zlib`` IDAT inflate + scanline un-filtering
-  (None/Sub/Up vectorized, Average/Paeth per-row byte loops — their left
-  dependency has no prefix-sum closed form), 8-bit gray/RGB/palette/
-  alpha color types, same pooled-grayscale features;
 - **GIF (87a/89a)** images: pure-stdlib LZW decode (LSB-first
   variable-width codes, deferred-clear tolerant), interlace reorder,
-  single-frame compositing onto the logical screen; animated GIFs raise
-  (frame sequences belong to the video path);
+  single-frame compositing onto the logical screen; animated GIFs raise;
 - **WAV (RIFF/PCM)** audio: chunk walk for fmt/data (lengths validated —
   truncation is a clear ValueError, never a silently short buffer),
   8/16/32-bit PCM decode, features = FEATURE_DIM-bin mean-|amplitude|
   envelope of the mono mix, duration from sample count / rate.
 
-Other containers (JPEG/MP4/...) still raise ``NotImplementedError`` —
-honestly env-gated on the absent codec libraries — and the deterministic
-fake decoder (``fake=True``) remains for pipeline tests that don't care
-about pixel math.
+Any other payload raises ``NotImplementedError``.
 
-At 100 TB the decode stage is the CPU hot spot: mapInPandas keeps it
-Arrow-batched (no per-row Python dispatch; the numpy work is per-payload,
-which IS the decode work), ``media_repartition`` sizes partitions by
-*bytes* (not rows) so a shard of 4K videos doesn't OOM an executor that
-was sized for thumbnails.
+Decode is the CPU-heavy stage: mapInPandas keeps it Arrow-batched (no
+per-row Python dispatch; the numpy work is per-payload, which IS the
+decode work), and ``media_repartition`` sizes partitions by *bytes*
+(not rows) so per-task memory stays bounded when payload sizes vary.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from collections.abc import Iterator
 
@@ -70,14 +60,6 @@ def media_repartition(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame:
     total = df.select(F.sum(F.length("payload"))).collect()[0][0] or 0
     n = max(1, int(-(-total // target_bytes)))
     return df.repartition(n)
-
-
-def _fake_features(payload: bytes) -> np.ndarray:
-    """Deterministic stand-in for a real decoder: bytes → FEATURE_DIM floats."""
-    dig = hashlib.sha256(payload).digest()
-    seed = int.from_bytes(dig[:8], "little")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(FEATURE_DIM)
 
 
 def _ppm_tokens(b: bytes, count: int) -> tuple[list[int], int]:
@@ -123,8 +105,8 @@ def decode_ppm(payload: bytes) -> tuple[int, int, np.ndarray]:
 
 
 def _luma(rgb: np.ndarray) -> np.ndarray:
-    """ITU-R 601 luma of an (..., 3) RGB float image, shared by the PPM,
-    PNG and GIF decoders. Written as the explicit elementwise sum: the
+    """ITU-R 601 luma of an (..., 3) RGB float image, shared by the PPM
+    and GIF decoders. Written as the explicit elementwise sum: the
     3-term dot product of ``rgb @ weights`` rounds differently depending
     on the numpy/BLAS dispatch, this form rounds the same everywhere."""
     return rgb[..., 0] * 0.299 + rgb[..., 1] * 0.587 + rgb[..., 2] * 0.114
@@ -133,7 +115,7 @@ def _luma(rgb: np.ndarray) -> np.ndarray:
 def _pool_gray(gray: np.ndarray) -> np.ndarray:
     """Mean-pool an (h, w) grayscale image onto the _POOL × _POOL grid via
     bucketed bincount (handles dimensions not divisible by _POOL); shared
-    by the PPM and PNG decoders."""
+    by the PPM and GIF decoders."""
     h, w = gray.shape
     ri = np.minimum((np.arange(h) * _POOL) // h, _POOL - 1)
     ci = np.minimum((np.arange(w) * _POOL) // w, _POOL - 1)
@@ -141,328 +123,6 @@ def _pool_gray(gray: np.ndarray) -> np.ndarray:
     sums = np.bincount(cell, weights=gray.ravel(), minlength=_POOL * _POOL)
     cnts = np.bincount(cell, minlength=_POOL * _POOL)
     return sums / np.maximum(cnts, 1)
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color type → samples/px
-
-
-def _png_unfilter(data: np.ndarray, ftypes: np.ndarray, bpp: int) -> np.ndarray:
-    """Reverse PNG scanline filtering (RFC 2083 §6). ``data`` is the
-    (h, stride) filtered byte matrix, ``ftypes`` the per-row filter type.
-
-    None/Up are whole-row numpy ops; Sub is a per-lane cumsum (recon[i] =
-    Σ raw mod 256 along each byte lane, exactly the sequential recurrence
-    closed-form); Average and Paeth carry a genuine within-row left
-    dependency (the floor/predictor breaks any prefix-sum closed form), so
-    those rows fall back to a byte loop — per filtered row, not per pixel
-    of every image."""
-    h, stride = data.shape
-    recon = np.zeros((h, stride), dtype=np.int32)
-    zero_row = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        f = int(ftypes[y])
-        row = data[y]
-        up = recon[y - 1] if y else zero_row
-        if f == 0:
-            r = row.copy()
-        elif f == 1:  # Sub
-            r = np.cumsum(row.reshape(-1, bpp), axis=0).ravel() % 256
-        elif f == 2:  # Up
-            r = (row + up) % 256
-        elif f in (3, 4):
-            r = np.empty(stride, dtype=np.int32)
-            for x in range(stride):
-                a = int(r[x - bpp]) if x >= bpp else 0
-                b = int(up[x])
-                if f == 3:  # Average
-                    pred = (a + b) >> 1
-                else:  # Paeth
-                    c = int(up[x - bpp]) if x >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                r[x] = (int(row[x]) + pred) % 256
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        recon[y] = r
-    return recon
-
-
-def decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """PNG → (width, height, features) with the stdlib alone: chunk walk,
-    ``zlib`` IDAT inflate, filter reversal (_png_unfilter), then the same
-    8×8 mean-pooled grayscale features as decode_ppm.
-
-    Supported: 8-bit depth, color types 0/2/3/4/6, no interlace — the
-    overwhelmingly common web-PNG shape; anything else raises ValueError
-    (zlib ships with CPython, so "no codec libs in this container" never
-    covered PNG — the one gate that argument could not excuse)."""
-    import zlib
-
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG")
-    i, n = 8, len(payload)
-    ihdr = None
-    plte = b""
-    idat = bytearray()
-    while i + 8 <= n:
-        clen = int.from_bytes(payload[i : i + 4], "big")
-        ctype = payload[i + 4 : i + 8]
-        body = payload[i + 8 : i + 8 + clen]
-        if len(body) < clen:
-            raise ValueError(
-                f"truncated PNG: chunk {ctype!r} declares {clen} bytes but "
-                f"only {len(body)} remain"
-            )
-        if ctype == b"IHDR":
-            ihdr = body
-        elif ctype == b"PLTE":
-            plte = body
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        i += 12 + clen  # len + type + data + crc
-    if ihdr is None or len(ihdr) < 13:
-        raise ValueError("PNG missing/truncated IHDR")
-    w, h = int.from_bytes(ihdr[0:4], "big"), int.from_bytes(ihdr[4:8], "big")
-    depth, color, comp, filt, interlace = ihdr[8], ihdr[9], ihdr[10], ihdr[11], ihdr[12]
-    if comp != 0 or filt != 0:
-        raise ValueError(f"bad PNG compression/filter method {comp}/{filt}")
-    if interlace != 0:
-        raise ValueError("interlaced (Adam7) PNG not supported")
-    if depth != 8 or color not in _PNG_CHANNELS:
-        raise ValueError(f"unsupported PNG bit depth/color type {depth}/{color}")
-    if w <= 0 or h <= 0:
-        raise ValueError(f"bad PNG dimensions {w}x{h}")
-    ch = _PNG_CHANNELS[color]
-    stride = w * ch
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error as ex:
-        raise ValueError(f"corrupt PNG IDAT stream: {ex}") from ex
-    if len(raw) != h * (1 + stride):
-        raise ValueError(
-            f"PNG pixel data is {len(raw)} bytes, expected {h * (1 + stride)}"
-        )
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
-    recon = _png_unfilter(arr[:, 1:].astype(np.int32), arr[:, 0], ch)
-    px = recon.astype(np.uint8).reshape(h, w, ch)
-    if color == 3:  # palette → RGB lookup
-        if len(plte) < 3 or len(plte) % 3:
-            raise ValueError("paletted PNG missing/odd PLTE chunk")
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-        if int(px.max()) >= pal.shape[0]:
-            raise ValueError("PNG palette index out of range")
-        px = pal[px[:, :, 0]]
-        ch = 3
-    scaled = px.astype(np.float64) / 255.0
-    if ch >= 3:
-        gray = _luma(scaled[:, :, :3])
-    else:
-        gray = scaled[:, :, 0]  # grayscale (alpha, if any, ignored)
-    return w, h, _pool_gray(gray)
-
-
-def _mp4_boxes(buf: bytes, start: int, end: int):
-    """Iterate (type, body_start, body_end) over ISO-BMFF boxes in range."""
-    i = start
-    while i + 8 <= end:
-        size = int.from_bytes(buf[i : i + 4], "big")
-        btype = buf[i + 4 : i + 8]
-        hdr = 8
-        if size == 1:
-            if i + 16 > end:
-                raise ValueError("truncated MP4: largesize header cut off")
-            size = int.from_bytes(buf[i + 8 : i + 16], "big")
-            hdr = 16
-        elif size == 0:
-            size = end - i  # box extends to end of enclosing scope
-        if size < hdr or i + size > end:
-            raise ValueError(
-                f"truncated MP4: box {btype!r} declares {size} bytes at {i}"
-            )
-        yield btype, i + hdr, i + size
-        i += size
-
-
-def parse_mp4_meta(payload: bytes) -> dict:
-    """ISO-BMFF (MP4/MOV) metadata WITHOUT frame decode: a pure box walk
-    extracting container duration (mvhd), video track dimensions (tkhd),
-    and sample-entry codec fourccs (stsd). Frame decode needs real codec
-    libraries and stays env-gated; the metadata path is what a corpus
-    pipeline needs to plan per-frame work from the duration and to
-    filter/partition by codec and resolution."""
-    if payload[4:8] != b"ftyp":
-        raise ValueError("not an ISO-BMFF (MP4) file")
-    duration_ms = None
-    width = height = None
-    codecs: list[str] = []
-
-    def walk_trak(s: int, e: int) -> None:
-        nonlocal width, height
-        for t, bs, be in _mp4_boxes(payload, s, e):
-            if t == b"tkhd":
-                ver = payload[bs]
-                off = bs + (88 if ver == 1 else 76)
-                if off + 8 <= be:
-                    w16 = int.from_bytes(payload[off : off + 4], "big") / 65536
-                    h16 = int.from_bytes(payload[off + 4 : off + 8], "big") / 65536
-                    if w16 and h16 and width is None:
-                        width, height = int(round(w16)), int(round(h16))
-            elif t == b"mdia":
-                for t2, cs, ce in _mp4_boxes(payload, bs, be):
-                    if t2 == b"minf":
-                        for t3, ds, de in _mp4_boxes(payload, cs, ce):
-                            if t3 == b"stbl":
-                                for t4, es, ee in _mp4_boxes(payload, ds, de):
-                                    if t4 == b"stsd" and es + 16 <= ee:
-                                        codecs.append(
-                                            payload[es + 12 : es + 16].decode(
-                                                "latin1"
-                                            )
-                                        )
-
-    for t, bs, be in _mp4_boxes(payload, 0, len(payload)):
-        if t != b"moov":
-            continue
-        for t1, s, e in _mp4_boxes(payload, bs, be):
-            if t1 == b"mvhd":
-                ver = payload[s]
-                if ver == 1:
-                    scale = int.from_bytes(payload[s + 20 : s + 24], "big")
-                    dur = int.from_bytes(payload[s + 24 : s + 32], "big")
-                else:
-                    scale = int.from_bytes(payload[s + 12 : s + 16], "big")
-                    dur = int.from_bytes(payload[s + 16 : s + 20], "big")
-                if scale:
-                    duration_ms = int(round(dur / scale * 1000))
-            elif t1 == b"trak":
-                walk_trak(s, e)
-    if duration_ms is None:
-        raise ValueError("MP4 has no moov/mvhd metadata")
-    return {
-        "duration_ms": duration_ms,
-        "width": width,
-        "height": height,
-        "codecs": codecs,
-    }
-
-
-_EBML_MAGIC = b"\x1aE\xdf\xa3"  # EBML header element ID 0x1A45DFA3
-
-
-def _ebml_vint(buf: bytes, i: int, end: int, keep_marker: bool) -> tuple[int, int, bool]:
-    """Decode one EBML variable-length integer at ``buf[i]``.
-
-    Returns ``(value, next_offset, unknown)``. Element IDs keep their
-    length-marker bit (they are matched as stored); sizes clear it. A size
-    whose value bits are all ones means "unknown size" (live/streamed
-    master elements) — reported via the third slot.
-    """
-    if i >= end:
-        raise ValueError("truncated EBML: vint starts past end of scope")
-    b0 = buf[i]
-    if b0 == 0:
-        raise ValueError(f"invalid EBML vint lead byte 0x00 at {i}")
-    length = 8 - b0.bit_length() + 1
-    if i + length > end:
-        raise ValueError(f"truncated EBML: {length}-byte vint cut off at {i}")
-    raw = int.from_bytes(buf[i : i + length], "big")
-    if keep_marker:
-        return raw, i + length, False
-    marker = 1 << (7 * length)
-    value = raw - marker
-    return value, i + length, value == marker - 1
-
-
-def _ebml_elements(buf: bytes, start: int, end: int):
-    """Yield (element_id, body_start, body_end) for EBML siblings in
-    [start, end). An unknown-size element extends to the end of the
-    enclosing scope and is necessarily the last sibling (the format gives
-    no way to locate the next one)."""
-    i = start
-    while i < end:
-        eid, j, _ = _ebml_vint(buf, i, end, keep_marker=True)
-        size, k, unknown = _ebml_vint(buf, j, end, keep_marker=False)
-        if unknown:
-            yield eid, k, end
-            return
-        if k + size > end:
-            raise ValueError(
-                f"truncated EBML: element 0x{eid:X} declares {size} bytes at {i}"
-            )
-        yield eid, k, k + size
-        i = k + size
-
-
-def parse_webm_meta(payload: bytes) -> dict:
-    """Matroska/WebM metadata WITHOUT frame decode: a pure EBML walk
-    extracting DocType, duration (Info/Duration × TimestampScale), first
-    video track dimensions (TrackEntry/Video PixelWidth/Height), and every
-    track's CodecID — the WebM twin of ``parse_mp4_meta`` (same role:
-    feeds per-frame planning and codec/resolution filtering; H.264/VP9
-    frame decode needs codec libraries absent from this container and
-    stays env-gated). Element IDs per the public Matroska/EBML spec
-    (RFC 8794 + matroska.org); no reference-repo counterpart."""
-    if payload[:4] != _EBML_MAGIC:
-        raise ValueError("not an EBML (Matroska/WebM) file")
-    doctype = "matroska"  # the spec's default when DocType is absent
-    duration_ms = None
-    width = height = None
-    codecs: list[str] = []
-    timescale_ns = 1_000_000  # TimestampScale default: 1 ms in nanoseconds
-    duration_ticks = None
-
-    def walk_track_entry(s: int, e: int) -> None:
-        nonlocal width, height
-        for t, bs, be in _ebml_elements(payload, s, e):
-            if t == 0x86:  # CodecID (ASCII, e.g. V_VP9, A_OPUS)
-                codecs.append(payload[bs:be].rstrip(b"\x00").decode("latin1"))
-            elif t == 0xE0:  # Video settings
-                for t2, cs, ce in _ebml_elements(payload, bs, be):
-                    if t2 == 0xB0 and width is None:  # PixelWidth
-                        width = int.from_bytes(payload[cs:ce], "big")
-                    elif t2 == 0xBA and height is None:  # PixelHeight
-                        height = int.from_bytes(payload[cs:ce], "big")
-
-    for eid, bs, be in _ebml_elements(payload, 0, len(payload)):
-        if eid == 0x1A45DFA3:  # EBML header
-            for t, cs, ce in _ebml_elements(payload, bs, be):
-                if t == 0x4282:  # DocType
-                    doctype = payload[cs:ce].rstrip(b"\x00").decode("latin1")
-        elif eid == 0x18538067:  # Segment
-            for t, cs, ce in _ebml_elements(payload, bs, be):
-                if t == 0x1549A966:  # Info
-                    for t2, ds, de in _ebml_elements(payload, cs, ce):
-                        if t2 == 0x2AD7B1:  # TimestampScale (ns per tick)
-                            timescale_ns = int.from_bytes(payload[ds:de], "big")
-                        elif t2 == 0x4489:  # Duration (float ticks)
-                            n = de - ds
-                            if n == 4:
-                                duration_ticks = struct.unpack(">f", payload[ds:de])[0]
-                            elif n == 8:
-                                duration_ticks = struct.unpack(">d", payload[ds:de])[0]
-                            else:
-                                raise ValueError(
-                                    f"invalid EBML Duration width {n} (float is 4 or 8)"
-                                )
-                elif t == 0x1654AE6B:  # Tracks
-                    for t2, ds, de in _ebml_elements(payload, cs, ce):
-                        if t2 == 0xAE:  # TrackEntry
-                            walk_track_entry(ds, de)
-    if duration_ticks is not None:
-        duration_ms = int(round(duration_ticks * timescale_ns / 1e6))
-    if duration_ms is None:
-        raise ValueError("Matroska/WebM has no Segment Info/Duration metadata")
-    return {
-        "doctype": doctype,
-        "duration_ms": duration_ms,
-        "width": width,
-        "height": height,
-        "codecs": codecs,
-    }
 
 
 def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:
@@ -595,9 +255,8 @@ def decode_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
     LZW decode (LSB-first variable-width codes), interlace reorder, and
     single-frame compositing onto the logical screen (background fill +
     frame placement at its left/top offset). Features are the same
-    pooled-grayscale grid the PPM/PNG paths emit. Animated GIFs (a second
-    image descriptor) raise — frame-sequence semantics belong to the
-    video path, not a silent first-frame-only decode."""
+    pooled-grayscale grid the PPM path emits. Animated GIFs (a second
+    image descriptor) raise rather than decode the first frame alone."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     if len(payload) < 13:
@@ -626,8 +285,7 @@ def decode_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
         elif b == 0x2C:  # image descriptor
             if frames >= 1:
                 raise NotImplementedError(
-                    "animated GIF (multiple frames): frame-sequence decode "
-                    "belongs to the video path"
+                    "animated GIF (multiple frames): only single-frame GIFs decode"
                 )
             if i + 10 > n:
                 raise ValueError("truncated GIF image descriptor")
@@ -679,61 +337,29 @@ def decode_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
 
 
 def _decode_real(payload: bytes) -> dict:
-    """Dispatch on magic bytes. PPM and WAV decode for real; anything else
-    needs codec libraries absent from this container → NotImplementedError
-    (the honest env gate, now behind two real branches instead of zero)."""
+    """Dispatch on magic bytes to the PPM, GIF and WAV decoders; any other
+    payload raises NotImplementedError naming the three formats."""
     if payload[:2] == b"P6":
         w, h, feats = decode_ppm(payload)
         return {"mime": "image/x-portable-pixmap", "width": w, "height": h,
-                "duration_ms": None, "features": feats}
-    if payload[:8] == _PNG_SIG:
-        w, h, feats = decode_png(payload)
-        return {"mime": "image/png", "width": w, "height": h,
                 "duration_ms": None, "features": feats}
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         w, h, feats = decode_gif(payload)
         return {"mime": "image/gif", "width": w, "height": h,
                 "duration_ms": None, "features": feats}
-    if payload[:3] == b"\xff\xd8\xff":
-        from tslib_spark.operators.jpeg import decode_jpeg
-
-        w, h, luma = decode_jpeg(payload)
-        return {"mime": "image/jpeg", "width": w, "height": h,
-                "duration_ms": None, "features": _pool_gray(luma)}
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         dur, feats = decode_wav(payload)
         return {"mime": "audio/wav", "width": None, "height": None,
                 "duration_ms": dur, "features": feats}
-    if payload[4:8] == b"ftyp":
-        meta = parse_mp4_meta(payload)
-        # metadata-only: duration feeds per-frame planning; FRAME decode
-        # needs real codec libs and stays env-gated (features = None)
-        return {"mime": "video/mp4", "width": meta["width"],
-                "height": meta["height"], "duration_ms": meta["duration_ms"],
-                "features": None}
-    if payload[:4] == _EBML_MAGIC:
-        meta = parse_webm_meta(payload)
-        mime = "video/webm" if meta["doctype"] == "webm" else "video/x-matroska"
-        return {"mime": mime, "width": meta["width"],
-                "height": meta["height"], "duration_ms": meta["duration_ms"],
-                "features": None}
     raise NotImplementedError(
-        "only PPM (P6), PNG, GIF, baseline JPEG, WAV (PCM), and MP4/WebM "
-        "metadata parse without external media libs; this container ships "
-        "none (video FRAME decode stays gated) — pass fake=True for the "
-        "deterministic stub"
+        "decode_media reads only PPM (P6), GIF (87a/89a) and WAV (PCM) payloads"
     )
 
 
-def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """payload → (detected mime, dimensions/duration, feature vector) via
-    Arrow-batched mapInPandas.
-
-    ``fake=False`` decodes PPM/WAV payloads for real and raises
-    NotImplementedError for formats whose codecs aren't in this container;
-    ``fake=True`` derives deterministic features from the bytes alone
-    (sha256-seeded) so pipelines exercise identical plans without pixel
-    math. Both paths share the schema, partitioning, and batch shape.
+    Arrow-batched mapInPandas. PPM, GIF and WAV payloads decode; any other
+    payload fails the task with NotImplementedError.
     """
     schema = (
         "media_id long, kind string, mime string, n_bytes long, "
@@ -742,14 +368,7 @@ def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                if fake:
-                    rows.append({"mime": None, "width": None, "height": None,
-                                 "duration_ms": None, "features": _fake_features(b)})
-                else:
-                    rows.append(_decode_real(b))
+            rows = [_decode_real(bytes(p)) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"].to_numpy(),
@@ -759,11 +378,7 @@ def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
                     "width": pd.array([r["width"] for r in rows], dtype="Int32"),
                     "height": pd.array([r["height"] for r in rows], dtype="Int32"),
                     "duration_ms": pd.array([r["duration_ms"] for r in rows], dtype="Int32"),
-                    "features": [
-                        None if r["features"] is None
-                        else np.asarray(r["features"]).tolist()
-                        for r in rows
-                    ],
+                    "features": [np.asarray(r["features"]).tolist() for r in rows],
                 }
             )
 

@@ -90,9 +90,6 @@ class TierStore:
     def tier_path(self, tier: str) -> str:
         return self.backend.table_path(tier)
 
-    def tier_exists(self, tier: str) -> bool:
-        return self.backend.exists(self.spark, tier)
-
     def read_tier(self, tier: str, start_ts=None, end_ts=None) -> DataFrame:
         """Read a tier, optionally restricted to [start_ts, end_ts).
 

@@ -4,7 +4,6 @@ TierStore's behavior (idempotent partition materialization, checksums,
 retention gating) is storage-agnostic; everything that actually touches
 bytes goes through a backend with four operations:
 
-    exists(spark, tier)              — does the tier table exist yet
     read(spark, tier)                — DataFrame over the stored tier
                                        (the parquet backend reads with
                                        the tier's recorded schema)
@@ -60,9 +59,6 @@ class ParquetManifestBackend:
 
     def table_path(self, tier: str) -> str:
         return str(self.root / "tiers" / tier)
-
-    def exists(self, spark: SparkSession, tier: str) -> bool:
-        return (self.root / "tiers" / tier).exists()
 
     def read(self, spark: SparkSession, tier: str) -> DataFrame:
         schema = self._schemas.get(tier)
@@ -144,9 +140,6 @@ class IcebergBackend:
 
     def table_path(self, tier: str) -> str:
         return self._table(tier)
-
-    def exists(self, spark: SparkSession, tier: str) -> bool:
-        return spark.catalog.tableExists(self._table(tier))
 
     def read(self, spark: SparkSession, tier: str) -> DataFrame:
         return spark.table(self._table(tier))
